@@ -103,7 +103,8 @@ object Plans {
         "J3/J7/J9 cleaning as window flags — the 3-exchange claim",
         () => cleanedRaw),
       ("tp_corrected (raw DAG)",
-        "cleaning + decimal-shift correction — shares the one id-shuffle",
+        "cleaning + decimal-shift correction — one id-shuffle into the " +
+          "sorted per-id anchor pass (MapGroups), no join back",
         () => correctedRaw),
       ("tp_full_panel (raw DAG, end-to-end)",
         "clean → shift → bounce-back anti-join → daily panel (entry()). " +

@@ -1,24 +1,27 @@
 package graft.clean
 
-import graft.operators.Dedup
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StructType}
 
 /** Decimal-shift price corrector (W7) — Spark restatement of the
   * reference's `decimal_shift_corrector`
   * (`stage0/create_daily_enhanced_trace.py:764-963`, params
   * `stage0/_trace_settings.py:53-66`).
   *
-  * Entirely pure column algebra — no UDF: anchors are rolling medians over
-  * per-(id,dt,price)-deduplicated rows (the reference's duplicate-print
-  * guard) joined back m:1; the factor search is a foldLeft over the four
-  * candidate factors preserving the reference's first-strictly-better tie
-  * rule; acceptance gates are one boolean expression.
+  * Anchors come from ONE sorted pass per id: the rows are grouped on the
+  * id column and sorted by (dt, ord), and [[anchorsOf]] takes the rolling
+  * ±window medians over the id's deduplicated print sequence with plain
+  * arrays (the first print of each (dt, price) — the reference's
+  * duplicate-print guard), then every input row leaves with its
+  * representative's anchor. The factor search and the acceptance gates
+  * stay column algebra: per-factor relative deviations, a first-match
+  * CASE preserving the reference's first-strictly-better tie rule, and
+  * one boolean gate expression.
   *
-  * Scale: one shuffle on `id` for the anchor windows, one broadcast-
-  * friendly equi-join back on (id, dt, price). Everything stays inside
-  * whole-stage codegen.
+  * Scale: one shuffle on `id` for the grouped pass (none over a source
+  * already partitioned by `id`), no join. The pass buffers one id's rows
+  * at a time — the same bound as [[BounceBack]]'s per-id scan.
   */
 object DecimalShift {
 
@@ -36,14 +39,105 @@ object DecimalShift {
 
   private val eps = 1e-12
 
-  /** median of a pre-sorted double array expression (pandas interpolating
-    * median: middle element or mean of the two middles).
+  /** Dedup key of a price within one (id, dt): Spark's key semantics for
+    * doubles — -0.0 equals 0.0 and all NaNs are one value (boxed
+    * `java.lang.Double.equals` already folds NaNs). A null price is its own
+    * key. */
+  private def priceKey(p: Any): AnyRef = p match {
+    case null => None
+    case d: Double => java.lang.Double.valueOf(if (d == 0.0) 0.0 else d)
+  }
+
+  /** Anchor of every print of one id, given in (dt, ord) order.
+    *
+    * Positions are the first print of each (dt, price); a null price takes
+    * one position per dt but carries no value. A position's anchor is the
+    * median of the values within ±w positions when there are at least w+1
+    * of them, else the median of itself and the w positions after, else of
+    * the w positions before and itself (pandas' interpolating median:
+    * middle element or mean of the two middles). Every print takes its
+    * position's anchor; a print with a null dt or price gets none.
     */
-  def medianOfSorted(arr: String): String =
-    s"""case when size($arr) = 0 then null
-        when size($arr) % 2 = 1 then element_at($arr, cast(size($arr) div 2 + 1 as int))
-        else (element_at($arr, cast(size($arr) div 2 as int))
-              + element_at($arr, cast(size($arr) div 2 + 1 as int))) / 2 end"""
+  private[clean] def anchorsOf(dts: Array[Any], prices: Array[Any],
+      w: Int): Array[Any] = {
+    val n = prices.length
+    val posOf = new Array[Int](n)
+    val value = new Array[Double](n)
+    val hasValue = new Array[Boolean](n)
+    val seen = new java.util.HashMap[AnyRef, Integer]()
+    var m = 0
+    var i = 0
+    while (i < n) {
+      if (i == 0 || dts(i) != dts(i - 1)) seen.clear()
+      val key = priceKey(prices(i))
+      val known = seen.get(key)
+      if (known == null) {
+        seen.put(key, m)
+        prices(i) match {
+          case d: Double => value(m) = d; hasValue(m) = true
+          case _ =>
+        }
+        posOf(i) = m
+        m += 1
+      } else posOf(i) = known
+      i += 1
+    }
+
+    val buf = new Array[Double](2 * w + 1)
+    // median of the values at positions lo..hi, or null below `min` values;
+    // primitive sort order (-0.0 before 0.0, NaN last) as `sort_array`
+    def median(lo: Int, hi: Int, min: Int): Any = {
+      var k = 0
+      var j = math.max(lo, 0)
+      while (j <= math.min(hi, m - 1)) {
+        if (hasValue(j)) { buf(k) = value(j); k += 1 }
+        j += 1
+      }
+      if (k < min) null
+      else {
+        java.util.Arrays.sort(buf, 0, k)
+        if (k % 2 == 1) buf(k / 2) else (buf(k / 2 - 1) + buf(k / 2)) / 2
+      }
+    }
+    val anchor = new Array[Any](m)
+    var j = 0
+    while (j < m) {
+      if (hasValue(j)) {
+        val c = median(j - w, j + w, w + 1)
+        anchor(j) =
+          if (c != null) c
+          else {
+            val f = median(j, j + w, 1)
+            if (f != null) f else median(j - w, j, 1)
+          }
+      }
+      j += 1
+    }
+    Array.tabulate(n)(i =>
+      if (dts(i) == null || prices(i) == null) null else anchor(posOf(i)))
+  }
+
+  /** `df` plus `__p` (the price as double) and `anchor_price`, from one
+    * grouped pass per id sorted by (dt, ord). Rows with a null id get no
+    * anchor. */
+  private def anchored(df: DataFrame, idCol: String, dtCol: String,
+      ordCol: String, priceCol: String, w: Int): DataFrame = {
+    val in = df.withColumn("__p", col(priceCol).cast("double"))
+    val schema = in.schema
+    val dtIdx = schema.fieldIndex(dtCol)
+    val pIdx = schema.fieldIndex("__p")
+    in.groupBy(col(idCol))
+      .as[Row, Row](Encoders.row(StructType(Seq(schema(idCol)))),
+        Encoders.row(schema))
+      .flatMapSortedGroups(col(dtCol), col(ordCol)) { (key, it) =>
+        val rows = it.toArray
+        val anchors =
+          if (key.isNullAt(0)) new Array[Any](rows.length)
+          else anchorsOf(rows.map(_.get(dtIdx)), rows.map(_.get(pIdx)), w)
+        rows.indices.iterator.map(i => Row.fromSeq(rows(i).toSeq :+ anchors(i)))
+      }(Encoders.row(schema.add("anchor_price", DoubleType)))
+      .toDF()
+  }
 
   /** Adds `dec_shift_flag` (int), `dec_shift_factor`, `suggested_price`,
     * `anchor_price` to `df`. `ordCol` must be a total order within
@@ -55,37 +149,12 @@ object DecimalShift {
       dtCol: String,
       ordCol: String,
       priceCol: String,
-      p: Params = Params()): DataFrame = {
-    val w = p.window
-    val price = col(priceCol).cast("double")
+      p: Params = Params()): DataFrame =
+    suggest(anchored(df, idCol, dtCol, ordCol, priceCol, p.window), p)
 
-    // anchors on (id, dt, price)-deduped rows, positionally windowed in
-    // (dt, ord) order — the reference's drop_duplicates(keep='first')
-    val work = Dedup.keepFirst(
-        df.select(col(idCol), col(dtCol), col(ordCol), price.as("__p")),
-        keys = Seq(idCol, dtCol, "__p"),
-        order = Seq(col(ordCol)))
-    val frame = s"partition by $idCol order by $dtCol, $ordCol"
-    def medOver(lo: String, hi: String): String =
-      medianOfSorted(
-        s"sort_array(collect_list(__p) over ($frame rows between $lo and $hi))")
-    val anchored = work
-      .withColumn("__med_c",
-        expr(s"""case when size(collect_list(__p) over
-            ($frame rows between $w preceding and $w following)) >= ${w + 1}
-          then ${medOver(s"$w preceding", s"$w following")} end"""))
-      .withColumn("__med_f", expr(medOver("current row", s"$w following")))
-      .withColumn("__med_b", expr(medOver(s"$w preceding", "current row")))
-      // back-median has min_periods=1 → never null; the reference's global-
-      // median and per-(id,dt) fallbacks are therefore unreachable
-      .withColumn("anchor_price",
-        coalesce(col("__med_c"), col("__med_f"), col("__med_b")))
-      .select(col(idCol), col(dtCol), col("__p"), col("anchor_price"))
-
-    val joined = df
-      .withColumn("__p", price)
-      .join(anchored, Seq(idCol, dtCol, "__p"), "left")
-
+  /** The factor search and acceptance gates over a frame carrying `__p`
+    * (the price as double) and `anchor_price`; drops `__p`. */
+  private[clean] def suggest(joined: DataFrame, p: Params): DataFrame = {
     val anchor = col("anchor_price")
 
     // Per-factor relative deviations as REAL COLUMNS, then least() + a

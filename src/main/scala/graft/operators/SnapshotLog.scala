@@ -507,13 +507,21 @@ object SnapshotLog {
         t
       })
 
-  /** run `f` over `xs` on [[metaPool]], preserving order. */
+  /** run `f` over `xs` on [[metaPool]], preserving order. A failing task
+    * surfaces as its own exception (type and message), not wrapped in the
+    * pool's `ExecutionException`. */
   private def onMetaPool[A, B](xs: Seq[A])(f: A => B): Seq[B] = {
     val futs = xs.map(x =>
       metaPool.submit(new java.util.concurrent.Callable[B] {
         override def call(): B = f(x)
       }))
-    futs.map(_.get())
+    futs.map { fut =>
+      try fut.get()
+      catch {
+        case e: java.util.concurrent.ExecutionException
+            if e.getCause != null => throw e.getCause
+      }
+    }
   }
 
   /** [[splitOffsetsOf]] for a whole commit's files — CONCURRENT on the

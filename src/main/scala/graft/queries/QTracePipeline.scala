@@ -12,10 +12,14 @@ import org.apache.spark.sql.functions._
   * daily panel aggregation (A1–A3).
   *
   * The chunk loop of the reference disappears entirely: the whole chain is
-  * ONE lazy DataFrame DAG partitioned by id — filters and anti-joins
-  * before the window-heavy correction steps (cheapest first), a single
-  * id-shuffle shared by the decimal-shift windows and the bounce-back
-  * scan, and a final (id, dt) hash aggregation.
+  * ONE lazy DataFrame DAG. Its shuffles, in order:
+  *  - the cleaning window flags, 3 exchanges on (id, dt, …) keys;
+  *  - ONE id-shuffle into the decimal-shift's sorted per-id anchor pass,
+  *    which emits every row with its anchor (no join back);
+  *  - the bounce-back scan's id-repartition over the corrected frame;
+  *  - the final (id, dt) hash aggregation.
+  * Over a source bucketed by id the clean + shift chain needs none of its
+  * 4 exchanges (`BucketedTradesSpec`).
   */
 object QTracePipeline extends Registry {
 

@@ -22,6 +22,13 @@ class PlanBudgetSpec extends SparkSpec {
     assert(c.shuffles <= 3, s"cleanedDag shuffles: ${c.shuffles}")
   }
 
+  test("decimal shift adds one grouped pass over the cleaning chain, no join") {
+    val c = Plans.planCounts(graft.queries.QTracePipeline.correctedDag(
+      graft.queries.QTracePipeline.cleanedDag(spark, sf)))
+    assert(c.shuffles <= 4 && c.broadcasts == 0,
+      s"correctedDag shuffles: ${c.shuffles}, broadcasts: ${c.broadcasts}")
+  }
+
   test("daily panel over the corrected memo is one aggregation shuffle") {
     val c = Plans.planCounts(q("tp_daily_panel"))
     assert(c.shuffles <= 1, s"tp_daily_panel shuffles: ${c.shuffles}")

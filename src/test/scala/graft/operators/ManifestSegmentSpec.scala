@@ -170,4 +170,18 @@ class ManifestSegmentSpec extends SparkSpec {
     assert(SnapshotLog.entries(dir, 1).size == 5,
       "the sweep must never touch referenced segments")
   }
+
+  test("a truncated segment fails the read with its own exception type") {
+    // segments parse on the metadata pool: its ExecutionException wrapper
+    // must not reach the caller
+    val dir = fresh("truncated")
+    SnapshotLog.commitEntries(dir, fakeEntries(dir, 10))
+    val (seg, n) = SnapshotLog.segRefs(dir, SnapshotLog.latest(dir)).head
+    val lines = Files.readAllLines(Paths.get(seg))
+    Files.write(Paths.get(seg), lines.subList(0, lines.size - 1))
+    SnapshotLog.resetEntryCache()
+    val e = intercept[IllegalArgumentException](
+      SnapshotLog.entries(dir, SnapshotLog.latest(dir)))
+    assert(e.getMessage.contains(s"expected $n lines"), e.getMessage)
+  }
 }
