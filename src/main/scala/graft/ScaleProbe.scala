@@ -144,7 +144,7 @@ object ScaleProbe {
   // shallow-clone one shared base table (QFilters.lakeBaseDir) that
   // persists on disk per sf dir. A probe's x1 pass may find it warm
   // while the xK pass (fresh replicated dir) builds it cold — clear
-  // /tmp/graft_lake_base_v1_* first when re-probing those rows, or the
+  // /tmp/graft_lake_base_v2_* first when re-probing those rows, or the
   // slopes overstate fixture growth.
 
   /** comma-separated subset for targeted runs (e.g. an x100 headline

@@ -23,7 +23,7 @@ object ScanBench {
     val copies = args.lift(2).map(_.toInt).getOrElse(1)
     val spark = Sessions.local()
     val dir =
-      s"${graft.Scratch.dirFor(s"s65_scan_v2x$copies", sfDir)}/t"
+      s"${graft.Scratch.dirFor(s"s65_scan_v3x$copies", sfDir)}/t"
     if (graft.operators.SnapshotLog.latest(dir) == 0) {
       graft.Scratch.clear(dir)
       val one = graft.Tables.lineitem(spark, sfDir).select(

@@ -1,7 +1,7 @@
 package graft.operators
 
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{FileAlreadyExistsException, Files, Paths}
+import java.nio.file.{FileAlreadyExistsException, Files, Path, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -51,56 +51,55 @@ object SnapshotLog {
     if (ids.isEmpty) 0 else ids.max
   }
 
-  /** Try to publish `files` as EXACTLY snapshot `v` — put-if-absent.
-    * Stages the manifest to a committer-unique temp file, then
-    * publishes via `Files.createLink` (atomic on POSIX; throws
-    * [[FileAlreadyExistsException]] if `v` is already committed).
-    * Returns false on collision so the caller can re-read `latest()`
-    * and retry — the compare-and-swap a table-format commit is made of.
-    *
-    * TWO-LEVEL manifests (the Iceberg manifest-list design): entry
-    * lines live in immutable SEGMENT files (`_manifests/seg-*.seg`,
-    * each written once by the commit that minted it), and the
-    * per-version manifest is a tiny LIST — header lines plus `@seg`
-    * references. A commit whose entry set fully contains a parent
-    * segment REFERENCES it verbatim (never re-serialized); only the
-    * delta is written as one new segment. So an append to a
-    * millions-of-files table writes O(delta) manifest bytes, not
-    * O(table) — the round-11 kernel's first 100-TB breaking point
-    * closed. Commits that drop entries from a parent segment (COW
-    * rewrites, vector folds) rewrite exactly the affected segments'
-    * survivors into the delta segment, the Iceberg rewrite-affected-
-    * manifests behavior. Legacy single-file manifests (inline entry
-    * lines) keep reading unchanged and self-migrate: the first commit
-    * on top of one writes its full entry list as segment zero.
+  /** The CAS tail every commit door shares: stamp the commit-level
+    * headers, stage the manifest list to a committer-unique temp file,
+    * then publish it as EXACTLY snapshot `v` via `Files.createLink`
+    * (atomic on POSIX; throws [[FileAlreadyExistsException]] if `v` is
+    * already committed). Returns false on collision so the caller can
+    * re-read `latest()` and retry — the compare-and-swap a table-format
+    * commit is made of. A losing commit deletes the delta segment it
+    * wrote (referenced by nothing).
     *
     * Every publish is stamped with a `#ts` header — the commit
     * wall-clock, forced STRICTLY ABOVE the predecessor's stamp so
     * [[resolveTimestamp]] is total even when two commits land within
-    * one clock tick (any stale carried `#ts` from the base snapshot's
-    * headers is replaced, never duplicated).
+    * one clock tick (any stale carried `#ts` is replaced, never
+    * duplicated) — and, unless the caller passed an explicit
+    * `#parent` (a branch commit), the linear lineage `#parent v-1`.
     */
-  private[graft] def publish(tableDir: String, v: Int, files: Seq[String],
-      segmentsFrom: Option[(String, Int)] = None): Boolean = {
+  private def link(tableDir: String, v: Int, headerLines: Seq[String],
+      segLines: Seq[String], deltaSeg: Option[Path]): Boolean = {
     val d = manifestDir(tableDir)
-    val (headerLines0, entryLines) = files.partition(_.startsWith("#"))
-    val withTs = headerLines0.filterNot(_.startsWith(s"$TsHeader\t")) :+
+    val withTs = headerLines.filterNot(_.startsWith(s"$TsHeader\t")) :+
       s"$TsHeader\t${nextTs(tableDir, v)}"
-    // record lineage: an explicit #parent (a branch commit) passes
-    // through; every other commit derived from the linear predecessor
     val stamped =
       if (v <= 1 || withTs.exists(_.startsWith(s"$ParentHeader\t"))) withTs
       else withTs :+ s"$ParentHeader\t${v - 1}"
-    val segLines = renderSegments(tableDir, v, entryLines, stamped,
-      segmentsFrom)
     val tmp = d.resolve(
       s".v$v.manifest.tmp-${java.util.UUID.randomUUID().toString}")
     Files.write(tmp,
       (stamped ++ segLines).sorted.mkString("\n").getBytes(UTF_8))
     try { Files.createLink(d.resolve(s"v$v.manifest"), tmp); true }
-    catch { case _: FileAlreadyExistsException => false }
+    catch {
+      case _: FileAlreadyExistsException =>
+        deltaSeg.foreach(Files.deleteIfExists(_))
+        false
+    }
     finally Files.deleteIfExists(tmp)
   }
+
+  /** write `lines` once as a new immutable segment file. */
+  private def writeSegment(tableDir: String, lines: Seq[String]): Path = {
+    val segPath = manifestDir(tableDir).resolve(
+      s"seg-${java.util.UUID.randomUUID().toString}.seg")
+    // order within a segment is irrelevant (entries are a set);
+    // sorted for determinism
+    Files.write(segPath, lines.sorted.mkString("\n").getBytes(UTF_8))
+    segPath
+  }
+
+  private def segLine(path: String, n: Long): String =
+    s"$SegHeader\t$path\t$n"
 
   /** Soft ceiling on `@seg` references per manifest: a commit that
     * would exceed it folds its smallest adopted segments into the delta
@@ -110,19 +109,36 @@ object SnapshotLog {
   private val MaxSegRefs = 64
   private val MergeDownTo = 32
 
-  /** The `@seg` reference lines for this commit's entry set: adopt
-    * every parent segment fully contained in it, write the remainder
-    * once as a new segment. Pure metadata — adopted segments are
-    * compared through the (immutable, cached) segment store, and the
-    * only bytes written are the delta's.
+  /** put-if-absent for typed entries at a SPECIFIC version — the OCC
+    * primitive snapshot transforms build on: a writer that derived its
+    * output from snapshot v publishes at v+1 and must FAIL (not land on
+    * a later id) if another commit got there first, because its result
+    * no longer reflects the table it would replace. Entry metadata is
+    * subject to the purity contract documented on [[commitEntries]].
+    *
+    * TWO-LEVEL manifests (the Iceberg manifest-list design): entry
+    * lines live in immutable SEGMENT files (`_manifests/seg-*.seg`, each
+    * written once by the commit that minted it), and the per-version
+    * manifest is a tiny LIST — `#` header lines plus `@seg` references,
+    * nothing else. A commit whose entry set fully contains
+    * a parent segment REFERENCES it verbatim (never re-serialized); only
+    * the remainder is written as one new delta segment, so an append to
+    * a millions-of-files table writes O(delta) manifest bytes, not
+    * O(table). Commits that drop entries from a parent segment (COW
+    * rewrites, vector folds) rewrite exactly the affected segments'
+    * survivors into the delta segment, the Iceberg
+    * rewrite-affected-manifests behavior. The parent is `segmentsFrom`
+    * (a clone adopts its source's segments), else the `#parent` header,
+    * else `v-1`.
     */
-  private def renderSegments(tableDir: String, v: Int,
-      entryLines: Seq[String], headerLines: Seq[String],
-      segmentsFrom: Option[(String, Int)]): Seq[String] = {
-    val distinct = entryLines.distinct
+  private[graft] def publishEntries(
+      tableDir: String, v: Int, es: Seq[FileEntry],
+      headerLines: Seq[String] = Nil,
+      segmentsFrom: Option[(String, Int)] = None): Boolean = {
+    val entryLines = es.map(renderEntry)
     // duplicate entry lines would make subset adoption unsound; no
     // writer produces them, but correctness never bets on that
-    require(distinct.size == entryLines.size,
+    require(entryLines.distinct.size == entryLines.size,
       s"duplicate manifest entry lines in commit v$v at $tableDir")
     val parent: Option[(String, Int)] = segmentsFrom.orElse {
       val p = headerLines.collectFirst {
@@ -151,26 +167,20 @@ object SnapshotLog {
       else {
         val (keep, fold) = adopted.sortBy(-_._2).splitAt(MergeDownTo)
         fold.foreach { case (p, _) => remaining = remaining ++ segmentLines(p) }
-        keep
+        keep.toSeq
       }
-    val delta =
-      if (remaining.isEmpty) Nil
-      else {
-        val segPath = manifestDir(tableDir).resolve(
-          s"seg-${java.util.UUID.randomUUID().toString}.seg")
-        // order within a segment is irrelevant (entries are a set);
-        // sorted for determinism
-        Files.write(segPath,
-          remaining.toSeq.sorted.mkString("\n").getBytes(UTF_8))
-        Seq(segPath.toAbsolutePath.toString -> remaining.size.toLong)
-      }
-    (kept.toSeq ++ delta).map { case (p, n) => s"$SegHeader\t$p\t$n" }
+    val deltaSeg =
+      if (remaining.isEmpty) None
+      else Some(writeSegment(tableDir, remaining.toSeq))
+    val segLines = kept.map { case (p, n) => segLine(p, n) } ++
+      deltaSeg.map(p => segLine(p.toAbsolutePath.toString, remaining.size))
+    link(tableDir, v, headerLines, segLines, deltaSeg)
   }
 
   private val SegHeader = "@seg"
 
   /** the segment references of snapshot `v`: (absolute path, entry
-    * count). Empty for legacy inline manifests. */
+    * count), in manifest order. */
   private[graft] def segRefs(tableDir: String, v: Int): Seq[(String, Long)] =
     if (!committed(tableDir, v)) Nil
     else rawLines(tableDir, v).collect {
@@ -206,12 +216,10 @@ object SnapshotLog {
     * copied VERBATIM (never resolved — zero segment files opened, so
     * commit memory and time are the delta's, not the table's, the
     * Iceberg manifest-list append), the added entries are written as
-    * one new delta segment, and the manifest CAS-links exactly like
-    * [[publish]]. Falls back to the full [[publish]] path for legacy
-    * inline parents (the one-time self-migration) and for the empty
-    * table. The ≥[[MaxSegRefs]] merge-down still applies — it reads
-    * only the FOLDED (smallest) segments, keeping the amortized cost
-    * O(delta).
+    * one new delta segment, and the manifest CAS-links through
+    * [[link]]. An uncommitted parent (the empty table) carries nothing.
+    * The ≥[[MaxSegRefs]] merge-down still applies — it reads only the
+    * FOLDED (smallest) segments, keeping the amortized cost O(delta).
     *
     * CONTRACT: `added` paths are fresh (writer-unique roots mint
     * them), so the no-duplicate-lines invariant subset adoption
@@ -226,56 +234,21 @@ object SnapshotLog {
     require(addedLines.distinct.size == addedLines.size,
       s"duplicate appended entries in commit v$v at $tableDir")
     val parentCommitted = parentV >= 1 && committed(tableDir, parentV)
-    val legacyInline = parentCommitted && rawLines(tableDir, parentV)
-      .exists(l => !l.startsWith("#") && !l.startsWith(s"$SegHeader\t"))
-    if (!parentCommitted || legacyInline) {
-      // empty table, or a legacy inline parent: one full publish
-      // (which writes the complete entry list as segment zero — the
-      // self-migration; every subsequent append is O(delta))
-      val prior = if (parentCommitted) entries(tableDir, parentV) else Nil
-      val carried = (if (parentCommitted) headers(tableDir, parentV)
-        else Nil).filterNot(h => dropHeaders.exists(h.startsWith))
-      return publish(tableDir, v,
-        carried ++ extraHeaders ++ (prior ++ added).map(renderEntry))
-    }
-    val d = manifestDir(tableDir)
-    val carried = headers(tableDir, parentV)
+    val carried = (if (parentCommitted) headers(tableDir, parentV) else Nil)
       .filterNot(h => dropHeaders.exists(h.startsWith))
-    val hdr0 = (carried ++ extraHeaders)
-      .filterNot(_.startsWith(s"$TsHeader\t"))
-    val withTs = hdr0 :+ s"$TsHeader\t${nextTs(tableDir, v)}"
-    val stamped =
-      if (v <= 1 || withTs.exists(_.startsWith(s"$ParentHeader\t"))) withTs
-      else withTs :+ s"$ParentHeader\t${v - 1}"
     var delta = addedLines
-    var kept = segRefs(tableDir, parentV)
+    var kept = if (parentCommitted) segRefs(tableDir, parentV) else Nil
     if (kept.size + 1 > MaxSegRefs) {
       val (keep, fold) = kept.sortBy(-_._2).splitAt(MergeDownTo)
       delta = delta ++ fold.flatMap { case (p, _) => segmentLines(p) }
       kept = keep
     }
+    // a zero-entry append copies the refs verbatim
     val deltaSeg =
-      if (delta.isEmpty) None // zero-entry append: refs copy verbatim
-      else {
-        val segPath = d.resolve(
-          s"seg-${java.util.UUID.randomUUID().toString}.seg")
-        Files.write(segPath, delta.sorted.mkString("\n").getBytes(UTF_8))
-        Some(segPath)
-      }
-    val segLines = (kept ++ deltaSeg.map(p =>
-      p.toAbsolutePath.toString -> delta.size.toLong))
-      .map { case (p, n) => s"$SegHeader\t$p\t$n" }
-    val tmp = d.resolve(
-      s".v$v.manifest.tmp-${java.util.UUID.randomUUID().toString}")
-    Files.write(tmp,
-      (stamped ++ segLines).sorted.mkString("\n").getBytes(UTF_8))
-    try { Files.createLink(d.resolve(s"v$v.manifest"), tmp); true }
-    catch {
-      case _: FileAlreadyExistsException =>
-        deltaSeg.foreach(Files.deleteIfExists(_)) // referenced by nothing
-        false
-    }
-    finally Files.deleteIfExists(tmp)
+      if (delta.isEmpty) None else Some(writeSegment(tableDir, delta))
+    val segLines = kept.map { case (p, n) => segLine(p, n) } ++
+      deltaSeg.map(p => segLine(p.toAbsolutePath.toString, delta.size))
+    link(tableDir, v, carried ++ extraHeaders, segLines, deltaSeg)
   }
 
   /** CAS-retrying O(delta) append commit onto the LINEAR head:
@@ -309,23 +282,11 @@ object SnapshotLog {
     math.max(System.currentTimeMillis(),
       tsOf(tableDir, v - 1).map(_ + 1L).getOrElse(0L))
 
-  /** publish `files` as the next snapshot; returns its id. Safe under
-    * concurrent committers: a lost race surfaces as a failed
-    * put-if-absent, never a clobbered manifest, and the commit retries
-    * onto the then-next version (bounded — each retry means someone
-    * else's commit SUCCEEDED, the standard progress argument).
-    */
-  def commit(tableDir: String, files: Seq[String]): Int = {
-    val MaxRetries = 1000
-    var attempt = 0
-    while (attempt < MaxRetries) {
-      val next = latest(tableDir) + 1
-      if (publish(tableDir, next, files)) return next
-      attempt += 1
-    }
-    throw new IllegalStateException(
-      s"snapshot commit at $tableDir lost $MaxRetries races; giving up")
-  }
+  /** publish the data files `paths` as the next snapshot; returns its
+    * id. Each path becomes an unlabeled data entry with no recorded
+    * facts (seq 0, rows −1, bytes −1) — see [[commitEntries]]. */
+  def commit(tableDir: String, paths: Seq[String]): Int =
+    commitEntries(tableDir, paths.map(FileEntry(_, "D", "", Map.empty)))
 
   /** One manifest row. `kind` is "D" (data), "X" (equality-delete — a
     * parquet file of key tuples subtracted at read, the merge-on-read
@@ -349,22 +310,23 @@ object SnapshotLog {
     * consumers (scan statistics, bin-pack planning) read it from the
     * manifest instead of a per-entry `Files.size()` round-trip — on a
     * millions-of-files table that driver-side stat loop IS the
-    * planning cost. −1 marks a pre-bytes writer; [[sizeOf]] falls back
-    * to the filesystem for those entries only.
-    */
-  /** `nullCounts` (9th tab field) is the per-column NULL count the
+    * planning cost. `nullCounts` is the per-column NULL count the
     * committing writer recorded (the Iceberg `null_value_counts`
     * manifest field): `COUNT(col) = rows − nulls` becomes a metadata
-    * answer. `sums` (10th field) records exact per-column sums for
-    * INT64 columns (dropped by the writer when the file's own sum
-    * overflows), serving SUM pushdown. Both absent on legacy entries —
-    * consumers refuse, never guess. */
-  /** `splitOffsets` (11th field) records the file's ROW-GROUP start
-    * offsets (the Iceberg `split_offsets` manifest field, recorded
-    * only when the file has more than one group): scan planning then
-    * splits big files EXACTLY at group boundaries — no empty ranges,
-    * no straggler range holding two groups — without opening a footer
-    * at plan time. */
+    * answer. `sums` records exact per-column sums for INT64 columns
+    * (dropped by the writer when the file's own sum overflows), serving
+    * SUM pushdown. `splitOffsets` records the file's ROW-GROUP start
+    * offsets (the Iceberg `split_offsets` manifest field, recorded only
+    * when the file has more than one group): scan planning then splits
+    * big files EXACTLY at group boundaries without opening a footer.
+    *
+    * Facts a committer could not certify stay absent — `rows`/`bytes`
+    * −1, empty maps — and consumers then refuse or fall back
+    * ([[sizeOf]] stats the file), never guess. One manifest line per
+    * entry, tab-separated, in exactly three shapes (see [[renderEntry]]):
+    * 8 fields `path kind partition stats seq rows strStats bytes`, 10
+    * adding `nullCounts sums`, 11 adding `splitOffsets`.
+    */
   final case class FileEntry(
       path: String, kind: String, partition: String,
       stats: Map[String, (Long, Long)], seq: Long = 0L,
@@ -399,7 +361,7 @@ object SnapshotLog {
   private def decStat(v: String): String =
     java.net.URLDecoder.decode(v, "UTF-8")
 
-  private def renderEntry(e: FileEntry): String = {
+  private[operators] def renderEntry(e: FileEntry): String = {
     val part = if (e.partition.isEmpty) "-" else e.partition
     val st =
       if (e.stats.isEmpty) "-"
@@ -416,9 +378,7 @@ object SnapshotLog {
         .mkString(",")
     val base = s"${e.path}\t${e.kind}\t$part\t$st\t${e.seq}\t${e.rows}" +
       s"\t$sst\t${e.bytes}"
-    // entries without the newer stats keep the 8-field form verbatim
-    // (byte-identical manifests for unchanged writers; old readers of
-    // new manifests were never supported in reverse)
+    // the shortest of the three shapes that holds the entry's facts
     if (e.nullCounts.isEmpty && e.sums.isEmpty && e.splitOffsets.isEmpty)
       base
     else {
@@ -429,8 +389,8 @@ object SnapshotLog {
   }
 
   /** the entry's file size: manifest-recorded when the writer stamped
-    * it, one filesystem stat otherwise (legacy entries only — every
-    * current writer records bytes at commit). A vanished legacy file
+    * it, one filesystem stat otherwise (hand-committed entries — every
+    * engine writer records bytes at commit). A vanished unrecorded file
     * reads as 0, matching the scan-statistics convention. */
   def sizeOf(e: FileEntry): Long =
     if (e.bytes >= 0L) e.bytes
@@ -540,59 +500,31 @@ object SnapshotLog {
       .map(f => normPath(f) -> splitOffsetsOf(f))
       .collect().toMap
 
-  private def parseEntry(line: String, intern: Interner): FileEntry = {
-    def stats(st: String) =
-      if (st == "-") Map.empty[String, (Long, Long)]
+  /** the inverse of [[renderEntry]]: accepts exactly its 8-, 10- and
+    * 11-field shapes; any other line is a corrupt or foreign manifest
+    * and fails loudly, never misread. */
+  private[operators] def parseEntry(line: String,
+      intern: Interner = new Interner): FileEntry = {
+    val f = line.split("\t")
+    if (f.length != 8 && f.length != 10 && f.length != 11)
+      throw new IllegalStateException(s"bad manifest line: $line")
+    def triples[V](st: String)(bound: String => V): Map[String, (V, V)] =
+      if (st == "-") Map.empty
       else st.split(",").map { s =>
         val Array(c, mn, mx) = s.split(":")
-        intern(c) -> ((mn.toLong, mx.toLong))
+        intern(c) -> ((bound(mn), bound(mx)))
       }.toMap
-    def strStats(st: String) =
-      if (st == "-") Map.empty[String, (String, String)]
-      else st.split(",").map { s =>
-        val Array(c, mn, mx) = s.split(":")
-        intern(c) -> ((decStat(mn), decStat(mx)))
+    def kv(v: String): Map[String, Long] =
+      if (v == "-") Map.empty
+      else v.split(",").map { s =>
+        val Array(c, n) = s.split(":"); intern(c) -> n.toLong
       }.toMap
-    line.split("\t") match {
-      case Array(p) => FileEntry(p, "D", "", Map.empty) // legacy: bare path
-      case Array(p, k, part, st) =>
-        // legacy 4-field line: no seq recorded. Data defaults to the
-        // OLDEST seq, vectors to the NEWEST — "the vector applies to
-        // everything", the pre-seq semantics, so old manifests keep
-        // reading exactly as they were written.
-        val sq = if (k == "D") 0L else Long.MaxValue
-        FileEntry(p, intern(k), if (part == "-") "" else intern(part),
-          stats(st), sq)
-      case Array(p, k, part, st, sq) =>
-        FileEntry(p, intern(k), if (part == "-") "" else intern(part),
-          stats(st), sq.toLong)
-      case Array(p, k, part, st, sq, rw, sst) =>
-        FileEntry(p, intern(k), if (part == "-") "" else intern(part),
-          stats(st), sq.toLong, rw.toLong, strStats(sst))
-      case Array(p, k, part, st, sq, rw, sst, by) =>
-        FileEntry(p, intern(k), if (part == "-") "" else intern(part),
-          stats(st), sq.toLong, rw.toLong, strStats(sst), by.toLong)
-      case Array(p, k, part, st, sq, rw, sst, by, nc, sm) =>
-        def kv(v: String): Map[String, Long] =
-          if (v == "-") Map.empty
-          else v.split(",").map { s =>
-            val Array(c, n) = s.split(":"); intern(c) -> n.toLong
-          }.toMap
-        FileEntry(p, intern(k), if (part == "-") "" else intern(part),
-          stats(st), sq.toLong, rw.toLong, strStats(sst), by.toLong,
-          kv(nc), kv(sm))
-      case Array(p, k, part, st, sq, rw, sst, by, nc, sm, so) =>
-        def kv(v: String): Map[String, Long] =
-          if (v == "-") Map.empty
-          else v.split(",").map { s =>
-            val Array(c, n) = s.split(":"); intern(c) -> n.toLong
-          }.toMap
-        FileEntry(p, intern(k), if (part == "-") "" else intern(part),
-          stats(st), sq.toLong, rw.toLong, strStats(sst), by.toLong,
-          kv(nc), kv(sm),
-          if (so == "-") Nil else so.split(",").map(_.toLong).toSeq)
-      case _ => throw new IllegalStateException(s"bad manifest line: $line")
-    }
+    FileEntry(f(0), intern(f(1)), if (f(2) == "-") "" else intern(f(2)),
+      triples(f(3))(_.toLong), f(4).toLong, f(5).toLong,
+      triples(f(6))(decStat), f(7).toLong,
+      if (f.length > 8) kv(f(8)) else Map.empty,
+      if (f.length > 8) kv(f(9)) else Map.empty,
+      if (f.length > 10) f(10).split(",").map(_.toLong).toSeq else Nil)
   }
 
   // ---- parsed-manifest caches ---------------------------------------
@@ -664,7 +596,7 @@ object SnapshotLog {
     * repeat kinds, partition labels and stats column names millions of
     * times — sharing them cut a 1M-entry version's retained heap ~40%.
     * Per-parse instance (no locking); past the cap it passes through. */
-  private final class Interner {
+  private[operators] final class Interner {
     private val m = new java.util.HashMap[String, String](512)
     def apply(s: String): String =
       if (m.size > 8192) s
@@ -725,34 +657,16 @@ object SnapshotLog {
       case Some(((cid, es), _)) if cid == id => es
       case _ =>
         entryParses.incrementAndGet()
-        val intern = new Interner
-        // entry-line order is preserved exactly as the resolved
-        // manifest lists it: inline lines in place, each `@seg`
-        // reference spliced where it stands
-        val toks: Seq[Either[FileEntry, (String, Long)]] =
-          rawLines(tableDir, v).filterNot(_.startsWith("#")).map { l =>
-            if (l.startsWith(s"$SegHeader\t")) {
-              val Array(_, p, n) = l.split("\t")
-              Right((p, n.toLong))
-            } else Left(parseEntry(l, intern))
-          }
-        // uncached segments parse concurrently (independent files)
-        val segParsed: Map[String, (Seq[FileEntry], Long)] =
-          onMetaPool(toks.collect { case Right((p, n)) => (p, n) }) {
-            case (p, n) => p -> parsedSegment(p, n)
-          }.toMap
-        val out = Vector.newBuilder[FileEntry]
-        var inlineBytes = 0L
-        toks.foreach {
-          case Left(e) => out += e; inlineBytes += estEntryBytes(e)
-          case Right((p, _)) => out ++= segParsed(p)._1
+        // entry order is the manifest's `@seg` order; uncached segments
+        // parse concurrently (independent files)
+        val segParsed = onMetaPool(segRefs(tableDir, v)) {
+          case (p, n) => parsedSegment(p, n)
         }
-        val parsed: Seq[FileEntry] = out.result()
+        val parsed: Seq[FileEntry] = segParsed.flatMap(_._1).toVector
         // the version list keeps every entry reachable regardless of
         // segment-layer eviction — budget it at full weight plus the
         // concat array itself
-        val bytes = inlineBytes + 24L * parsed.size +
-          segParsed.valuesIterator.map(_._2).sum
+        val bytes = 24L * parsed.size + segParsed.map(_._2).sum
         entryCache.put(key, (id, parsed), bytes)
         parsed
     }
@@ -826,13 +740,18 @@ object SnapshotLog {
     }
   }
 
-  /** the manifest's own lines — headers, `@seg` references, and (legacy
-    * manifests) inline entry lines; never opens a segment. */
+  /** the manifest's own lines — `#` headers and `@seg` references;
+    * never opens a segment. Any other line is a corrupt or foreign
+    * manifest and fails the read, never misread. */
   private def rawLines(tableDir: String, v: Int): Seq[String] = {
     val m = manifestDir(tableDir).resolve(s"v$v.manifest")
     require(Files.exists(m), s"no snapshot v$v at $tableDir")
-    new String(Files.readAllBytes(m), UTF_8)
+    val lines = new String(Files.readAllBytes(m), UTF_8)
       .split("\n").toSeq.filter(_.nonEmpty)
+    lines.find(l => !l.startsWith("#") && !l.startsWith(s"$SegHeader\t"))
+      .foreach(l => throw new IllegalStateException(
+        s"bad manifest line in $m: $l"))
+    lines
   }
 
   // ---- partition-label parsing (ONE shape everywhere) --------------
@@ -906,7 +825,11 @@ object SnapshotLog {
         l.stripPrefix(s"$RefHeader\t")
     }
 
-  /** publish typed entries as the next snapshot (same CAS commit).
+  /** publish typed entries as the next snapshot; returns its id. Safe
+    * under concurrent committers: a lost race surfaces as a failed
+    * put-if-absent, never a clobbered manifest, and the commit retries
+    * onto the then-next version (bounded — each retry means someone
+    * else's commit SUCCEEDED, the standard progress argument).
     *
     * METADATA PURITY CONTRACT (holds for every commit door —
     * [[commitEntries]], [[publishEntries]], [[appendEntries]]): an
@@ -924,21 +847,17 @@ object SnapshotLog {
     * metadata degrades to conservative scans, never to wrong answers.
     */
   def commitEntries(tableDir: String, es: Seq[FileEntry],
-      headerLines: Seq[String] = Nil): Int =
-    commit(tableDir, headerLines ++ es.map(renderEntry))
-
-  /** put-if-absent for typed entries at a SPECIFIC version — the OCC
-    * primitive snapshot transforms build on: a writer that derived its
-    * output from snapshot v publishes at v+1 and must FAIL (not land on
-    * a later id) if another commit got there first, because its result
-    * no longer reflects the table it would replace. Entry metadata is
-    * subject to the purity contract documented on [[commitEntries]].
-    */
-  private[graft] def publishEntries(
-      tableDir: String, v: Int, es: Seq[FileEntry],
-      headerLines: Seq[String] = Nil,
-      segmentsFrom: Option[(String, Int)] = None): Boolean =
-    publish(tableDir, v, headerLines ++ es.map(renderEntry), segmentsFrom)
+      headerLines: Seq[String] = Nil): Int = {
+    val MaxRetries = 1000
+    var attempt = 0
+    while (attempt < MaxRetries) {
+      val next = latest(tableDir) + 1
+      if (publishEntries(tableDir, next, es, headerLines)) return next
+      attempt += 1
+    }
+    throw new IllegalStateException(
+      s"snapshot commit at $tableDir lost $MaxRetries races; giving up")
+  }
 
   /** the DATA file list of snapshot `v`. */
   def files(tableDir: String, v: Int): Seq[String] =
@@ -954,86 +873,29 @@ object SnapshotLog {
   private[graft] val RefHeader = "#ref"
   private[graft] val KeysHeader = "#keys"
 
-  /** the streaming sink's epoch HIGH-WATER mark (a table-level header,
-    * carried forward by every writer): replay detection reads this one
-    * header line instead of scanning the entry set for a batch label —
-    * the no-op check stays O(1) however large the table. */
+  /** The streaming sinks' epoch HIGH-WATER marks — table-level
+    * headers carried forward by every writer, so replay detection reads
+    * one header line instead of scanning the entry set (the no-op check
+    * stays O(1) however large the table). One scheme: the "" writer's
+    * mark is the table-global `#batchhw`; every other writer keys its
+    * own `#writerhw <id>` line (the Delta `txn` appId idea), so a second
+    * query writing the same table, or a query restarted with a fresh
+    * checkpoint, never has its epochs no-op'd against another writer's
+    * high-water. */
   private[graft] val BatchHwHeader = "#batchhw"
-
-  /** PER-WRITER epoch high-water (the Delta `txn` appId idea): each
-    * streaming writer keys its replay detection by its OWN id, so a
-    * second query writing the same table (independent epoch counters)
-    * or a query restarted with a fresh checkpoint never has its
-    * lower-numbered epochs silently no-op'd against another writer's
-    * high-water. The table-global [[BatchHwHeader]] remains the ""
-    * writer's marker (legacy tables keep reading unchanged). */
   private[graft] val WriterHwHeader = "#writerhw"
 
-  /** the highest streaming epoch committed into snapshot `v` (−1 when
-    * the table predates high-water stamping). */
-  private[graft] def batchHighWater(tableDir: String, v: Int): Long =
-    if (v <= 0) -1L
-    else headers(tableDir, v).collectFirst {
-      case l if l.startsWith(s"$BatchHwHeader\t") =>
-        l.stripPrefix(s"$BatchHwHeader\t").toLong
-    }.getOrElse(-1L)
-
-  /** [[batchHighWater]] scoped to one WRITER's marker; the empty
-    * writerId reads the table-global legacy header.
-    *
-    * UPGRADE FALLBACK — OPT-IN ONLY (`legacyFallback`): a table
-    * written before writer scoping carries only the global `#batchhw`
-    * header. A writer that declares itself the CONTINUATION of that
-    * legacy single-writer stream (the `legacyWriter` option) reads the
-    * global marker when no writer-scoped marker of any writer exists
-    * yet — so its first crash-restart replay after upgrading does not
-    * re-commit an already-committed epoch. An UNKNOWN writer (distinct
-    * id, fresh checkpoint) defaults to −1 — the Delta txnAppId /
-    * Iceberg semantics — because treating it as the legacy writer
-    * would silently DROP its epochs 0..hw against another writer's
-    * high-water (they are new batches, not replays). */
+  /** the highest streaming epoch writer `writerId` committed into
+    * snapshot `v`; −1 when it never committed one there. */
   private[graft] def batchHighWater(tableDir: String, v: Int,
-      writerId: String, legacyFallback: Boolean = false): Long =
-    if (writerId.isEmpty) batchHighWater(tableDir, v)
-    else if (v <= 0) -1L
+      writerId: String = ""): Long =
+    if (v <= 0) -1L
     else {
-      val hs = headers(tableDir, v)
-      hs.collectFirst {
-        case l if l.startsWith(s"$WriterHwHeader\t$writerId\t") =>
-          l.stripPrefix(s"$WriterHwHeader\t$writerId\t").toLong
-      }.getOrElse {
-        if (legacyFallback &&
-            !hs.exists(_.startsWith(s"$WriterHwHeader\t")))
-          batchHighWater(tableDir, v)
-        else {
-          // an UNDECLARED continuation is detectable right here: the
-          // table carries a global legacy marker, no writer-scoped
-          // marker of any writer exists yet, and this writer did not
-          // opt in — warn so the operator can set `legacyWriter`
-          // BEFORE a crash-restart replay re-commits epochs 0..hw
-          val globalHw = batchHighWater(tableDir, v)
-          if (globalHw >= 0L &&
-              !hs.exists(_.startsWith(s"$WriterHwHeader\t")))
-            System.err.println(s"[graft] WARN: writer '$writerId' " +
-              s"reads epoch high-water -1 on pre-writer-scoped table " +
-              s"$tableDir (global #batchhw=$globalHw). If this writer " +
-              s"continues the table's original single-writer stream, " +
-              s"set the `legacyWriter` option — otherwise its first " +
-              s"crash-restart replay will re-commit already-committed " +
-              s"epochs.")
-          -1L
-        }
-      }
+      val prefix = hwDropPrefix(writerId)
+      headers(tableDir, v).collectFirst {
+        case l if l.startsWith(prefix) => l.stripPrefix(prefix).toLong
+      }.getOrElse(-1L)
     }
-
-  /** does snapshot `v` PREDATE writer-scoped replay markers entirely?
-    * (No `#writerhw` header of any writer.) Legacy replay fallbacks
-    * — the global high-water, the batch-label scan — are sound only
-    * in this state: the table was then written under the one-writer
-    * contract those mechanisms assume. */
-  private[graft] def preWriterScoped(tableDir: String, v: Int): Boolean =
-    v <= 0 || !headers(tableDir, v)
-      .exists(_.startsWith(s"$WriterHwHeader\t"))
 
   /** the header line recording writer `writerId`'s epoch high-water,
     * and the prefix a committer drops to replace ITS OWN marker (and
@@ -1041,8 +903,7 @@ object SnapshotLog {
   private[graft] def hwHeader(writerId: String, hw: Long): String = {
     require(!writerId.contains('\t') && !writerId.contains('\n'),
       s"writerId must not contain tab/newline: $writerId")
-    if (writerId.isEmpty) s"$BatchHwHeader\t$hw"
-    else s"$WriterHwHeader\t$writerId\t$hw"
+    s"${hwDropPrefix(writerId)}$hw"
   }
   private[graft] def hwDropPrefix(writerId: String): String =
     if (writerId.isEmpty) s"$BatchHwHeader\t"
@@ -1050,8 +911,8 @@ object SnapshotLog {
 
   /** the snapshot this commit DERIVED from — explicit for branch
     * commits ([[SnapshotRefs]] writes the header), implicit v−1 for
-    * every linear commit ([[publish]] records it). None only for v1
-    * and for pre-parent manifests. */
+    * every linear commit ([[link]] records it). None only for a v1
+    * that is not a clone root. */
   def parentOf(tableDir: String, v: Int): Option[Int] =
     if (v <= 0 || !Files.exists(
         manifestDir(tableDir).resolve(s"v$v.manifest"))) None
@@ -1062,7 +923,7 @@ object SnapshotLog {
 
   // ---- time travel by TIMESTAMP ------------------------------------
 
-  /** the commit wall-clock of snapshot `v` (stamped by [[publish]];
+  /** the commit wall-clock of snapshot `v` (stamped by [[link]];
     * None for an expired or never-committed version). */
   def tsOf(tableDir: String, v: Int): Option[Long] =
     if (v <= 0 || !Files.exists(
@@ -1417,10 +1278,7 @@ object SnapshotLog {
     // seq STRICTLY ABOVE everything carried. Restarting at v1 would let
     // a new clone-side vector (seq 2) silently miss carried data with
     // seq >= 2, and a carried vector wrongly suppress new inserts.
-    // Legacy vectors (seq = MaxValue, "applies to everything") are
-    // excluded from the max — their scope is unbounded by design.
-    val maxSeq = es.map(_.seq).filter(_ != Long.MaxValue)
-      .foldLeft(1L)(math.max)
+    val maxSeq = es.map(_.seq).foldLeft(1L)(math.max)
     val at = math.min(maxSeq, Int.MaxValue.toLong).toInt
     // parent 0 marks the clone root explicitly — without it, publish
     // would record a phantom parent `at - 1` that never existed here.

@@ -2431,8 +2431,7 @@ object QFilters extends Registry {
     // every commit adds exactly ONE new segment and reuses EVERY
     // segment of its parent, so commit k writes O(delta) metadata
     // bytes on a table of any size (`ManifestSegmentSpec` pins the
-    // byte bound, the legacy-manifest migration, and the ≤64-ref
-    // merge-down).
+    // byte bound and the ≤64-ref merge-down).
     Q("s52_manifest_segments",
       (s, d) => {
         import s.implicits._
@@ -3186,13 +3185,13 @@ object QFilters extends Registry {
         s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
         s.conf.set(
           "spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
-        // v2 in the tag: the fixture persists across runs like
-        // `s65_scan_v2` — this row exists to time the SPJ READ (the
+        // v3 in the tag: the fixture persists across runs like
+        // `s65_scan_v3` — this row exists to time the SPJ READ (the
         // exchange-free join), not the two-table build it used to pay
         // every invocation (4.8 s of write for a sub-second join —
         // VERDICT r15 "what's wrong #2"). Bump the tag if the build
         // ever changes. A warm hit is attributed via memo_warm.
-        val root = graft.Scratch.dirFor("s64_spj_v2", d)
+        val root = graft.Scratch.dirFor("s64_spj_v3", d)
         import graft.operators.{SnapshotLog, SnapshotMerge}
         val dirA = s"$root/a"
         val dirB = s"$root/b"
@@ -3249,9 +3248,9 @@ object QFilters extends Registry {
         val s = s0.newSession()
         graft.GraftExtensions.ensure(s)
         s.conf.set("spark.sql.sources.v2.bucketing.enabled", "false")
-        // v2 in the tag: the fixture persists across runs (this row
+        // v3 in the tag: the fixture persists across runs (this row
         // times reads, not the build) — bump it when the build changes
-        val dir = s"${graft.Scratch.dirFor("s65_scan_v2", d)}/t"
+        val dir = s"${graft.Scratch.dirFor("s65_scan_v3", d)}/t"
         if (graft.operators.SnapshotLog.latest(dir) == 0) {
           graft.Scratch.clear(dir)
           val base = Tables.lineitem(s, d).select(
@@ -3305,7 +3304,7 @@ object QFilters extends Registry {
         val s = s0.newSession()
         graft.GraftExtensions.ensure(s)
         s.conf.set("spark.sql.sources.v2.bucketing.enabled", "false")
-        val dir = s"${graft.Scratch.dirFor("s65_scan_v2", d)}/t"
+        val dir = s"${graft.Scratch.dirFor("s65_scan_v3", d)}/t"
         if (graft.operators.SnapshotLog.latest(dir) == 0) {
           graft.Scratch.clear(dir)
           val base = Tables.lineitem(s, d).select(
@@ -3360,11 +3359,11 @@ object QFilters extends Registry {
         s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
         s.conf.set(
           "spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
-        // persistent versioned fixture, same rationale as s64_spj_v2:
+        // persistent versioned fixture, same rationale as s64_spj_v3:
         // the two 48-partition multi-label tables build ONCE per sf
         // dir; the bench row then times the multi-key SPJ read itself
         // (the fixture rebuild was 4.3 s of the 4.8 s row).
-        val root = graft.Scratch.dirFor("s67_spjm_v2", d)
+        val root = graft.Scratch.dirFor("s67_spjm_v3", d)
         import graft.operators.{SnapshotLog, SnapshotMerge}
         val dirA = s"$root/a"
         val dirB = s"$root/b"
@@ -3440,7 +3439,7 @@ object QFilters extends Registry {
   private[queries] def lakeBaseDir(s: org.apache.spark.sql.SparkSession,
       d: String): String = synchronized {
     import graft.operators.{SnapshotLog, SnapshotMerge}
-    val dir = s"${graft.Scratch.dirFor("lake_base_v1", d)}/t"
+    val dir = s"${graft.Scratch.dirFor("lake_base_v2", d)}/t"
     if (SnapshotLog.latest(dir) >= 1) { graft.Caches.markMemoHit(); dir }
     else {
       graft.Scratch.clear(dir)

@@ -504,8 +504,8 @@ object QStreaming extends Registry {
     // committed snapshot (`streaming.SnapshotCommitSink` — files to a
     // batchId-scoped dir, manifest = prior entries + new files through
     // the CAS publish), so the table is exactly-once AT THE TABLE
-    // LEVEL: a replayed epoch finds its batchId label in the manifest
-    // and no-ops (`SnapshotStreamSpec` replays one), and a reader
+    // LEVEL: a replayed epoch at or below the `#batchhw` high-water
+    // header no-ops (`SnapshotStreamSpec` replays one), and a reader
     // pinned to snapshot v is never torn by the stream committing
     // v+1. Three mtime-ordered arrival files under maxFilesPerTrigger=1
     // give three deterministic epochs; the query reads EVERY snapshot
@@ -621,7 +621,7 @@ object QStreaming extends Registry {
     // Delta CDF / Iceberg incremental-read shape.
     Q("stream_change_feed",
       (s, d) => {
-        val dir = s"${graft.Scratch.dirFor("stream_cdf", d)}/t"
+        val dir = s"${graft.Scratch.dirFor("stream_cdf_v2", d)}/t"
         import graft.operators.{DeleteVectors, SnapshotLog, SnapshotMerge}
         // persisted INPUT fixture (the s64/lakeBase pattern): the
         // stream under test only READS this 3-commit history — rebuild
@@ -688,7 +688,7 @@ object QStreaming extends Registry {
     // vector commits keep the zero-read fast path.
     Q("stream_cdf_cow",
       (s, d) => {
-        val dir = s"${graft.Scratch.dirFor("stream_cdfcow", d)}/t"
+        val dir = s"${graft.Scratch.dirFor("stream_cdfcow_v2", d)}/t"
         import graft.operators.{SnapshotLog, SnapshotMerge}
         // persisted INPUT fixture: clone(v1) + keys commit (v1+1) +
         // COW merge (v1+2) — the stream only READS the history, so

@@ -133,11 +133,12 @@ object SnapshotTables {
   /** memoized (sumBytes, sumRows | -1) of the DATA entries surviving
     * a static constraint set in snapshot (dir, v) — the scan's
     * statistics. Keyed on the manifest's self-invalidating FILE
-    * IDENTITY plus the rendered constraints, bounded LRU; an eviction
-    * or a re-created table directory is a re-fold, never a stale
-    * answer. Also memoizes [[SnapshotLog.sizeOf]]'s filesystem stats
-    * for legacy entries without recorded bytes. */
-  private val statsMemo = java.util.Collections.synchronizedMap(
+    * IDENTITY plus the canonically rendered constraints
+    * ([[SnapshotPrune.memoKey]]), bounded LRU; an eviction or a
+    * re-created table directory is a re-fold, never a stale answer.
+    * Also memoizes [[SnapshotLog.sizeOf]]'s filesystem stats for
+    * entries without recorded bytes. */
+  private[sources] val statsMemo = java.util.Collections.synchronizedMap(
     new java.util.LinkedHashMap[String, (AnyRef, Long, Long)](
       64, 0.75f, true) {
       override def removeEldestEntry(
@@ -147,7 +148,7 @@ object SnapshotTables {
   private[sources] def statsFor(dir: String, v: Int,
       cs: Seq[SnapshotPrune.Constraint]): (Long, Long) = {
     val id = SnapshotLog.manifestIdOf(dir, v).orNull
-    val key = s"$dir#$v#${cs.mkString("&")}"
+    val key = s"$dir#$v#${SnapshotPrune.memoKey(cs)}"
     val hit = if (id == null) null else statsMemo.get(key)
     if (hit != null && hit._1 == id) (hit._2, hit._3)
     else {
@@ -339,6 +340,26 @@ private[sources] object SnapshotPrune {
     * `notEq(col, null)` into the parquet read (null-count stats skip
     * all-null row groups). */
   final case class NotNull(col: String) extends Constraint
+
+  /** `cs` rendered as a memo key that is equal for logically equal
+    * constraint sets: set members and the constraint list sort, and a
+    * value renders with its type and length (a String "1" and a Long 1
+    * prune differently; a member cannot forge a separator). */
+  def memoKey(cs: Seq[Constraint]): String = {
+    def lit(v: Any): String =
+      if (v == null) "null"
+      else {
+        val s = v.toString
+        s"${v.getClass.getSimpleName}:${s.length}:$s"
+      }
+    def opt(v: Option[Any]): String = v.map(lit).getOrElse("")
+    cs.map {
+      case InSet(c, vals) =>
+        s"in($c;${vals.map(lit).distinct.sorted.mkString(",")})"
+      case Bound(c, lo, hi) => s"bound($c;${opt(lo)};${opt(hi)})"
+      case NotNull(c) => s"notnull($c)"
+    }.distinct.sorted.mkString("&")
+  }
 
   /** the constraints we can prune on, parsed through the PUBLIC
     * connector interfaces (NamedReference / Literal — the concrete

@@ -114,13 +114,8 @@ private[sources] class SnapshotWriteBuilder(dir: String,
       // same table, or one restarted with a fresh checkpoint, each get
       // their own high-water — epochs are never silently dropped
       // against another writer's marker (the Delta txn-appId contract).
-      // `legacyWriter=true` (an explicit write option) declares this
-      // query the continuation of a pre-writer-scoped table's single
-      // writer, enabling the global-marker fallback for its first
-      // post-upgrade restart; unknown writers default to hw = −1.
       new SnapshotStreamingWrite(dir, branch, info.schema(),
-        Option(info.queryId()).getOrElse(""),
-        info.options().getBoolean("legacyWriter", false))
+        Option(info.queryId()).getOrElse(""))
     }
 
     // SPEC-CLUSTERED WRITES (the Iceberg/Delta write-distribution
@@ -161,18 +156,17 @@ private[sources] class SnapshotWriteBuilder(dir: String,
 /** `writeStream.format("graft-snapshot")` — the STREAMING face of the
   * snapshot table through the standard DSv2 door: every epoch commits
   * as ONE snapshot whose entries carry the `batch=<epochId>` label and
-  * a `#batchhw` high-water header, so a REPLAYED epoch (restart,
-  * speculative re-run) no-ops against the manifest's own high-water
-  * mark — identical manifest bytes, the files of the replay left
-  * unreferenced for the orphan sweep. Exactly the
+  * the query's `#writerhw` high-water header, so a REPLAYED epoch
+  * (restart, speculative re-run) no-ops against the manifest's own
+  * high-water mark — identical manifest bytes, the files of the replay
+  * left unreferenced for the orphan sweep. Exactly the
   * [[graft.streaming.SnapshotCommitSink]] contract, now reachable
   * without a foreachBatch shim; `option("branch", name)` stages
   * epochs on a [[SnapshotRefs]] branch (write–audit–publish for
   * streams). Commits are O(delta) segment appends.
   */
 private[sources] class SnapshotStreamingWrite(dir: String,
-    branch: Option[String], schema: StructType, writerId: String = "",
-    legacyWriter: Boolean = false)
+    branch: Option[String], schema: StructType, writerId: String = "")
     extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
   // one writer-unique root per QUERY RUN; epochs nest under it, so two
   // concurrent runs (or a zombie executor from a failed run) can never
@@ -190,7 +184,7 @@ private[sources] class SnapshotStreamingWrite(dir: String,
     val files = messages.collect { case SnapFilesCommit(fs) => fs }
       .flatten.filter(_.rows > 0).sortBy(_.path)
     SnapshotStreamingWrite.commitEpoch(dir, branch, epochId,
-      files.map(f => (f.path, f.rows, f.bytes)), writerId, legacyWriter)
+      files.map(f => (f.path, f.rows, f.bytes)), writerId)
   }
 
   override def abort(epochId: Long,
@@ -211,17 +205,16 @@ private[sources] object SnapshotStreamingWrite {
     * `writerId` scopes the marker: the DSv2 door passes the streaming
     * query's stable id, so a second query (or a fresh-checkpoint
     * restart) never has its epochs dropped against a foreign marker;
-    * "" keeps the table-global legacy header. Returns the line's head
-    * either way. */
+    * "" keeps the table-global `#batchhw` header. Returns the line's
+    * head either way. */
   private[sources] def commitEpoch(dir: String, branch: Option[String],
       epochId: Long, files: Seq[(String, Long, Long)],
-      writerId: String = "", legacyWriter: Boolean = false): Int = {
+      writerId: String = ""): Int = {
     def entriesAt(t: Long) = files.map { case (p, n, b) =>
       SnapshotLog.FileEntry(p, "D", label(epochId), Map.empty,
         seq = t, rows = n, bytes = b)
     }
-    def hwOf(v: Int) =
-      SnapshotLog.batchHighWater(dir, v, writerId, legacyWriter)
+    def hwOf(v: Int) = SnapshotLog.batchHighWater(dir, v, writerId)
     // an EMPTY epoch (AvailableNow's drain tick, an all-filtered
     // micro-batch) commits nothing: no empty snapshot, no high-water
     // advance — a later replay of it is empty again, still a no-op

@@ -5,16 +5,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Streaming writer for a snapshot-log table — every micro-batch lands
   * as ONE committed snapshot (exactly-once at the table level): the
-  * batch's files are written to a batchId-scoped directory, then a
-  * manifest referencing all prior entries plus the new files publishes
-  * through the CAS commit. The batchId is recorded as each new file's
-  * partition label, which makes REPLAY idempotence a metadata check:
-  * a restarted query re-delivering an already-committed epoch finds
-  * its batchId in the current manifest and no-ops — the same
-  * high-water-mark contract as the checksum sink's 2PC, here
-  * expressed through the table format itself. Readers meanwhile pin
-  * snapshots: an analyst query running against snapshot v is never
-  * torn by the stream appending v+1.
+  * batch's files are written to a batchId-scoped directory, then an
+  * O(delta) append publishes them (labelled `batch=<batchId>`) through
+  * the CAS commit, stamping the writer's epoch high-water header
+  * ([[SnapshotLog.batchHighWater]]). That makes REPLAY idempotence a
+  * metadata check: a restarted query re-delivering an epoch at or
+  * below its own high-water no-ops — the same high-water-mark contract
+  * as the checksum sink's 2PC, here expressed through the table format
+  * itself. Readers meanwhile pin snapshots: an analyst query running
+  * against snapshot v is never torn by the stream appending v+1.
   *
   * Scale shape: the commit adds one manifest line per file per epoch;
   * history cost is bounded by [[SnapshotLog.expire]] (the vacuum),
@@ -30,7 +29,7 @@ object SnapshotCommitSink {
     * staging path — the second's mode("overwrite") write would
     * truncate files the first's already-published manifest still
     * references (reads break, data lost). The empty writerId keeps
-    * the legacy single-writer layout byte-for-byte. */
+    * the single-writer layout `<sub>/b<batchId>`. */
   private def stagingDir(tableDir: String, sub: String, batchId: Long,
       writerId: String): String =
     if (writerId.isEmpty) s"$tableDir/$sub/b$batchId"
@@ -47,32 +46,14 @@ object SnapshotCommitSink {
     }
 
   /** has `batchId` already been committed into the table BY THIS
-    * WRITER? The high-water header answers in O(1) (with the
-    * pre-upgrade global-marker fallback — see
-    * [[SnapshotLog.batchHighWater]]); tables written before
-    * high-water stamping entirely fall back to the legacy label scan,
-    * which is sound only while the table predates writer scoping
-    * (single-writer contract). */
+    * WRITER? One header read — see [[SnapshotLog.batchHighWater]]. */
   private def replayed(tableDir: String, v: Int, batchId: Long,
-      writerId: String, legacyWriter: Boolean): Boolean = {
-    val hw = SnapshotLog.batchHighWater(tableDir, v, writerId,
-      legacyWriter)
-    if (hw >= 0L) batchId <= hw
-    // the legacy batch-label scan is writer-AGNOSTIC — on a
-    // pre-writer-scoped table it would skip writer B's batch N because
-    // writer A once committed a batch N. Only the empty (table-global)
-    // writer id, or a writer that explicitly declared itself the
-    // legacy stream's continuation, may use it.
-    else (writerId.isEmpty ||
-        (legacyWriter && SnapshotLog.preWriterScoped(tableDir, v))) &&
-      v > 0 && SnapshotLog.entries(tableDir, v)
-        .exists(_.partition == batchLabel(batchId))
-  }
+      writerId: String): Boolean =
+    batchId <= SnapshotLog.batchHighWater(tableDir, v, writerId)
 
   private def hwHeaders(tableDir: String, v: Int, batchId: Long,
-      writerId: String, legacyWriter: Boolean): (Seq[String], Seq[String]) = {
-    val hw = math.max(
-      SnapshotLog.batchHighWater(tableDir, v, writerId, legacyWriter),
+      writerId: String): (Seq[String], Seq[String]) = {
+    val hw = math.max(SnapshotLog.batchHighWater(tableDir, v, writerId),
       batchId)
     (Seq(SnapshotLog.hwHeader(writerId, hw)),
       Seq(SnapshotLog.hwDropPrefix(writerId)))
@@ -90,20 +71,11 @@ object SnapshotCommitSink {
     * keeps the table-global marker: correct for the single-query,
     * stable-checkpoint shape, but a second independent epoch counter
     * would silently no-op its early epochs against it.
-    *
-    * `legacyWriter` declares this writer the CONTINUATION of a
-    * pre-writer-scoped table's single-writer stream: its scoped
-    * lookups may fall back to the global `#batchhw` marker / batch
-    * label scan, so the first post-upgrade restart does not re-commit
-    * already-committed epochs. Leave it false (the default) for any
-    * genuinely new writer — a false claim silently DROPS its epochs
-    * 0..hw as phantom replays.
     */
   def commitBatch(s: SparkSession, tableDir: String,
-      batch: DataFrame, batchId: Long, writerId: String = "",
-      legacyWriter: Boolean = false): Int = {
+      batch: DataFrame, batchId: Long, writerId: String = ""): Int = {
     val v = SnapshotLog.latest(tableDir)
-    if (replayed(tableDir, v, batchId, writerId, legacyWriter)) return v
+    if (replayed(tableDir, v, batchId, writerId)) return v
     val dir = stagingDir(tableDir, "data", batchId, writerId)
     batch.write.mode("overwrite").parquet(dir)
     // seq = the committing version: any delete vector already in the
@@ -113,15 +85,13 @@ object SnapshotCommitSink {
     // sequence-number scoping). O(delta) commit: the parent's segment
     // refs are adopted verbatim, only this epoch's entries are written.
     val files = SnapshotLog.dataFiles(dir)
-    val (extra, drop) = hwHeaders(tableDir, v, batchId, writerId,
-      legacyWriter)
+    val (extra, drop) = hwHeaders(tableDir, v, batchId, writerId)
     SnapshotLog.appendEntries(tableDir,
       t => files.map(f => SnapshotLog.FileEntry(f, "D",
         batchLabel(batchId), Map.empty, seq = t.toLong,
         bytes = SnapshotLog.statBytes(f))),
       extraHeaders = extra, dropHeaders = drop,
-      noopIf = h => replayed(tableDir, h, batchId, writerId,
-        legacyWriter))
+      noopIf = h => replayed(tableDir, h, batchId, writerId))
   }
 
   /** Commit one micro-batch as a merge-on-read UPSERT — the streaming
@@ -139,10 +109,9 @@ object SnapshotCommitSink {
     * [[commitBatch]].
     */
   def upsertBatch(s: SparkSession, tableDir: String, batch: DataFrame,
-      batchId: Long, keyCols: Seq[String], writerId: String = "",
-      legacyWriter: Boolean = false): Int = {
+      batchId: Long, keyCols: Seq[String], writerId: String = ""): Int = {
     val v = SnapshotLog.latest(tableDir)
-    if (replayed(tableDir, v, batchId, writerId, legacyWriter)) return v
+    if (replayed(tableDir, v, batchId, writerId)) return v
     val dataDir = stagingDir(tableDir, "data", batchId, writerId)
     val vecDir = stagingDir(tableDir, "deletes", batchId, writerId)
     batch.write.mode("overwrite").parquet(dataDir)
@@ -150,8 +119,7 @@ object SnapshotCommitSink {
       .write.mode("overwrite").parquet(vecDir)
     val dataFiles = SnapshotLog.dataFiles(dataDir)
     val vecFiles = SnapshotLog.dataFiles(vecDir)
-    val (extra, drop) = hwHeaders(tableDir, v, batchId, writerId,
-      legacyWriter)
+    val (extra, drop) = hwHeaders(tableDir, v, batchId, writerId)
     SnapshotLog.appendEntries(tableDir,
       t =>
         dataFiles.map(f => SnapshotLog.FileEntry(f, "D",
@@ -161,7 +129,6 @@ object SnapshotCommitSink {
           batchLabel(batchId), Map.empty, seq = t.toLong,
           bytes = SnapshotLog.statBytes(f))),
       extraHeaders = extra, dropHeaders = drop,
-      noopIf = h => replayed(tableDir, h, batchId, writerId,
-        legacyWriter))
+      noopIf = h => replayed(tableDir, h, batchId, writerId))
   }
 }

@@ -25,8 +25,8 @@ class AppendDeltaSpec extends AnyFunSuite {
     val dir = fresh("zeroreads")
     val big = (0 until 100000).map(entry(dir, _, 1L))
     assert(SnapshotLog.commitEntries(dir, big) == 1)
-    // v1 is legacy-shape only if commitEntries inlined; it segments —
-    // either way the FIRST append migrates, so do one warm-up append
+    // one warm-up append: the measured one then starts from an
+    // appended parent
     SnapshotLog.appendEntries(dir,
       t => Seq(entry(dir, 200000, t.toLong)))
     assert(SnapshotLog.latest(dir) == 2)

@@ -8,8 +8,6 @@ import java.nio.file.{Files, Paths}
   *    carried 10k entries are REFERENCED (one `@seg` line), never
   *    re-serialized — the byte bound is the proof, not the plan;
   *  - reads across the segment boundary resolve the exact entry set;
-  *  - legacy single-file manifests (inline entry lines) keep reading
-  *    and self-migrate on the first commit on top of them;
   *  - a shallow clone adopts the SOURCE's segments by reference
   *    (O(1) metadata at any table size);
   *  - segment-count ceiling: past 64 refs a commit folds the smallest
@@ -88,26 +86,6 @@ class ManifestSegmentSpec extends SparkSpec {
       .filterNot { case (p, _) => before.contains(p) }.values.sum
     assert(newBytes < 1024,
       s"append after a drop wrote $newBytes bytes — adoption broken")
-  }
-
-  test("legacy inline manifests read unchanged and self-migrate") {
-    val dir = fresh("legacy")
-    Files.createDirectories(Paths.get(dir, "_manifests"))
-    // a hand-written round-11-style manifest: inline entry lines
-    val lines = Seq(
-      "#ts\t1000",
-      s"$dir/data/a.parquet\tD\tp=1\tk:0:5\t1",
-      s"$dir/data/b.parquet\tD\tp=2\t-\t1")
-    Files.write(Paths.get(dir, "_manifests", "v1.manifest"),
-      lines.mkString("\n").getBytes("UTF-8"))
-    val es = SnapshotLog.entries(dir, 1)
-    assert(es.size == 2 && es.head.stats.nonEmpty)
-    // the next commit self-migrates: carried entries land in a segment
-    val v2 = SnapshotLog.commitEntries(dir,
-      es ++ fakeEntries(dir, 1, from = 50))
-    assert(SnapshotLog.segRefs(dir, v2).nonEmpty,
-      "commit on a legacy manifest must write segments")
-    assert(SnapshotLog.entries(dir, v2).size == 3)
   }
 
   test("a clone references the source's segments; expire respects roots") {

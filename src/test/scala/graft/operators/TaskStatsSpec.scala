@@ -143,13 +143,11 @@ class TaskStatsSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       SnapshotLog.metaCount(spark, dir, SnapshotLog.latest(dir))
     }
-    // a hand-written legacy manifest (no row counts) refuses too
-    val dir2 = "/tmp/graft-test/taskstats-refuse/legacy"
-    java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(dir2, "_manifests"))
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(dir2, "_manifests", "v1.manifest"),
-      s"$dir2/data/a.parquet\tD\tp=1\t-\t1".getBytes("UTF-8"))
+    // entries committed without a row count (rows = -1) refuse too
+    val dir2 = "/tmp/graft-test/taskstats-refuse/norows"
+    SnapshotLog.commitEntries(dir2, Seq(SnapshotLog.FileEntry(
+      s"$dir2/data/a.parquet", "D", "p=1", Map.empty, seq = 1L,
+      rows = -1L)))
     intercept[IllegalArgumentException] {
       SnapshotLog.metaCount(spark, dir2, 1)
     }

@@ -78,8 +78,9 @@ class SnapshotLogSpec extends SparkSpec {
     // computes next=2; committer B publishes v2 FIRST; A's publish of
     // v2 must FAIL (not clobber), and A's commit() retry lands v3
     val next = SnapshotLog.latest(dir) + 1          // A's stale read
-    assert(SnapshotLog.publish(dir, next, Seq("b.parquet")))  // B wins v2
-    assert(!SnapshotLog.publish(dir, next, Seq("a.parquet")),
+    def one(p: String) = Seq(SnapshotLog.FileEntry(p, "D", "", Map.empty))
+    assert(SnapshotLog.publishEntries(dir, next, one("b.parquet"))) // B wins v2
+    assert(!SnapshotLog.publishEntries(dir, next, one("a.parquet")),
       "second publish of the same version must fail, not replace")
     assert(SnapshotLog.files(dir, next) == Seq("b.parquet"),
       "loser's publish clobbered the winner's manifest")

@@ -50,4 +50,27 @@ class StatsMemoSpec extends AnyFunSuite {
     val (b, r) = SnapshotTables.statsFor(dir, 1, Nil)
     assert(b == 5000L && r == -1L)
   }
+
+  test("equal IN-sets built in different orders share one memo entry") {
+    import scala.jdk.CollectionConverters._
+    val dir = fresh("canon")
+    SnapshotLog.commitEntries(dir, (0 until 10).map(entry(dir, _)))
+    def memoEntries = SnapshotTables.statsMemo.synchronized {
+      SnapshotTables.statsMemo.keySet.asScala.count(_.startsWith(s"$dir#1#"))
+    }
+    // the same members inserted in two orders, the constraint list
+    // in two orders
+    val a = (0L until 40L).map(_ * 7L)
+    val b = a.reverse
+    val csA = Seq(SnapshotPrune.InSet("k", a), SnapshotPrune.NotNull("k"))
+    val csB = Seq(SnapshotPrune.NotNull("k"), SnapshotPrune.InSet("k", b))
+    assert(csA != csB)
+    val first = SnapshotTables.statsFor(dir, 1, csA)
+    assert(memoEntries == 1)
+    assert(SnapshotTables.statsFor(dir, 1, csB) == first)
+    assert(memoEntries == 1, "equal constraint sets minted two memo keys")
+    // a different set still gets its own entry
+    SnapshotTables.statsFor(dir, 1, Seq(SnapshotPrune.InSet("k", Seq(0L))))
+    assert(memoEntries == 2)
+  }
 }

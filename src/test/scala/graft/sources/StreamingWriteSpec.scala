@@ -119,49 +119,51 @@ class StreamingWriteSpec extends SparkSpec {
       b, 0L, writerId = "qC") == 6, "its replay must no-op")
   }
 
-  test("pre-writer-scoped tables: unknown writers commit; only the " +
-      "declared legacy continuation replays against the global marker") {
+  test("global-marker tables: an unknown writer's epoch 0 commits") {
     import spark.implicits._
-    val dir = fresh("legacy")
-    val f = s"${fresh("legacy-fixture")}/f.parquet"
+    val dir = fresh("globalhw")
+    val f = s"${fresh("globalhw-fixture")}/f.parquet"
     Seq((1L, 10L)).toDF("id", "v").coalesce(1).write
       .mode("overwrite").parquet(f)
     val p = SnapshotLog.dataFiles(f).head
     def files = Seq((p, 1L, SnapshotLog.statBytes(p)))
-    // a legacy table: epochs 0..2 committed under the table-global
-    // marker (the pre-writer-scoped single-writer contract)
+    // epochs 0..2 committed by the "" writer under the table-global
+    // marker
     (0L to 2L).foreach(e =>
       SnapshotStreamingWrite.commitEpoch(dir, None, e, files, ""))
     assert(SnapshotLog.batchHighWater(dir, 3) == 2L)
     // an UNKNOWN writer's epoch 0 is a NEW batch, not a replay: it
-    // must commit (the old behavior silently dropped it against the
-    // global high-water — ADVICE r15 medium)
+    // must commit, never be dropped against the global high-water
     assert(SnapshotStreamingWrite.commitEpoch(dir, None, 0L, files,
       "qNew") == 4)
-    // the DECLARED legacy continuation still gets the upgrade
-    // fallback: its epoch <= global hw no-ops instead of re-committing
-    val dir2 = fresh("legacy2")
-    (0L to 2L).foreach(e =>
-      SnapshotStreamingWrite.commitEpoch(dir2, None, e, files, ""))
-    assert(SnapshotStreamingWrite.commitEpoch(dir2, None, 1L, files,
-      "qCont", legacyWriter = true) == 3, "legacy replay must no-op")
-    assert(SnapshotStreamingWrite.commitEpoch(dir2, None, 3L, files,
-      "qCont", legacyWriter = true) == 4, "its new epochs commit")
     // the foreachBatch door: same contract
     val b = Seq((7L, 70L)).toDF("id", "v")
-    val dir3 = fresh("legacy3")
+    val dir3 = fresh("globalhw3")
     (0L to 2L).foreach(e => graft.streaming.SnapshotCommitSink
       .commitBatch(spark, dir3, b, e))
-    // order matters: once ANY scoped marker exists the table is
-    // post-upgrade and even the declared continuation reads -1 (the
-    // fallback is only sound in the pre-scoped state) — so the
-    // continuation's replay is checked BEFORE the new writer stamps
-    assert(graft.streaming.SnapshotCommitSink.commitBatch(spark, dir3,
-      b, 0L, writerId = "qCont", legacyWriter = true) == 3,
-      "the declared continuation's replay must no-op")
     assert(graft.streaming.SnapshotCommitSink.commitBatch(spark, dir3,
       b, 0L, writerId = "qNew") == 4,
-      "an unknown writer's epoch 0 must commit on a legacy table")
+      "an unknown writer's epoch 0 must commit on a global-marker table")
+  }
+
+  test("a scoped writer's epoch 0 never no-ops the default writer's") {
+    import spark.implicits._
+    val dir = fresh("scopedfirst")
+    val f = s"${fresh("scopedfirst-fixture")}/f.parquet"
+    Seq((1L, 10L)).toDF("id", "v").coalesce(1).write
+      .mode("overwrite").parquet(f)
+    val p = SnapshotLog.dataFiles(f).head
+    // writer qA commits epoch 0 (its entries carry the `batch=0` label)
+    assert(SnapshotStreamingWrite.commitEpoch(dir, None, 0L,
+      Seq((p, 1L, SnapshotLog.statBytes(p))), "qA") == 1)
+    // the default writer's own epoch 0 is a new batch: it must commit
+    val b = Seq((7L, 70L)).toDF("id", "v")
+    assert(graft.streaming.SnapshotCommitSink.commitBatch(spark, dir,
+      b, 0L) == 2, "the default writer's epoch 0 was dropped")
+    assert(SnapshotLog.read(spark, dir, 2).count() == 2L)
+    // and its replay no-ops against its own (global) marker
+    assert(graft.streaming.SnapshotCommitSink.commitBatch(spark, dir,
+      b, 0L) == 2)
   }
 
   test("branch-staged streaming epochs stay off the default read") {
