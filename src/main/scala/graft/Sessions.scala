@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The ONE SparkSession factory for every graft entry point
-  * ([[Verify]], [[Bench]], [[Time]], [[Plans]], [[ScaleProbe]],
-  * [[Explain]], [[OccProbe]]).
+  * ([[Verify]], [[Bench]], [[Prof]], [[Plans]], [[PlanDump]],
+  * [[ScaleProbe]], [[ManifestProbe]]).
   *
   * Rationale: `normalizeEventsTs`'s TIMESTAMP_NTZ→timestamp cast is
   * session-zone-sensitive, so an entry point that forgot to pin

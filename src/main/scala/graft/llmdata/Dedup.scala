@@ -158,9 +158,8 @@ object Dedup {
 
   /** Per-vector RHP band keys (id, band, bucket) from the native
     * 16-plane signature — the single construction shared by the
-    * `sim_rhp_neardup` query, the occupancy diagnostic ([[graft.OccProbe]])
-    * and the geometry specs, so the probe can never drift from the
-    * query it measures.
+    * `sim_rhp_neardup` query and the geometry specs, so a spec can never
+    * drift from the query it checks.
     */
   def rhpBandKeys(embeddings: DataFrame, idCol: String = "vec_id",
       embCol: String = "embedding"): DataFrame =
@@ -194,7 +193,7 @@ object Dedup {
     * 220 → 1,100), the two superlinear wall-time slopes in
     * SCALE_PROBE.json. Buckets over the cap are STAR-PAIRED instead of
     * clique-paired (see [[bandedPairs]]). Defaults clear every measured
-    * oracle/bench geometry (max occupancy by OccProbe: MinHash 3 at
+    * oracle/bench geometry (max per-(band, bucket) occupancy: MinHash 3 at
     * sf0.01 and 5 at sf0.1 vs cap 8 — a bucket of exactly 5 keeps its
     * clique; RHP 57 at sf0.01 and 220 at sf0.1 vs cap 256), so the cap
     * never fires where a DuckDB oracle mirrors the uncapped

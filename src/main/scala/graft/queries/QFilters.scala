@@ -3293,8 +3293,8 @@ object QFilters extends Registry {
     // are never decoded (the fixture records NO manifest stats, so
     // every file survives manifest pruning and all skipping below is
     // parquet's own). `ParquetFilterSpec` pins the skip with the
-    // rawRows counter; ScanBench's selective face measures it; this
-    // row proves the end-to-end answer exact. Shares s65's fixture —
+    // rawRows counter (column-index filtering stays off); this row
+    // proves the end-to-end answer exact. Shares s65's fixture —
     // the same table serves the full-scan and selective-scan faces.
     Q("s66_selective_scan",
       (s0, d) => {

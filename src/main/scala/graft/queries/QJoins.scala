@@ -1050,9 +1050,9 @@ object QJoins extends Registry {
           // the per-round barrier is NOT optional on the broadcast path:
           // without it round r+1's BroadcastExchange re-executes every
           // prior round's join (broadcast collection is a fresh job with
-          // no exchange reuse across rounds — O(k²) round-joins; AbProbe
-          // A/B below). The |V|-row checkpoint is metadata-sized next
-          // to the |E|-row join it saves re-running.
+          // no exchange reuse across rounds — O(k²) round-joins). The
+          // |V|-row checkpoint is metadata-sized next to the |E|-row
+          // join it saves re-running.
           lbl = if (s.conf.get("spark.graft.labelprop.barrier", "true")
               == "true") next.localCheckpoint(true) else next
         }

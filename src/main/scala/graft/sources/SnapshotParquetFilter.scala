@@ -12,9 +12,10 @@ import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
   * this file" into "read only the row groups whose statistics admit
   * the predicate". Manifest pruning drops whole FILES; this layer
   * makes the surviving files' reads SELECTIVE: parquet-mr applies the
-  * predicate against row-group statistics, dictionary pages, and
-  * column indexes at reader-open time (the same machinery Spark's
-  * native source and the Iceberg/Delta readers ride), so a selective
+  * predicate against row-group statistics and dictionary pages at
+  * reader-open time (the same machinery Spark's native source and the
+  * Iceberg/Delta readers ride; column indexes stay off, see
+  * [[SnapshotVectorized.ChunkReader]]), so a selective
   * WHERE over a 100-TB table decodes the row groups that can match
   * instead of every surviving byte.
   *
@@ -44,24 +45,8 @@ private[sources] object SnapshotParquetFilter {
   def build(constraints: Seq[SnapshotPrune.Constraint],
       fileMsg: MessageType,
       fieldFor: String => Option[String]): Option[FilterPredicate] =
-    buildWithFields(constraints, fileMsg, fieldFor).map(_._1)
-
-  /** [[build]] plus the FILE field names the predicate references —
-    * the columns a page-level (column-index) evaluation must see in
-    * the requested projection (a referenced column missing from the
-    * projection evaluates as ALL-NULL there, which would wrongly skip
-    * pages). */
-  def buildWithFields(constraints: Seq[SnapshotPrune.Constraint],
-      fileMsg: MessageType, fieldFor: String => Option[String])
-      : Option[(FilterPredicate, Set[String])] = {
-    val ts = constraints.flatMap(c =>
-      translate(c, fileMsg, fieldFor).map { p =>
-        // translate returning Some implies fieldFor resolved
-        (p, fieldFor(c.col).get)
-      })
-    ts.map(_._1).reduceOption(FilterApi.and)
-      .map(p => (p, ts.map(_._2).toSet))
-  }
+    constraints.flatMap(translate(_, fileMsg, fieldFor))
+      .reduceOption(FilterApi.and)
 
   import scala.jdk.CollectionConverters._
 

@@ -8,7 +8,6 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
-import org.apache.parquet.hadoop.api.ReadSupport
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.{MessageType, PrimitiveType}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -60,11 +59,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * left: the stream refuses COW-rewrite commits on tables without
   * declared keys (their exact U/D split needs the key signature).
   *
-  * Executor-side reads use the parquet example Group API over the
-  * PROJECTED read schema — self-contained (no SparkSession on the
-  * reader path) and column-pruned at the parquet layer. Supported
-  * column types: LONG, INT, DOUBLE, FLOAT, BOOLEAN, STRING — the
-  * manifest-schema subset the kernel's tables use.
+  * Executor-side reads decode COLUMNAR through Spark's vectorized
+  * parquet reader ([[SnapshotVectorized]]) over the PROJECTED read
+  * schema — self-contained (no SparkSession on the reader path) and
+  * column-pruned at the parquet layer; only churn-sized delete files
+  * are read with the parquet example Group API.
   */
 class SnapshotTables extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-snapshot"
@@ -839,10 +838,7 @@ private[sources] class SnapshotScanBuilder(full: StructType, dir: String,
       options.getInt("startingVersion", 0),
       full, required, pruningPreds,
       options.getLong("maxDeltaRows", 1000000L),
-      options.getLong("splitTargetBytes", 128L * 1024 * 1024),
-      options.getBoolean("rowMode", false),
-      options.getBoolean("parquetFilter", true),
-      options.getBoolean("pageFilter", false))
+      options.getLong("splitTargetBytes", 128L * 1024 * 1024))
   }
 }
 
@@ -939,7 +935,7 @@ private[sources] case class SnapFilePartition(chunks: Seq[SnapChunk],
 }
 
 private[sources] object SnapFilePartition {
-  /** the one-whole-file task every non-batch face plans. */
+  /** the one-whole-file task the change stream plans per delta file. */
   def one(path: String, op: String, commit: Long,
       posDeletes: Seq[String] = Nil,
       eqDeletes: Seq[String] = Nil): SnapFilePartition =
@@ -978,24 +974,19 @@ private class SnapshotScan(dir: String, versionAsOf: Option[Int],
       org.apache.spark.sql.connector.expressions.filter.Predicate] =
       Array.empty,
     maxDeltaRows: Long = 1000000L,
-    splitTargetBytes: Long = 128L * 1024 * 1024,
-    // benchmark escape hatch: option("rowMode","true") forces the
-    // row-at-a-time reader so the columnar path's gain is MEASURED,
-    // not asserted (SCALING.md records the head-to-head)
-    rowMode: Boolean = false,
-    // measurement escape hatch: option("parquetFilter","false") keeps
-    // predicates out of the parquet read so the row-group-skipping
-    // gain is measured, not asserted
-    pushParquetFilter: Boolean = true,
-    // opt-in page-level (column-index) filtering: widens the parquet
-    // request by the filter columns so the page evaluation is sound;
-    // default off — the widened decode usually costs more than the
-    // finer-than-stats skip buys (ScanBench records both faces)
-    pageFilter: Boolean = false) extends Scan with Batch
+    splitTargetBytes: Long = 128L * 1024 * 1024) extends Scan with Batch
     with org.apache.spark.sql.connector.read.SupportsReportStatistics
     with org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering
     with org.apache.spark.sql.connector.read.SupportsReportPartitioning {
   override def readSchema(): StructType = required
+
+  /** the ONE snapshot this scan reads, resolved at first use: every
+    * planning face (partitioning, runtime-filter attributes,
+    * statistics, partition planning, reader factory) sees the same
+    * version, so a commit landing mid-plan can never pair one
+    * version's statistics or data with the next one's deletes. */
+  private lazy val version: Int =
+    versionAsOf.getOrElse(SnapshotTables.defaultVersion(dir))
 
   // ---- storage-partitioned joins (SPJ) ------------------------------
   // When EVERY data entry of the pinned snapshot is labeled by the
@@ -1019,12 +1010,11 @@ private class SnapshotScan(dir: String, versionAsOf: Option[Int],
   private lazy val groupCols: Seq[(String, DataType)] = {
     if (changeFeed) Nil
     else {
-      val v = versionAsOf.getOrElse(SnapshotTables.defaultVersion(dir))
       // the cached one-pass summary, not a fresh walk: planning asks
       // for groupCols / filterAttributes / outputPartitioning on every
       // plan of the same pinned version, and the label shape is a
       // label-cardinality-sized fact, not a per-file one
-      val sum = SnapshotLog.labelSummary(dir, v)
+      val sum = SnapshotLog.labelSummary(dir, version)
       sum.sigs match {
         case Seq(cols) if cols.nonEmpty =>
           val typed = cols.map(c =>
@@ -1061,7 +1051,6 @@ private class SnapshotScan(dir: String, versionAsOf: Option[Int],
       : org.apache.spark.sql.connector.read.partitioning.Partitioning =
     groupCols match {
       case cols if cols.nonEmpty =>
-        val v = versionAsOf.getOrElse(SnapshotTables.defaultVersion(dir))
         // n = the distinct TYPED key tuples surviving static AND
         // runtime pruning — the SAME predicate set the task planner
         // prunes by, so the declared count cannot drift from the
@@ -1097,8 +1086,7 @@ private class SnapshotScan(dir: String, versionAsOf: Option[Int],
   override def filterAttributes()
       : Array[org.apache.spark.sql.connector.expressions.NamedReference] = {
     if (changeFeed) return Array.empty
-    val v = versionAsOf.getOrElse(SnapshotTables.defaultVersion(dir))
-    val sum = SnapshotLog.labelSummary(dir, v)
+    val sum = SnapshotLog.labelSummary(dir, version)
     // Spark resolves these against the scan's (column-pruned) OUTPUT —
     // offering a pruned-away column would fail analysis
     val served = required.fieldNames.toSet
@@ -1122,11 +1110,9 @@ private class SnapshotScan(dir: String, versionAsOf: Option[Int],
     * runtime (DPP) re-filter varies after build. Per-scan lazy — no
     * global cache to pin entry lists beyond the parse caches'
     * budgets. */
-  private lazy val dataStatic: Seq[SnapshotLog.FileEntry] = {
-    val v = versionAsOf.getOrElse(SnapshotTables.defaultVersion(dir))
-    SnapshotLog.entries(dir, v).filter(e =>
+  private lazy val dataStatic: Seq[SnapshotLog.FileEntry] =
+    SnapshotLog.entries(dir, version).filter(e =>
       e.kind == "D" && staticConstraints.forall(survives(e, _)))
-  }
 
   override def filter(
       predicates: Array[
@@ -1160,10 +1146,7 @@ private class SnapshotScan(dir: String, versionAsOf: Option[Int],
     // the plan path.
     val (bytes, rows) =
       if (changeFeed) (-1L, -1L)
-      else {
-        val v = versionAsOf.getOrElse(SnapshotTables.defaultVersion(dir))
-        SnapshotTables.statsFor(dir, v, staticConstraints)
-      }
+      else SnapshotTables.statsFor(dir, version, staticConstraints)
     new org.apache.spark.sql.connector.read.Statistics {
       override def sizeInBytes(): java.util.OptionalLong =
         if (bytes < 0L) java.util.OptionalLong.empty()
@@ -1180,8 +1163,7 @@ private class SnapshotScan(dir: String, versionAsOf: Option[Int],
     this
   }
   override def planInputPartitions(): Array[InputPartition] = {
-    val v = versionAsOf.getOrElse(SnapshotTables.defaultVersion(dir))
-    val es = SnapshotLog.entries(dir, v)
+    val es = SnapshotLog.entries(dir, version)
     // BOTH merge-on-read flavors apply inside each partition's reader:
     // POSITION deletes name their file (no join needed), and EQUALITY
     // vectors are churn-sized key sets — each reader loads the vectors
@@ -1193,59 +1175,31 @@ private class SnapshotScan(dir: String, versionAsOf: Option[Int],
     val posDeletes = es.filter(_.kind == "P").map(_.path)
     val rcs = runtimeConstraints
     val data = dataStatic.filter(e => rcs.forall(survives(e, _)))
-    def keyOf(e: SnapshotLog.FileEntry): Option[Seq[Any]] =
-      if (groupCols.isEmpty) None else Some(typedKeyOf(e))
     // the equality vectors applying to each file, resolved seq-scoped
     // at PLAN time (the Iceberg sequence rule) — the reader never sees
     // an out-of-scope vector
     def vecsFor(e: SnapshotLog.FileEntry): Seq[String] =
       eqVecs.filter(_.seq > e.seq).map(_.path).sorted
-    if (rowMode)
-      // benchmark escape hatch: one whole-file task each (row-mode
-      // `_pos` counts physical rows from the file start, so byte
-      // ranges are columnar-only). Tasks still carry their partition
-      // key when the layout is groupable, so SPJ survives.
-      data.map { e =>
-        (keyOf(e) match {
-          case Some(k) => new KeyedSnapFilePartition(
-            Seq(SnapChunk(e.path, 0L, -1L, vecsFor(e))), "", v,
-            posDeletes, k)
-          case None => SnapFilePartition.one(e.path, "", v, posDeletes,
-            vecsFor(e))
-        }): InputPartition
-      }.toArray
-    else
-      // target task size for splitting big files and coalescing small
-      // ones (the Iceberg read.split.target-size idea); the scan
-      // option "splitTargetBytes" tunes it
-      SnapshotScanPlanner.plan(data, v, posDeletes,
-        splitTargetBytes, groupCols, vecsFor, typedKeyOf).toArray
+    // target task size for splitting big files and coalescing small
+    // ones (the Iceberg read.split.target-size idea); the scan option
+    // "splitTargetBytes" tunes it
+    SnapshotScanPlanner.plan(data, version, posDeletes,
+      splitTargetBytes, groupCols, vecsFor, typedKeyOf).toArray
   }
 
-  /** every BATCH read is COLUMNAR: batches come straight from Spark's
-    * vectorized parquet reader, position deletes apply as a per-batch
-    * row-index mask, equality vectors as per-batch KEY PROBES over the
-    * same cached churn-sized tuple sets the row path uses, and
-    * whole-stage codegen above consumes ColumnarBatch input — the
-    * decode constant a 100-TB scan pays on a row-at-a-time path.
-    * Change-feed reads (op-stamped deltas) and the `rowMode` bench
-    * escape hatch keep the row reader. */
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val v = versionAsOf.getOrElse(SnapshotTables.defaultVersion(dir))
-    // the pushed predicates ride to the executors as the SAME parsed
-    // constraints the manifest pruning used (runtime/DPP sets included
-    // when populated by now) — each ChunkReader re-translates them
-    // against ITS file's schema into a parquet FilterPredicate.
-    // Row-mode reads never push: the row reader derives `_pos` by
-    // counting rows from the file start, which group skipping breaks.
-    val cs =
-      if (pushParquetFilter && !rowMode)
-        staticConstraints ++ runtimeConstraints
-      else Nil
-    new SnapshotReaderFactory(required, SnapshotLog.renamesOf(dir, v),
-      columnar = !changeFeed && !rowMode, constraints = cs,
-      pageFilter = pageFilter)
-  }
+  /** the ONE batch read path, COLUMNAR: batches come straight from
+    * Spark's vectorized parquet reader, position deletes apply as a
+    * per-batch row-index mask, equality vectors as per-batch KEY
+    * PROBES over cached churn-sized tuple sets, and whole-stage
+    * codegen above consumes ColumnarBatch input. The pushed predicates
+    * always ride to the executors as the SAME parsed constraints the
+    * manifest pruning used (runtime/DPP sets included when populated
+    * by now) — each ChunkReader re-translates them against ITS file's
+    * schema into a parquet FilterPredicate (row-group statistics and
+    * dictionaries; page-level column indexes stay off). */
+  override def createReaderFactory(): PartitionReaderFactory =
+    new SnapshotReaderFactory(required, SnapshotLog.renamesOf(dir, version),
+      staticConstraints ++ runtimeConstraints)
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
     require(changeFeed,
@@ -1486,7 +1440,7 @@ private[sources] class SnapshotChangeStream(dir: String,
   // answers columnar, so a mixed multi-commit range can never trip
   // Spark's no-mixing rule
   override def createReaderFactory(): PartitionReaderFactory =
-    new SnapshotReaderFactory(required, columnar = true)
+    new SnapshotReaderFactory(required)
   override def commit(
       end: org.apache.spark.sql.connector.read.streaming.Offset): Unit = ()
   override def stop(): Unit = ()
@@ -1514,8 +1468,8 @@ private[sources] final case class VecSet(keyCols: Seq[String],
     }
 }
 
-/** equality-vector decode shared by the ROW and COLUMNAR readers —
-  * one canonical form, one cache, no drift between the paths. */
+/** equality-vector decode: one canonical form and one per-executor
+  * cache for every reader and every task. */
 private[sources] object EqVectors {
   /** load one equality-delete file into a key-tuple set — churn-sized
     * by the delete contract, so a per-executor in-memory set is
@@ -1554,7 +1508,7 @@ private[sources] object EqVectors {
     * nothing and deleted rows resurrect. A truly ABSENT value
     * (missing field / null) stays null: a null key matches nothing
     * under the anti-join contract. */
-  def canonValue(g: Group, field: String): Any = {
+  private def canonValue(g: Group, field: String): Any = {
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     if (!g.getType.containsField(field) ||
         g.getFieldRepetitionCount(field) == 0) null
@@ -1645,11 +1599,13 @@ private object DeleteFileCaches {
   }
 }
 
-/** Executor-side parquet Group reader over the PROJECTED read schema:
-  * requested columns present in the file are read (column-pruned at
-  * the parquet layer), absent ones (a delete vector's non-key columns,
-  * a column added after this file was written) are null, and the
-  * `_op` / `_commit` stamps come from the partition, not the file.
+/** Executor-side COLUMNAR reader over the PROJECTED read schema (every
+  * partition shape answers in batches — [[SnapshotVectorized]] for
+  * file chunks, one literal batch for plan-time deltas): requested
+  * columns present in the file are read (column-pruned at the parquet
+  * layer), absent ones (a delete vector's non-key columns, a column
+  * added after this file was written) are null, and the `_op` /
+  * `_commit` stamps come from the partition, not the file.
   *
   * RENAME-AWARE: `renames` is the manifest's historical-name →
   * canonical-name map — a file written before a rename serves the
@@ -1658,9 +1614,9 @@ private object DeleteFileCaches {
   * door without a rewrite.
   *
   * EQUALITY-VECTOR-AWARE: a partition's applicable vectors (resolved
-  * seq-scoped at plan time) are loaded once per task as key-tuple hash
-  * sets — churn-sized by the delete contract — and rows whose tuple
-  * matches any vector are skipped. Values are canonicalized (ints
+  * seq-scoped at plan time) are loaded once per executor as key-tuple
+  * hash sets — churn-sized by the delete contract — and rows whose
+  * tuple matches any vector are masked out. Values are canonicalized (ints
   * widen to long, floats to double, binary to string) so a vector
   * written against a widened schema still matches rows in pre-widen
   * files. SQL-null semantics: a null key never matches (the same
@@ -1668,17 +1624,13 @@ private object DeleteFileCaches {
   */
 private class SnapshotReaderFactory(required: StructType,
     renames: Map[String, String] = Map.empty,
-    columnar: Boolean = false,
-    constraints: Seq[SnapshotPrune.Constraint] = Nil,
-    pageFilter: Boolean = false)
+    constraints: Seq[SnapshotPrune.Constraint] = Nil)
     extends PartitionReaderFactory {
 
-  /** COLUMNAR reads whenever the scan planned them: every partition
-    * shape answers alike — Spark refuses mixed row/columnar
-    * partitions within one scan. */
+  /** every partition shape answers columnar — Spark refuses mixed
+    * row/columnar partitions within one scan. */
   override def supportColumnarReads(partition: InputPartition): Boolean =
-    columnar && (partition.isInstanceOf[SnapFilePartition] ||
-      partition.isInstanceOf[SnapRowsPartition])
+    true
 
   override def createColumnarReader(partition: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
@@ -1749,7 +1701,7 @@ private class SnapshotReaderFactory(required: StructType,
           cur = new SnapshotVectorized.ChunkReader(c, p.op, p.commit,
             if (p.posDeletes.isEmpty) null
             else deletedPositions(c.path, p.posDeletes),
-            required, renames, constraints, pageFilter)
+            required, renames, constraints)
         }
         if (cur.nextBatch()) true
         else { cur.close(); cur = null; next() }
@@ -1800,197 +1752,6 @@ private class SnapshotReaderFactory(required: StructType,
 
   override def createReader(
       partition: InputPartition): PartitionReader[InternalRow] =
-    partition match {
-      case p: SnapRowsPartition => literalRowsReader(p)
-      case p: SnapFilePartition => fileReader(p)
-    }
-
-  /** serves a plan-time-computed delta (key tuples + op): key columns
-    * populated, non-key data columns null — the same shape the D rows
-    * of an equality vector already have. */
-  private def literalRowsReader(
-      p: SnapRowsPartition): PartitionReader[InternalRow] =
-    new PartitionReader[InternalRow] {
-      private var i = -1
-      override def next(): Boolean = { i += 1; i < p.rows.length }
-      override def get(): InternalRow = {
-        val (keyVals, op) = p.rows(i)
-        val vals = required.fields.map { f =>
-          f.name match {
-            case "_op" => UTF8String.fromString(op)
-            case "_commit" => p.commit
-            case n if p.keyCols.contains(n) =>
-              p.keyCols.indexOf(n) match {
-                case k => keyVals(k) match {
-                  case s: String => UTF8String.fromString(s)
-                  case other => other
-                }
-              }
-            case _ => null
-          }
-        }
-        new GenericInternalRow(vals.asInstanceOf[Array[Any]])
-      }
-      override def close(): Unit = ()
-    }
-
-  private def loadVector(path0: String): VecSet = EqVectors.load(path0)
-
-  private def canonValue(g: Group, field: String): Any =
-    EqVectors.canonValue(g, field)
-
-  /** a multi-chunk partition read row-by-row: chunks are served in
-    * sequence (each a WHOLE file in row mode — byte-range splits are
-    * planned only for the columnar path, where parquet's own row
-    * indexes keep `_pos` exact under ranges). */
-  private def fileReader(
-      part: SnapFilePartition): PartitionReader[InternalRow] = {
-    val its = part.chunks.iterator
-    new PartitionReader[InternalRow] {
-      private var cur: PartitionReader[InternalRow] = _
-      @annotation.tailrec
-      override def next(): Boolean = {
-        if (cur == null) {
-          if (!its.hasNext) return false
-          cur = chunkRowReader(its.next(), part.op, part.commit,
-            part.posDeletes)
-        }
-        if (cur.next()) true
-        else { cur.close(); cur = null; next() }
-      }
-      override def get(): InternalRow = cur.get()
-      override def close(): Unit = if (cur != null) cur.close()
-    }
-  }
-
-  private def chunkRowReader(chunk: SnapChunk, op: String, commit: Long,
-      posDeletes: Seq[String]): PartitionReader[InternalRow] = {
-    require(chunk.start == 0L && chunk.length < 0L,
-      "row-mode readers serve whole files; byte-range chunks are " +
-        "columnar-only (physical row positions need parquet row indexes)")
-    val file = chunk.path
-    val eqDeletes = chunk.eqDeletes
-    val conf = new Configuration()
-    val fileSchema = SnapshotTables.footerSchema(file)
-    import scala.jdk.CollectionConverters._
-    val fileFields = fileSchema.getFields.asScala.map(_.getName).toSet
-    // canonical column name -> the FILE's field for it: the canonical
-    // name itself when present, else the historical name the rename
-    // map says this column used to carry (pre-rename files serve the
-    // renamed column from their old field)
-    def fieldFor(canonical: String): Option[String] =
-      if (fileFields(canonical)) Some(canonical)
-      else renames.collectFirst {
-        case (old, nw) if nw == canonical && fileFields(old) => old
-      }
-    val dataNames = required.fields.map(_.name)
-      .filter(n => n != "_op" && n != "_commit" &&
-        n != SnapshotDelta.FileCol && n != SnapshotDelta.PosCol)
-    // applicable equality vectors, loaded once per task (plan-time
-    // seq-scoping guarantees every one of these covers this file)
-    val vecs = eqDeletes.map(loadVector)
-    // vector key columns may be pruned from the OUTPUT but are still
-    // needed to evaluate membership — widen the parquet projection,
-    // never the emitted row
-    val vecFields = vecs.flatMap(_.keyCols)
-      .flatMap(kc => fieldFor(renames.getOrElse(kc, kc))).distinct
-    val projNames =
-      (dataNames.flatMap(fieldFor(_)) ++ vecFields).distinct.toSet
-    val wanted = fileSchema.getFields.asScala
-      .filter(f => projNames.contains(f.getName))
-    // an all-pruned projection (count(*)) still needs row COUNT — fall
-    // back to the narrowest single column
-    val proj = new MessageType(fileSchema.getName,
-      (if (wanted.nonEmpty) wanted
-       else fileSchema.getFields.asScala.take(1)).asJava)
-    conf.set(ReadSupport.PARQUET_READ_SCHEMA, proj.toString)
-    val reader = ParquetReader.builder(new GroupReadSupport(), new Path(file))
-      .withConf(conf).build()
-    val dead =
-      if (posDeletes.isEmpty) new java.util.HashSet[java.lang.Long]()
-      else deletedPositions(file, posDeletes)
-    val fileUtf8 = UTF8String.fromString(file)
-    // per-vector FILE FIELDS resolved once per reader, not per row; a
-    // vector whose key column this file lacks is a no-op here (every
-    // row tuple would hold a null, and null never matches) — dropped
-    // up front so the row loop never touches it
-    val activeVecs: Array[(Array[String], java.util.HashSet[Seq[Any]])] =
-      vecs.flatMap { v =>
-        val fields = v.keyCols.map(kc => fieldFor(renames.getOrElse(kc, kc)))
-        if (fields.exists(_.isEmpty)) None
-        else Some((fields.map(_.get).toArray, v.tuples))
-      }.toArray
-    // this row's tuple for one vector, read under the same canonical
-    // widening the vector's own rows got
-    def vecDeleted(g: Group): Boolean = {
-      var i = 0
-      while (i < activeVecs.length) {
-        val (fs, set) = activeVecs(i)
-        val t = new Array[Any](fs.length)
-        var j = 0
-        var hasNull = false
-        while (j < fs.length && !hasNull) {
-          val v = canonValue(g, fs(j))
-          if (v == null) hasNull = true else t(j) = v
-          j += 1
-        }
-        // ArraySeq and the stored List hash/compare alike (Seq equality)
-        if (!hasNull && set.contains(scala.collection.immutable.ArraySeq
-            .unsafeWrapArray(t))) return true
-        i += 1
-      }
-      false
-    }
-    new PartitionReader[InternalRow] {
-      private var cur: Group = _
-      private var pos = -1L // physical row index of `cur` in the file
-      override def next(): Boolean = {
-        cur = reader.read(); pos += 1
-        while (cur != null && (dead.contains(pos) ||
-            (activeVecs.nonEmpty && vecDeleted(cur)))) {
-          cur = reader.read(); pos += 1
-        }
-        cur != null
-      }
-      override def get(): InternalRow = {
-        val vals = required.fields.map { f =>
-          f.name match {
-            case "_op" => UTF8String.fromString(op)
-            case "_commit" => commit
-            case SnapshotDelta.FileCol => fileUtf8
-            case SnapshotDelta.PosCol => pos
-            case n => fieldFor(n) match {
-              case Some(ff) if cur.getFieldRepetitionCount(ff) > 0 =>
-                readValue(cur, ff, f.dataType)
-              case _ => null
-            }
-          }
-        }
-        new GenericInternalRow(vals.asInstanceOf[Array[Any]])
-      }
-      override def close(): Unit = reader.close()
-    }
-  }
-
-  /** read one Group field as the REQUESTED Spark type, widening from
-    * the file's physical type where the schemas diverged (an int file
-    * column serving a long canonical column after a widen). */
-  private def readValue(g: Group, name: String, t: DataType): Any = {
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    val phys = g.getType.getType(name).asPrimitiveType().getPrimitiveTypeName
-    (t, phys) match {
-      case (LongType, INT64) => g.getLong(name, 0)
-      case (LongType, INT32) => g.getInteger(name, 0).toLong
-      case (IntegerType, INT32) => g.getInteger(name, 0)
-      case (DoubleType, DOUBLE) => g.getDouble(name, 0)
-      case (DoubleType, FLOAT) => g.getFloat(name, 0).toDouble
-      case (FloatType, FLOAT) => g.getFloat(name, 0)
-      case (BooleanType, BOOLEAN) => g.getBoolean(name, 0)
-      case (StringType, BINARY) =>
-        UTF8String.fromBytes(g.getBinary(name, 0).getBytes)
-      case (want, have) => throw new IllegalArgumentException(
-        s"graft-snapshot: cannot serve column $name as $want from " +
-          s"parquet $have")
-    }
-  }
+    throw new UnsupportedOperationException(
+      "snapshot partitions read columnar")
 }

@@ -15,13 +15,13 @@ import org.apache.spark.unsafe.types.UTF8String
 /** The VECTORIZED read path of the `graft-snapshot` scan: each chunk
   * decodes through Spark's own `VectorizedParquetRecordReader` into
   * `ColumnarBatch`es — page-level columnar decode, lazy decompression,
-  * and batch input to whole-stage codegen above the scan — instead of
-  * the row-at-a-time parquet `Group` loop (one `Group` + one
-  * `GenericInternalRow` + per-field dispatch PER ROW, a 5-20x constant
-  * on a scan-bound 100-TB read; the Iceberg/Delta connectors made the
-  * same move for the same reason).
+  * and batch input to whole-stage codegen above the scan. It is the
+  * scan's only batch read path: a row-at-a-time parquet `Group` loop
+  * (one `Group` + one `GenericInternalRow` + per-field dispatch PER
+  * ROW) is a 5-20x constant on a scan-bound 100-TB read, and the
+  * Iceberg/Delta connectors made the same move for the same reason.
   *
-  * What the row path expressed per row, this path expresses per batch:
+  * Per-row concerns are expressed per batch:
   *
   *  - COLUMN PRUNING and RENAME/WIDEN evolution ride the requested
   *    Catalyst schema: each required column is requested under the
@@ -46,11 +46,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * planner's ranges partition a file without consulting its footer.
   *
   *  - EQUALITY vectors probe PER BATCH: the chunk's applicable vectors
-  *    (seq-scoped at plan time) load once per executor from the same
-  *    cache the row path uses, key columns ride the parquet request at
-  *    canonical widened types (never the emitted row), and suppressed
-  *    rows drop out of the same live-row mapping the position mask
-  *    uses — a vectored 100-TB table reads columnar too.
+  *    (seq-scoped at plan time) load once per executor from the
+  *    shared vector cache ([[EqVectors]]), key columns ride the
+  *    parquet request at canonical widened types (never the emitted
+  *    row), and suppressed rows drop out of the same live-row mapping
+  *    the position mask uses — a vectored 100-TB table reads columnar
+  *    too.
   */
 private[graft] object SnapshotVectorized {
   private val Capacity = 4096
@@ -61,21 +62,20 @@ private[graft] object SnapshotVectorized {
     * statistics veto are never decoded and this counter stays below
     * the table's physical row count. Process-local (exact under
     * local[n]; a per-executor sample under a real cluster), read by
-    * specs and the scan bench. */
+    * specs — the one place pushdown is measured. */
   private[graft] val rawRows = new java.util.concurrent.atomic.LongAdder
 
   /** vectorized reader over ONE chunk. `dead` is the chunk's file's
     * deleted physical positions (null when no position delete applies);
-    * the chunk's equality vectors probe per batch over the same cached
-    * key-tuple sets the row path uses; `constraints` are the scan's
-    * pushed predicates, re-translated here against THIS file's schema
-    * into a parquet FilterPredicate (row-group statistics + dictionary
-    * + column-index filtering at reader open). */
+    * the chunk's equality vectors probe per batch over the cached
+    * key-tuple sets; `constraints` are the scan's pushed predicates,
+    * re-translated here against THIS file's schema into a parquet
+    * FilterPredicate (row-group statistics + dictionary filtering at
+    * reader open; column-index filtering stays off). */
   final class ChunkReader(chunk: SnapChunk, op: String, commit: Long,
       dead: java.util.HashSet[java.lang.Long],
       required: StructType, renames: Map[String, String],
-      constraints: Seq[SnapshotPrune.Constraint] = Nil,
-      pageFilter: Boolean = false) {
+      constraints: Seq[SnapshotPrune.Constraint] = Nil) {
     import scala.jdk.CollectionConverters._
 
     private val file = chunk.path
@@ -157,56 +157,8 @@ private[graft] object SnapshotVectorized {
       dataFieldPos ++ probeExtra.map(_.name)
         .zipWithIndex.map { case (n, i) => n -> (dataReq.size + i) }
 
-    private val filterBuilt = SnapshotParquetFilter.buildWithFields(
+    private val filterPred = SnapshotParquetFilter.build(
       constraints, fileMsg, fieldFor)
-
-    // ---- page-level filtering opt-in (`pageFilter` scan option) -----
-    // Column-index (page) evaluation runs against the REQUESTED
-    // projection, so every filter-referenced column must ride it:
-    // extra requested-but-never-emitted columns, the probeExtra shape.
-    // Only annotation-free primitives (and string-annotated binary)
-    // widen — anything else refuses, and the page level stays off for
-    // the chunk unless EVERY referenced field is served (a missing one
-    // evaluates all-null there and would wrongly skip pages). The
-    // price is real decode of the widened columns on every surviving
-    // page; ScanBench records both faces, default off.
-    private def pageSparkType(
-        t: org.apache.parquet.schema.Type): Option[DataType] = {
-      if (!t.isPrimitive) return None
-      val p = t.asPrimitiveType()
-      val ann = p.getLogicalTypeAnnotation
-      import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-      p.getPrimitiveTypeName match {
-        case INT64 if ann == null => Some(LongType)
-        case INT32 if ann == null => Some(IntegerType)
-        case DOUBLE => Some(DoubleType)
-        case FLOAT => Some(FloatType)
-        case BOOLEAN => Some(BooleanType)
-        case BINARY if ann != null && ann.isInstanceOf[
-          org.apache.parquet.schema.LogicalTypeAnnotation
-            .StringLogicalTypeAnnotation] => Some(StringType)
-        case _ => None
-      }
-    }
-    private val filterExtra: Seq[StructField] =
-      if (!pageFilter) Nil
-      else {
-        val served = (dataReq.map(_._2.name) ++
-          probeExtra.map(_.name)).toSet
-        filterBuilt.map(_._2).getOrElse(Set.empty[String])
-          .filterNot(served).toSeq.sorted
-          .flatMap { f =>
-            fileMsg.getFields.asScala.find(_.getName == f)
-              .flatMap(pageSparkType)
-              .map(dt => StructField(f, dt, nullable = true))
-          }
-      }
-    private val pageFilterOn: Boolean = pageFilter && filterBuilt.exists {
-      case (_, fs) =>
-        val served = (dataReq.map(_._2.name) ++ probeExtra.map(_.name) ++
-          filterExtra.map(_.name)).toSet
-        fs.subsetOf(served)
-    }
 
     private val needRowIdx =
       deadMasked || required.fieldNames.contains(posName)
@@ -217,21 +169,18 @@ private[graft] object SnapshotVectorized {
     // writable for the per-batch generator — a required missing
     // column is a loud error instead
     private val requested = StructType(dataReq.map(_._2) ++
-      probeExtra ++ filterExtra ++
+      probeExtra ++
       (if (needRowIdx)
         Seq(StructField(ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME,
           LongType, nullable = true))
       else Nil))
-    private val rowIdxPos =
-      dataReq.size + probeExtra.size + filterExtra.size
+    private val rowIdxPos = dataReq.size + probeExtra.size
 
     // the constant stamps, appended by the reader AFTER the requested
     // columns (its partition-value mechanism)
     private val constFields: Seq[StructField] =
       required.fields.toSeq.filter(f => metaNames(f.name))
     private val constBase = requested.size
-
-    private val filterPred = filterBuilt.map(_._1)
 
     // PRE-SKIP: when the pushed filter already excludes EVERY row
     // group of this chunk (a statistics-level check over the footer
@@ -272,28 +221,24 @@ private[graft] object SnapshotVectorized {
       conf.setBoolean(SQLConf.PARQUET_FIELD_ID_READ_ENABLED.key, false)
       // PREDICATE PUSHDOWN into the parquet read: the reader's open
       // path (HadoopReadOptions) picks the filter up from the conf and
-      // serves only the row groups / pages whose statistics,
-      // dictionaries or column indexes admit it. Row indexes stay
-      // physical under skipping (each surviving group carries its true
-      // row-index offset), so `_pos` and the delete masks are exact.
+      // serves only the row groups whose statistics or dictionaries
+      // admit it. Row indexes stay physical under skipping (each
+      // surviving group carries its true row-index offset), so `_pos`
+      // and the delete masks are exact.
       // Conservative by construction: Spark re-applies every non-exact
       // predicate above the scan.
       filterPred.foreach { fp =>
           org.apache.parquet.hadoop.ParquetInputFormat
             .setFilterPredicate(conf, fp)
-          // column-index (page-level) filtering evaluates against the
-          // REQUESTED projection and treats a filter column missing
-          // from it as ALL-NULL — a pruned-output query (count(*)
-          // WHERE ok = …) would return zero rows. Row-group statistics
-          // and dictionary filtering evaluate against the FILE's own
-          // metadata, projection-independent — keep those; enable the
-          // page level only under the `pageFilter` opt-in AND when
-          // every referenced column rides the (widened) projection.
-          // Default off: the widened columns pay real decode on every
-          // surviving page for a finer skip that stats rarely miss
-          // (ScanBench records both faces).
+          // column-index (page-level) filtering MUST stay off (parquet
+          // defaults it ON): it evaluates against the REQUESTED
+          // projection and treats a filter column missing from it as
+          // ALL-NULL — a pruned-output query (count(*) WHERE ok = …)
+          // would return zero rows. Row-group statistics and
+          // dictionary filtering evaluate against the FILE's own
+          // metadata, projection-independent — those stay on.
           conf.setBoolean(org.apache.parquet.hadoop.ParquetInputFormat
-            .COLUMN_INDEX_FILTERING_ENABLED, pageFilterOn)
+            .COLUMN_INDEX_FILTERING_ENABLED, false)
         }
       val split = new FileSplit(new Path(file), chunk.start, chunkLen,
         Array.empty[String])

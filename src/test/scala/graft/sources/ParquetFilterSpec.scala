@@ -12,13 +12,14 @@ import org.apache.spark.sql.functions._
   *
   *  1. a selective equality over a sorted column decodes a small
   *     fraction of the file (row-group skipping), result exact;
-  *  2. option("parquetFilter","false") restores the full decode
-  *     (the measurement escape hatch), same result;
-  *  3. group skipping composes with position deletes and `_pos` stays
+  *  2. group skipping composes with position deletes and `_pos` stays
   *     the PHYSICAL row index;
-  *  4. string range predicates push (byte-order = Catalyst order);
-  *  5. a renamed + widened column filters through the FILE's old
-  *     field name at the FILE's physical type.
+  *  3. string range predicates push (byte-order = Catalyst order);
+  *  4. a renamed + widened column filters through the FILE's old
+  *     field name at the FILE's physical type;
+  *  5. page-level (column-index) filtering stays OFF: with it on, a
+  *     projection without the filter column would read that column as
+  *     all-null and drop every row.
   */
 class ParquetFilterSpec extends SparkSpec {
 
@@ -66,23 +67,6 @@ class ParquetFilterSpec extends SparkSpec {
     assert(raw < n / 4,
       s"a one-row equality over a sorted $n-row file must skip most " +
         s"row groups (decoded $raw raw rows)")
-  }
-
-  test("parquetFilter=false restores the full decode, same answer") {
-    val dir = fresh("off")
-    val n = 100000L
-    sortedTable(dir, n)
-    def q(push: Boolean) = spark.read.format("graft-snapshot")
-      .option("path", dir).option("parquetFilter", push.toString).load()
-      .filter(col("id") >= 90000L)
-    var cOn = 0L; var cOff = 0L
-    val rawOn = decoded { cOn = q(push = true).count() }
-    val rawOff = decoded { cOff = q(push = false).count() }
-    assert(cOn == 10000L && cOff == 10000L)
-    assert(rawOff == n,
-      s"with pushdown off, every raw row decodes (got $rawOff)")
-    assert(rawOn < n / 2,
-      s"with pushdown on, the leading groups skip (decoded $rawOn)")
   }
 
   test("group skipping composes with position deletes; _pos physical") {
@@ -219,12 +203,12 @@ class ParquetFilterSpec extends SparkSpec {
         s"(decoded $raw)")
   }
 
-  test("pageFilter opt-in skips pages inside a row group; result exact") {
+  test("column-index filtering stays off; pruned outputs stay exact") {
     import spark.implicits._
     val dir = fresh("page")
     val n = 200000L
     // ONE row group (big block), many SMALL pages: stats-level
-    // skipping has nothing to cut, the column index is the only lever
+    // skipping has nothing to cut, only a column index could skip here
     (0L until n).map(i => (i, s"s${"%07d".format(i)}", i % 7))
       .toDF("id", "s", "g")
       .coalesce(1).write
@@ -236,32 +220,20 @@ class ParquetFilterSpec extends SparkSpec {
     SnapshotLog.commitEntries(dir, Seq(
       SnapshotLog.FileEntry(f, "D", "", Map.empty, seq = 1L,
         rows = n, bytes = SnapshotLog.statBytes(f))))
-    def q(page: Boolean) = spark.read.format("graft-snapshot")
-      .option("path", dir).option("pageFilter", page.toString).load()
+    def q = spark.read.format("graft-snapshot").option("path", dir).load()
       .filter(col("id").between(50000L, 50100L))
-    // default (page level off): the single group's stats admit — full
-    // decode. The page-level path must return the identical answer
-    // even on a PRUNED projection that drops the filter column (the
-    // all-null hazard the projection widening exists to close).
-    var defRows: Seq[String] = Nil
-    var pageRows: Seq[String] = Nil
-    val rawDef = decoded {
-      defRows = q(page = false).select("s").as[String].collect().toSeq
-    }
-    val rawPage = decoded {
-      pageRows = q(page = true).select("s").as[String].collect().toSeq
-    }
-    assert(defRows.size == 101 && pageRows.sorted == defRows.sorted)
-    assert(rawDef == n,
-      s"one row group: stats-level skipping must decode all (got $rawDef)")
-    assert(rawPage < n / 4,
-      s"pageFilter must skip non-matching pages (decoded $rawPage)")
-    // count(*) shape: zero output columns, filter column ridden in
-    var cDef = 0L; var cPage = 0L
-    val rawCnt = decoded { cPage = q(page = true).count() }
-    cDef = q(page = false).count()
-    assert(cDef == 101L && cPage == 101L)
-    assert(rawCnt < n / 4,
-      s"pruned-output pageFilter must stay exact AND skip (decoded $rawCnt)")
+    // outputs that leave out the filter column: a projection and the
+    // zero-column count(*) shape
+    var rows: Seq[String] = Nil
+    val rawSel = decoded { rows = q.select("s").as[String].collect().toSeq }
+    assert(rows.sorted ==
+      (50000L to 50100L).map(i => s"s${"%07d".format(i)}"))
+    var cnt = -1L
+    val rawCnt = decoded { cnt = q.count() }
+    assert(cnt == 101L)
+    // the single group's stats admit the range, and no page is skipped
+    assert(rawSel == n && rawCnt == n,
+      s"one row group, page level off: every row decodes " +
+        s"(got $rawSel / $rawCnt of $n)")
   }
 }
