@@ -11,15 +11,15 @@ import scala.collection.mutable
   *  - TRANSIENT: per-query scratch (e.g. the range-partitioned frame in
   *    [[operators.PrefixSum]]). The harness ([[Verify]]/[[Bench]]) calls
   *    [[clearTransient]] after each query's result is materialized.
-  *  - SHARED: cross-query memos (e.g. the corrected trade frame feeding
-  *    all four `tp_*` queries) — built once, reused, released by
+  *  - SHARED: cross-query memos (e.g. the flagged Stage-0 rows feeding
+  *    six `tp_*`/`s4` queries) — built once, reused, released by
   *    [[clearAll]] at end of run.
   */
 object Caches {
 
   /** Materialization barrier for iterative and memoized intermediates
-    * (the CC loops' per-round lineage truncation, the `corrected` /
-    * `cleaned` / simhash-pair memos).
+    * (the CC loops' per-round lineage truncation, the Stage-0 / simhash-pair
+    * memos).
     *
     * Default: `localCheckpoint` — correct and fast on one JVM, but the
     * blocks die with their executor. With `spark.graft.checkpoint.dir`
@@ -92,7 +92,9 @@ object Caches {
     synchronized { memoHitSinceReset = true }
 
   /** Build-once memo of a persisted frame shared across queries within one
-    * session.
+    * session. The build's jobs carry the memo key as their job description
+    * (the caller's description is restored afterwards), so a run's jobs
+    * say which memo they materialize.
     */
   def memo(session: org.apache.spark.sql.SparkSession, key: String)(
       build: => DataFrame): DataFrame = synchronized {
@@ -102,8 +104,17 @@ object Caches {
       nm
     }
     if (m.contains(key)) memoHitSinceReset = true
-    m.getOrElseUpdate(key, build)
+    m.getOrElseUpdate(key, {
+      val sc = session.sparkContext
+      val previous = sc.getLocalProperty(jobDescription)
+      sc.setJobDescription(key)
+      try build
+      finally sc.setLocalProperty(jobDescription, previous)
+    })
   }
+
+  /** the local property `SparkContext.setJobDescription` sets */
+  private val jobDescription = "spark.job.description"
 
   def clearTransient(): Unit = synchronized {
     transientFrames.foreach(_.unpersist(false))

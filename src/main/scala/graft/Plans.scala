@@ -5,15 +5,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Plan-evidence artifact generator: writes PLANS.md with, for every batch
   * query, the operator/exchange/codegen-span counts from the formatted
   * physical plan, plus the full plan TREES for the headline chains — the
-  * driver-visible proof behind the "one id-shuffle, 3 exchanges" claims in
+  * driver-visible proof behind the "one id-shuffle per pass" claims in
   * `QTracePipeline` and the "linear + collisions" claims in the LSH tiers.
   *
   *   tools/run.sh graft.Plans [sfDir] [outFile]
   *
-  * The tp_* chain is explained over the RAW DAG (`cleanedDag` /
-  * `correctedDag` / `dailyPanelDag`) — the memoized production path scans
-  * a localCheckpoint, which would hide the upstream exchanges this
-  * artifact exists to pin.
+  * The tp_* trees are explained over the RAW DAG (`cleanedDag` /
+  * `flaggedFrom` / `dailyPanel`) — the memo-served tp_* rows scan a
+  * localCheckpoint, which would hide the upstream exchanges this artifact
+  * exists to pin.
   */
 object Plans {
 
@@ -94,27 +94,23 @@ object Plans {
       "un-memoized pair pipeline for the production checkpoint scan.)\n\n"
 
     // ---- full trees for the headline chains --------------------------
-    import graft.queries.QTracePipeline
-    val cleanedRaw = QTracePipeline.cleanedDag(spark, sfDir)
-    val correctedRaw = QTracePipeline.correctedDag(cleanedRaw)
-    val fullRaw = QTracePipeline.dailyPanelDag(correctedRaw)
+    import graft.queries.{QTracePipeline, Trades}
     val headline: Seq[(String, String, () => DataFrame)] = Seq(
       ("tp_clean_chain (raw DAG)",
-        "J3/J7/J9 cleaning as window flags — the 3-exchange claim",
-        () => cleanedRaw),
-      ("tp_corrected (raw DAG)",
-        "cleaning + decimal-shift correction — one id-shuffle into the " +
-          "sorted per-id anchor pass (MapGroups), no join back",
-        () => correctedRaw),
-      ("tp_full_panel (raw DAG, end-to-end)",
-        "clean → shift → bounce-back anti-join → daily panel (entry()). " +
-          "The raw DAG's exchange count is the WHY behind the memoized " +
-          "localCheckpoint of `corrected`: Spark has no plan-subtree CSE, " +
-          "so the panel's scan side, its anti-join side and the bounce-back " +
-          "flags each re-walk the whole clean+shift chain here — the " +
-          "production path runs that chain ONCE and consumers scan " +
-          "checkpoint blocks (at cluster scale: a staging table).",
-        () => fullRaw),
+        "J3/J7/J9 cleaning alone: the Stage-0 sorted pass per bond " +
+          "(MapGroups) running only the Dick-Nielsen step — one id-shuffle",
+        () => QTracePipeline.cleanedDag(spark, sfDir)),
+      ("tp_stage0 (raw DAG)",
+        "the flagged rows the memo-served tp_* queries read: ONE id-shuffle " +
+          "into the sorted pass per bond (clean, shift, bounce-back flags), " +
+          "no window, no join",
+        () => QTracePipeline.flaggedFrom(Trades.df(spark, sfDir))),
+      ("tp_full_panel (end-to-end)",
+        "clean → shift → bounce-back → daily panel (entry()), the " +
+          "production DAG itself: the pass, the filtered_error = 0 filter, " +
+          "the dvol projection and the (id, dt) aggregate — two exchanges, " +
+          "no barrier, no join",
+        () => QTracePipeline.dailyPanel(spark, sfDir)),
       ("tp_stage1_panel (composed Stage-1 chain)",
         "panel stack+dedup → FISD merge → closed-form analytics → as-of " +
           "ratings AND amounts in ONE pass (AsOfJoin.backwardMulti: look " +

@@ -1,6 +1,6 @@
 package graft.clean
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Bounce-back price-error filter (W8) — Spark port of the reference's
@@ -9,14 +9,13 @@ import org.apache.spark.sql.functions._
   * `stage0/_trace_settings.py:69-83`).
   *
   * The candidate/lookahead/blame-reassignment/plateau/cooldown logic is
-  * irreducibly sequential per id (SURVEY.md §7.3), so it runs as a typed
-  * per-group scan. For scale the implementation does NOT use
-  * groupByKey+flatMapGroups (which materialises an unordered group and
-  * sorts per group): it repartitions by id, sortWithinPartitions by
-  * (id, ord) — one shuffle with partition-local sort, exactly the
-  * secondary-sort pattern — and streams each partition, buffering only ONE
-  * id-group at a time (bounded by the largest single id, not the
-  * partition).
+  * irreducibly sequential per id (SURVEY.md §7.3), so it runs as a scan
+  * over one id's prices in ord order inside [[Stage0]]'s sorted pass per
+  * id — in production on the decimal-shift-corrected survivors of the
+  * same pass, so no repartition, no flag frame and no join back.
+  * `BounceBackSpec` keeps the repartition / secondary-sort wrapper this
+  * replaced as its test-only reference. A pass buffers ONE id-group at a
+  * time (bounded by the largest single id, not the partition).
   */
 object BounceBack {
 
@@ -36,49 +35,22 @@ object BounceBack {
 
   private val eps = 1e-12
 
-  /** One input row of the scan: (id, ord, price). */
-  final case class Row(id: Long, ord: Long, price: Double)
-
-  /** Output: (id, ord, filtered_error). */
-  final case class Flag(id: Long, ord: Long, filtered_error: Int)
-
-  /** Returns (id, ord, filtered_error) rows; join back on (id, ord). */
+  /** Returns (id, ord, filtered_error) rows: [[Stage0]]'s grouped pass per
+    * id, sorted by ord, running only the bounce-back scan. */
   def flags(
       df: DataFrame,
       idCol: String,
       ordCol: String,
       priceCol: String,
-      p: Params = Params()): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val rows = df.select(
-      col(idCol).cast("long").as("id"),
-      col(ordCol).cast("long").as("ord"),
-      col(priceCol).cast("double").as("price")).as[Row]
-    val out: Dataset[Flag] = rows
-      .repartition(col("id"))
-      .sortWithinPartitions(col("id"), col("ord"))
-      .mapPartitions(it => groupScanIterator(it, p))
-    out.toDF()
-  }
-
-  /** streams a (id, ord)-sorted partition, buffering one id-group at a time */
-  private def groupScanIterator(it: Iterator[Row], p: Params): Iterator[Flag] =
-    new Iterator[Flag] {
-      private val in = it.buffered
-      private var pending: Iterator[Flag] = Iterator.empty
-      def hasNext: Boolean = pending.hasNext || in.hasNext
-      def next(): Flag = {
-        if (!pending.hasNext) {
-          val id = in.head.id
-          val grp = scala.collection.mutable.ArrayBuffer.empty[Row]
-          while (in.hasNext && in.head.id == id)
-            grp += in.next()
-          pending = scanGroup(id, grp.toArray, p).iterator
-        }
-        pending.next()
-      }
-    }
+      p: Params = Params()): DataFrame =
+    Stage0.pass(
+        df.select(
+          col(idCol).cast("long").as("id"),
+          col(ordCol).cast("long").as("ord"),
+          col(priceCol).cast("double").as("price")),
+        Stage0.Steps(dickNielsen = false, shift = false, bounce = true),
+        bounceP = p)
+      .select("id", "ord", "filtered_error")
 
   /** trailing unique median over the previous `win` rows ending at i-1
     * (the reference's rolling(window+1).apply(uniq_med).shift(1)).
@@ -93,9 +65,10 @@ object BounceBack {
     else (distinct(n / 2 - 1) + distinct(n / 2)) / 2.0
   }
 
-  private def scanGroup(id: Long, rows: Array[Row], p: Params): Array[Flag] = {
-    val m = rows.length
-    val P = rows.map(_.price)
+  /** The state machine over one id's prices in ord order; 1 marks a
+    * flagged print. */
+  private[clean] def scanGroup(P: Array[Double], p: Params): Array[Int] = {
+    val m = P.length
     val D = Array.tabulate(m)(i => if (i == 0) Double.NaN else P(i) - P(i - 1))
     val B = Array.tabulate(m)(i => baseline(P, i, p.window + 1))
     val flagged = new Array[Int](m)
@@ -184,6 +157,6 @@ object BounceBack {
       }
       if (!advanced) i += 1
     }
-    Array.tabulate(m)(k => Flag(id, rows(k).ord, flagged(k)))
+    flagged
   }
 }

@@ -1,27 +1,25 @@
 package graft.clean
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, StructType}
+import org.apache.spark.sql.DataFrame
 
 /** Decimal-shift price corrector (W7) — Spark restatement of the
   * reference's `decimal_shift_corrector`
   * (`stage0/create_daily_enhanced_trace.py:764-963`, params
   * `stage0/_trace_settings.py:53-66`).
   *
-  * Anchors come from ONE sorted pass per id: the rows are grouped on the
-  * id column and sorted by (dt, ord), and [[anchorsOf]] takes the rolling
-  * ±window medians over the id's deduplicated print sequence with plain
-  * arrays (the first print of each (dt, price) — the reference's
-  * duplicate-print guard), then every input row leaves with its
-  * representative's anchor. The factor search and the acceptance gates
-  * stay column algebra: per-factor relative deviations, a first-match
-  * CASE preserving the reference's first-strictly-better tie rule, and
-  * one boolean gate expression.
+  * It runs inside [[Stage0]]'s sorted pass per id, on the Dick-Nielsen
+  * survivors in (dt, ord) order: [[anchorsOf]] takes the rolling ±window
+  * medians over the id's deduplicated print sequence with plain arrays
+  * (the first print of each (dt, price) — the reference's duplicate-print
+  * guard), every row takes its representative's anchor, and [[gate]] runs
+  * the factor search and acceptance gates per row as scalar code with the
+  * semantics of the reference's column algebra (the first strictly-better
+  * factor wins a tie). `DecimalShiftEquivalenceSpec` keeps the window and
+  * column formulation as the test-only reference.
   *
   * Scale: one shuffle on `id` for the grouped pass (none over a source
   * already partitioned by `id`), no join. The pass buffers one id's rows
-  * at a time — the same bound as [[BounceBack]]'s per-id scan.
+  * at a time.
   */
 object DecimalShift {
 
@@ -117,31 +115,15 @@ object DecimalShift {
       if (dts(i) == null || prices(i) == null) null else anchor(posOf(i)))
   }
 
-  /** `df` plus `__p` (the price as double) and `anchor_price`, from one
-    * grouped pass per id sorted by (dt, ord). Rows with a null id get no
-    * anchor. */
-  private def anchored(df: DataFrame, idCol: String, dtCol: String,
-      ordCol: String, priceCol: String, w: Int): DataFrame = {
-    val in = df.withColumn("__p", col(priceCol).cast("double"))
-    val schema = in.schema
-    val dtIdx = schema.fieldIndex(dtCol)
-    val pIdx = schema.fieldIndex("__p")
-    in.groupBy(col(idCol))
-      .as[Row, Row](Encoders.row(StructType(Seq(schema(idCol)))),
-        Encoders.row(schema))
-      .flatMapSortedGroups(col(dtCol), col(ordCol)) { (key, it) =>
-        val rows = it.toArray
-        val anchors =
-          if (key.isNullAt(0)) new Array[Any](rows.length)
-          else anchorsOf(rows.map(_.get(dtIdx)), rows.map(_.get(pIdx)), w)
-        rows.indices.iterator.map(i => Row.fromSeq(rows(i).toSeq :+ anchors(i)))
-      }(Encoders.row(schema.add("anchor_price", DoubleType)))
-      .toDF()
-  }
+  /** One row's shift: the flag, the factor, the suggested price and the
+    * anchor it was judged against. */
+  final case class Shift(flag: Int, factor: Any, price: Any, anchor: Any)
 
   /** Adds `dec_shift_flag` (int), `dec_shift_factor`, `suggested_price`,
-    * `anchor_price` to `df`. `ordCol` must be a total order within
-    * (idCol, dtCol) — the reference's stable (date, time) sort.
+    * `anchor_price` to `df`, from one [[Stage0]] pass per id sorted by
+    * (dtCol, ordCol). `ordCol` must be a total order within (idCol,
+    * dtCol) — the reference's stable (date, time) sort. Rows with a null
+    * id get no anchor.
     */
   def withSuggestions(
       df: DataFrame,
@@ -150,80 +132,52 @@ object DecimalShift {
       ordCol: String,
       priceCol: String,
       p: Params = Params()): DataFrame =
-    suggest(anchored(df, idCol, dtCol, ordCol, priceCol, p.window), p)
+    Stage0.pass(df, Stage0.Steps(dickNielsen = false, shift = true, bounce = false),
+      idCol, dtCol, ordCol, priceCol, shiftP = p)
 
-  /** The factor search and acceptance gates over a frame carrying `__p`
-    * (the price as double) and `anchor_price`; drops `__p`. */
-  private[clean] def suggest(joined: DataFrame, p: Params): DataFrame = {
-    val anchor = col("anchor_price")
+  /** Spark's ascending order on doubles: -0.0 equals 0.0, NaN above all. */
+  private def cmp(a: Double, b: Double): Int = if (a == b) 0 else java.lang.Double.compare(a, b)
 
-    // Per-factor relative deviations as REAL COLUMNS, then least() + a
-    // first-match CASE — semantically the "first strictly-better candidate
-    // wins" rule of the reference, and exactly the r1..r4 formulation the
-    // DuckDB oracle uses. (The previous Column-level foldLeft embedded the
-    // accumulated tree twice per factor — exponential expression blowup
-    // that pushed the generated projection past janino's 64 KB method
-    // limit, silently dropping the whole stage out of codegen and paying
-    // a multi-second doomed-compile on first run. Stacked withColumns stay
-    // separate projections because each alias is non-cheap and
-    // multiply-referenced, so codegen evaluates each once.)
-    // nullif guard on the anchor: an all-zero print window would make the
-    // median 0 — DuckDB's x/0 is NULL while Spark's ANSI mode throws, so
-    // the NULL is made explicit (a null rel never passes the gates)
-    val anchorDiv = expr("nullif(anchor_price, 0.0d)")
-    val withR = p.factors.zipWithIndex.foldLeft(
-        joined.withColumn("__raw_rel", abs(col("__p") - anchor) / anchorDiv)) {
-      case (d, (f, i)) =>
-        val cand = col("__p") * f
-        d.withColumn(s"__r${i + 1}",
-          when(cand >= p.lowPr && cand <= p.highPr, abs(cand - anchor) / anchorDiv))
+  /** The factor search and acceptance gates for one price (a double or
+    * null) against its anchor (likewise), with the semantics of the
+    * reference's column algebra as Spark evaluates it:
+    *  - a zero anchor divides to null (`nullif(anchor, 0)`), and a
+    *    comparison with a null operand is never true;
+    *  - each factor's relative deviation counts only when the candidate
+    *    lies in [lowPr, highPr]; the best is the first smallest
+    *    (`least`), so an earlier factor wins a tie;
+    *  - comparisons order NaN above every number, as Spark does.
+    * The flag needs the raw deviation above `tolPctBad`, the best within
+    * `tolPctGood`, `tolAbsGood` of the anchor or (with `parSnap`) both
+    * within `parBand` of par, and an improvement to `improvementFrac` of
+    * the raw deviation.
+    */
+  private[clean] def gate(price: Any, anchor: Any, p: Params): Shift =
+    (price, anchor) match {
+      case (x: Double, a: Double) if a != 0.0 =>
+        val rawRel = math.abs(x - a) / a
+        var best = -1
+        var bestRel = 0.0
+        var i = 0
+        while (i < p.factors.length) {
+          val cand = x * p.factors(i)
+          if (cmp(cand, p.lowPr) >= 0 && cmp(cand, p.highPr) <= 0) {
+            val rel = math.abs(cand - a) / a
+            if (best < 0 || cmp(rel, bestRel) < 0) { best = i; bestRel = rel }
+          }
+          i += 1
+        }
+        val flag = best >= 0 && {
+          val bestPrice = x * p.factors(best)
+          cmp(rawRel, p.tolPctBad - eps) > 0 &&
+          (cmp(bestRel, p.tolPctGood + eps) <= 0 ||
+            cmp(math.abs(bestPrice - a), p.tolAbsGood + eps) <= 0 ||
+            (p.parSnap && cmp(math.abs(a - 100.0), p.parBand) <= 0 &&
+              cmp(math.abs(bestPrice - 100.0), p.parBand) <= 0)) &&
+          cmp(bestRel, rawRel * p.improvementFrac + eps) <= 0
+        }
+        if (flag) Shift(1, p.factors(best), x * p.factors(best), a)
+        else Shift(0, 1.0, x, a)
+      case _ => Shift(0, 1.0, price, anchor)
     }
-    val rCols = p.factors.indices.map(i => col(s"__r${i + 1}"))
-    val withBest = withR
-      .withColumn("__best_rel", least(rCols: _*))
-      // reverse-order chains so EARLIER factors take precedence on ties
-      .withColumn("__best_price",
-        p.factors.zipWithIndex.reverse.foldLeft(lit(null).cast("double")) {
-          case (acc, (f, i)) =>
-            when(col(s"__r${i + 1}") === col("__best_rel"), col("__p") * f)
-              .otherwise(acc)
-        })
-
-    val absGood = abs(col("__best_price") - anchor) <= p.tolAbsGood + eps
-    val parOk =
-      if (p.parSnap)
-        abs(anchor - 100.0) <= p.parBand &&
-          abs(col("__best_price") - 100.0) <= p.parBand
-      else lit(false)
-    val flag = (col("__raw_rel") > p.tolPctBad - eps) &&
-      ((col("__best_rel") <= p.tolPctGood + eps) || absGood || parOk) &&
-      (col("__best_rel") <= col("__raw_rel") * p.improvementFrac + eps)
-
-    val bestFactor = p.factors.zipWithIndex.reverse
-      .foldLeft(lit(null).cast("double")) { case (acc, (f, i)) =>
-        when(col(s"__r${i + 1}") === col("__best_rel"), lit(f)).otherwise(acc)
-      }
-    withBest
-      .withColumn("dec_shift_flag", when(flag, 1).otherwise(0))
-      .withColumn("dec_shift_factor",
-        when(col("dec_shift_flag") === 1, bestFactor).otherwise(1.0))
-      .withColumn("suggested_price",
-        when(col("dec_shift_flag") === 1, col("__best_price"))
-          .otherwise(col("__p")))
-      .drop("__p", "__raw_rel", "__best_rel", "__best_price")
-      .drop(p.factors.indices.map(i => s"__r${i + 1}"): _*)
-  }
-
-  /** Apply suggestions: overwrite `priceCol` (as double) where flagged. */
-  def cleaned(
-      df: DataFrame,
-      idCol: String,
-      dtCol: String,
-      ordCol: String,
-      priceCol: String,
-      p: Params = Params()): DataFrame =
-    withSuggestions(df, idCol, dtCol, ordCol, priceCol, p)
-      .withColumn(priceCol, col("suggested_price"))
-      .drop("dec_shift_flag", "dec_shift_factor", "suggested_price",
-        "anchor_price")
 }

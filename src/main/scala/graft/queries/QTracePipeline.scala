@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.agg.DailyMetrics
-import graft.clean.{BounceBack, DecimalShift}
+import graft.clean.Stage0
 import graft.operators.SeqMatch
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -12,122 +12,107 @@ import org.apache.spark.sql.functions._
   * daily panel aggregation (A1–A3).
   *
   * The chunk loop of the reference disappears entirely: the whole chain is
-  * ONE lazy DataFrame DAG. Its shuffles, in order:
-  *  - the cleaning window flags, 3 exchanges on (id, dt, …) keys;
-  *  - ONE id-shuffle into the decimal-shift's sorted per-id anchor pass,
-  *    which emits every row with its anchor (no join back);
-  *  - the bounce-back scan's id-repartition over the corrected frame;
+  * ONE lazy DataFrame DAG with two shuffles, no barrier and no join:
+  *  - ONE id-shuffle into [[Stage0]]'s sorted pass per bond, which cleans,
+  *    corrects and flags every row in one kernel;
   *  - the final (id, dt) hash aggregation.
-  * Over a source bucketed by id the clean + shift chain needs none of its
-  * 4 exchanges (`BucketedTradesSpec`).
+  * Over a source bucketed by id the pass needs no exchange
+  * (`BucketedTradesSpec`).
   */
 object QTracePipeline extends Registry {
 
-  // ---- cleaning chain (Spark side) ----------------------------------
-  //
-  // All three Dick-Nielsen stages are expressed as WINDOW FLAGS over one
-  // linear frame instead of anti-joins over split-and-reunioned branches:
-  // Spark re-evaluates shared subtrees per union branch / join side, so
-  // the join formulation exploded into ~29 shuffles; the window form is 3
-  // exchanges. Semantics are identical (the DuckDB oracle still mirrors
-  // the join formulation):
-  //  - J3 cancel:  EXISTS X-row with same (id,dt,price,qty)  ≡ max-when flag
-  //  - J7 reversal: n-th R cancels n-th T per (id,dt,side)   ≡ keep rows
-  //    with row_number > count(R) (R seqs are contiguous 1..n)
-  //  - J9 agency:  (B,D) matching a surviving (S,D)          ≡ max-when flag
-
   import org.apache.spark.sql.expressions.Window
 
-  /** The raw cleaning DAG (no memo/checkpoint) — [[cleaned]] materializes
-    * it; [[graft.Plans]] explains it for the exchange-count evidence.
-    */
-  private[graft] def cleanedDag(s: SparkSession, d: String): DataFrame =
-    cleanedDagFrom(Trades.df(s, d))
+  /** The columns the Stage-0 pass and its consumers read: a typed grouped
+    * operator stops Catalyst's column pruning, so dead columns (`ts`, the
+    * raw `dvol`) are cut before it. */
+  private val stage0Cols =
+    Seq("id", "dt", "ord", "secs", "price", "qty", "side", "contra", "trc_st")
 
-  /** Same DAG over any trades-shaped frame — the seam the bucketed-layout
-    * path plugs into: a source bucketed by `id` satisfies every cleaning
-    * window's ClusteredDistribution (each partitions by a superset of
-    * `id`), so the whole clean+correct chain plans with ZERO exchanges
-    * (`BucketedTradesSpec`).
-    */
-  private[graft] def cleanedDagFrom(tr: DataFrame): DataFrame = {
-    val wKey = Window.partitionBy(col("id"), col("dt"), col("price"), col("qty"))
-    val wSide = Window.partitionBy(col("id"), col("dt"), col("side"))
-    val marked = tr
-      .withColumn("__has_cancel",
-        max(when(col("trc_st") === "X", 1)).over(wKey))
-      .withColumn("__n_rev",
-        count(when(col("trc_st") === "R", 1)).over(wSide))
-    val afterCancel = marked
-      .filter(col("trc_st") === "T" && col("__has_cancel").isNull)
-    // rn numbers only the cancel-survivors; partitioning from wSide is
-    // preserved through the filter, so this window adds a sort, not a shuffle
-    val afterReversal = afterCancel
-      .withColumn("__rn", row_number().over(wSide.orderBy(col("ord"))))
-      .filter(col("__rn") > col("__n_rev"))
-    val afterAgency = afterReversal
-      .withColumn("__has_sell",
-        max(when(col("contra") === "D" && col("side") === "S", 1)).over(wKey))
-      // coalesce matters: !(… && NULL) is NULL and filter drops NULL
-      // predicates — unmatched (B,D) rows must survive
-      .filter(!(col("contra") === "D" && col("side") === "B" &&
-        coalesce(col("__has_sell"), lit(0)) === 1))
-    afterAgency.drop("__has_cancel", "__n_rev", "__rn", "__has_sell")
-  }
+  /** Every Dick-Nielsen survivor of any trades-shaped frame, with its
+    * decimal-shift columns and `filtered_error`, from ONE sorted pass per
+    * bond. `price` stays the cleaned input price. */
+  private[graft] def flaggedFrom(tr: DataFrame): DataFrame =
+    Stage0.pass(tr.select(stage0Cols.map(col): _*), Stage0.Steps.all)
 
-  /** Memoized like [[corrected]]: THREE consumers (the clean-chain query,
-    * the decimal-shift query, and corrected's build) each walk these three
-    * window stages otherwise.
-    */
-  private def cleaned(s: SparkSession, d: String): DataFrame =
-    graft.Caches.memo(s, s"tp_cleaned:$d") {
-      graft.Caches.barrier(cleanedDag(s, d))
+  /** Memoized flagged rows — the six memo-served `tp_*`/`s4` queries each
+    * re-run the pass otherwise (Spark has no plan-subtree sharing). */
+  private def flagged(s: SparkSession, d: String): DataFrame =
+    graft.Caches.memo(s, s"tp_stage0:$d") {
+      graft.Caches.barrier(flaggedFrom(Trades.df(s, d)))
     }
 
-  /** The raw shift-correction DAG over any cleaned frame — see [[corrected]]. */
-  private[graft] def correctedDag(base: DataFrame): DataFrame =
-    DecimalShift.cleaned(base, "id", "dt", "ord", "price")
-      .withColumn("price", col("price").cast("decimal(18,3)"))
+  /** Price re-entered as decimal(18,3) from the suggestion (corrections
+    * are price×{0.1,0.01,10,100} of a 2dp price → true 3dp values, so the
+    * cast is exact) with dvol recomputed from it. */
+  private def correctedOf(rows: DataFrame): DataFrame =
+    rows.withColumn("price", col("suggested_price").cast("decimal(18,3)"))
       // (18,5) keeps price*dvol at precision 37 — exact in both engines
       // (Spark clamps precision-38 overflow by dropping scale digits)
       .withColumn("dvol", (col("price") * col("qty")).cast("decimal(18,5)"))
 
-  /** cleaned + decimal-shift-corrected, price re-entered as decimal(18,3)
-    * (corrections are price×{0.1,0.01,10,100} of a 2dp price → true 3dp
-    * values, so the cast is exact) with dvol recomputed from it.
-    *
-    * Memoized + persisted per sfDir: FOUR consumers share this frame (the
-    * daily panel's scan AND anti-join sides, the standalone bounce-back
-    * query, the oracled panel) and Spark has no plan-subtree sharing —
-    * without the cache each would recompute the whole clean+shift chain.
-    * Released by `Caches.clearAll()` at end of run; at cluster scale this
-    * is a disk persist or a checkpointed intermediate table.
-    */
+  /** The cleaned + corrected rows of the memo (no bounce-back filter). */
   private[queries] def corrected(s: SparkSession, d: String): DataFrame =
-    graft.Caches.memo(s, s"tp_corrected:$d") {
-      // eager localCheckpoint: runs the chain ONCE with full AQE and
-      // hands the four consumers plain RDD blocks (persist() would
-      // freeze AQE below the cache). On a real cluster: reliable
-      // checkpoint / staging table — localCheckpoint does not survive
-      // executor loss.
-      graft.Caches.barrier(correctedDag(cleaned(s, d)))
+    correctedOf(flagged(s, d))
+
+  /** Dick-Nielsen cleaning alone over the plain scan — [[graft.Plans]]
+    * explains it for the exchange-count evidence. */
+  private[graft] def cleanedDag(s: SparkSession, d: String): DataFrame =
+    cleanedDagFrom(Trades.df(s, d))
+
+  /** The Dick-Nielsen survivors of any trades-shaped frame, all input
+    * columns kept: the Stage-0 pass running only the cleaning. */
+  private[graft] def cleanedDagFrom(tr: DataFrame): DataFrame =
+    Stage0.pass(tr, Stage0.Steps(dickNielsen = true, shift = false, bounce = false))
+
+  /** Decimal-shift correction alone over any cleaned frame: the Stage-0
+    * pass running only the shift, then price and dvol as in production. */
+  private[graft] def correctedDag(base: DataFrame): DataFrame =
+    correctedOf(Stage0.pass(base,
+        Stage0.Steps(dickNielsen = false, shift = true, bounce = false)))
+      .drop("dec_shift_flag", "dec_shift_factor", "suggested_price", "anchor_price")
+
+  /** One Stage-0 query over flagged rows (the output of [[flaggedFrom]]) —
+    * the registry runs them over the memo (`tp_full_panel` over the lazy
+    * pass), `BucketedTradesSpec` over re-laid-out sources. */
+  private[graft] def overFlagged(name: String, rows: DataFrame): DataFrame =
+    name match {
+      case "tp_clean_chain" =>
+        rows.select(col("id"), col("ord"), col("price").cast("double").as("price"))
+      case "tp_decimal_shift" =>
+        rows.select(col("id"), col("ord"), col("dec_shift_flag"),
+          col("dec_shift_factor"), col("suggested_price"), col("anchor_price"))
+      case "tp_daily_panel" => DailyMetrics.panel(correctedOf(rows), sumScale = 8)
+      case "tp_full_panel" =>
+        DailyMetrics.panel(correctedOf(rows.filter(col("filtered_error") === 0)),
+          sumScale = 8)
+      case "tp_bounceback_flags" =>
+        rows.filter(col("filtered_error") === 1)
+          .select(col("id"), col("ord"), col("filtered_error"))
+      case "tp_error_replay" =>
+        val win = Window.partitionBy(col("id")).orderBy(col("ord"))
+        val wAll = Window.partitionBy(col("id"))
+        correctedOf(rows)
+          .withColumn("price_flag",
+            when(col("price") < 5 || col("price") > 300, 1).otherwise(0))
+          .withColumn("qty_flag",
+            when(col("qty") > 90, 1).otherwise(0))
+          .withColumn("rn", row_number().over(win))
+          .withColumn("jump",
+            abs(col("price") - lag(col("price"), 1).over(win))
+              .cast("double") > 50 && col("rn") <= 3)
+          .withColumn("fj", min(when(col("jump"), col("rn"))).over(wAll))
+          .withColumn("initial_error_flag",
+            when(col("rn") < coalesce(col("fj"), lit(0)), 1).otherwise(0))
+          .select(col("id"), col("ord"), col("price_flag"), col("qty_flag"),
+            col("dec_shift_flag"), col("filtered_error").as("bounce_flag"),
+            col("initial_error_flag"))
     }
 
-  /** bounce-back anti-join + panel aggregate over any corrected frame —
-    * split out so [[graft.Plans]] can explain the WHOLE chain as one raw
-    * DAG (the memoized [[corrected]] is a checkpoint scan, which hides the
-    * upstream exchanges from plan evidence).
-    */
-  private[graft] def dailyPanelDag(base: DataFrame): DataFrame = {
-    val flags = BounceBack.flags(base, "id", "ord", "price")
-    val kept = base.join(flags.filter(col("filtered_error") === 1)
-        .select("id", "ord"), Seq("id", "ord"), "left_anti")
-    DailyMetrics.panel(kept, sumScale = 8)
-  }
-
-  /** Full pipeline incl. the bounce-back filter — the driver's `entry`. */
+  /** Full pipeline incl. the bounce-back filter — the driver's `entry`:
+    * the pass, `filtered_error = 0`, the dvol projection, the panel. */
   def dailyPanel(spark: SparkSession, sfDir: String): DataFrame =
-    dailyPanelDag(corrected(spark, sfDir))
+    overFlagged("tp_full_panel", flaggedFrom(Trades.df(spark, sfDir)))
 
   // ---- oracle SQL mirrors -------------------------------------------
 
@@ -349,17 +334,13 @@ object QTracePipeline extends Registry {
 
     // J3+J7+J9 — the Dick-Nielsen-shaped cleaning chain end-to-end.
     Q("tp_clean_chain",
-      (s, d) => cleaned(s, d)
-        .select(col("id"), col("ord"), col("price").cast("double").as("price")),
+      (s, d) => overFlagged("tp_clean_chain", flagged(s, d)),
       Some(s"""WITH $cleanSql
               SELECT id, ord, CAST(price AS DOUBLE) AS price FROM tr3""")),
 
     // W7 — decimal-shift corrector: flags, factors, suggestions.
     Q("tp_decimal_shift",
-      (s, d) => DecimalShift.withSuggestions(
-          cleaned(s, d), "id", "dt", "ord", "price")
-        .select(col("id"), col("ord"), col("dec_shift_flag"),
-          col("dec_shift_factor"), col("suggested_price"), col("anchor_price")),
+      (s, d) => overFlagged("tp_decimal_shift", flagged(s, d)),
       Some(s"""WITH $cleanSql, $shiftSql
               SELECT id, ord, dec_shift_flag,
                      CASE WHEN dec_shift_flag = 1 THEN
@@ -376,13 +357,14 @@ object QTracePipeline extends Registry {
     // bounce-back step is excluded here; it is validated by golden-vector
     // ScalaTests and exercised in the driver's entry()).
     Q("tp_daily_panel",
-      (s, d) => DailyMetrics.panel(corrected(s, d), sumScale = 8),
+      (s, d) => overFlagged("tp_daily_panel", flagged(s, d)),
       Some(s"""WITH $cleanSql, $shiftSql, $correctedSql
               ${panelSql("ctr")}""")),
 
     // THE FLAGSHIP, oracled end-to-end: clean → decimal-shift → bounce-back
-    // anti-join → daily panel — byte-identical to what the driver's
-    // `entry()` returns. The oracle composes every CTE fragment above and
+    // filter → daily panel — byte-identical to what the driver's `entry()`
+    // returns, and the one tp_* query that runs the lazy pass instead of
+    // the memo. The oracle composes every CTE fragment above and
     // anti-joins the recursively-scanned flags before aggregating.
     Q("tp_full_panel",
       (s, d) => dailyPanel(s, d),
@@ -405,40 +387,11 @@ object QTracePipeline extends Registry {
     // flag, the W9 initial-error flag. `ErrorReplaySpec` reconciles the
     // cascade counts derivable from this row set against
     // `AuditedFilter.ledger` on the same frame — flags and drops must
-    // tell the same story. Scale shape: the screen flags are
-    // zero-exchange codegen folds over the already-id-partitioned
-    // corrected frame; the shift/bounce flags reuse the memoized chain;
-    // the joins are co-partitioned on (id, ord).
+    // tell the same story. Scale shape: every flag but W9 is a column of
+    // the memoized pass or a codegen fold over it; W9's id window is the
+    // one exchange, and nothing joins.
     Q("tp_error_replay",
-      (s, d) => {
-        val shifts = DecimalShift.withSuggestions(
-            cleaned(s, d), "id", "dt", "ord", "price")
-          .select(col("id"), col("ord"), col("dec_shift_flag"))
-        val corr = corrected(s, d)
-        val bounce = BounceBack.flags(corr, "id", "ord", "price")
-          .filter(col("filtered_error") === 1)
-          .select(col("id"), col("ord"), lit(1).as("bflag"))
-        val win = Window.partitionBy(col("id")).orderBy(col("ord"))
-        val wAll = Window.partitionBy(col("id"))
-        corr
-          .withColumn("price_flag",
-            when(col("price") < 5 || col("price") > 300, 1).otherwise(0))
-          .withColumn("qty_flag",
-            when(col("qty") > 90, 1).otherwise(0))
-          .withColumn("rn", row_number().over(win))
-          .withColumn("jump",
-            abs(col("price") - lag(col("price"), 1).over(win))
-              .cast("double") > 50 && col("rn") <= 3)
-          .withColumn("fj", min(when(col("jump"), col("rn"))).over(wAll))
-          .withColumn("initial_error_flag",
-            when(col("rn") < coalesce(col("fj"), lit(0)), 1).otherwise(0))
-          .join(shifts, Seq("id", "ord"))
-          .join(bounce, Seq("id", "ord"), "left")
-          .select(col("id"), col("ord"), col("price_flag"), col("qty_flag"),
-            col("dec_shift_flag"),
-            coalesce(col("bflag"), lit(0)).as("bounce_flag"),
-            col("initial_error_flag"))
-      },
+      (s, d) => overFlagged("tp_error_replay", flagged(s, d)),
       Some(s"""WITH RECURSIVE $cleanSql, $shiftSql, $correctedSql, $bounceSql,
               ford AS (SELECT f.id, bg.ords[f.idx + 1] AS ord
                        FROM bflags f JOIN bg USING (id)),
@@ -588,9 +541,7 @@ object QTracePipeline extends Registry {
     // CTE over per-id price lists (bounceSql above); golden-vector specs in
     // BounceBackSpec additionally pin the reference's worked examples.
     Q("tp_bounceback_flags",
-      (s, d) => BounceBack.flags(corrected(s, d), "id", "ord", "price")
-        .filter(col("filtered_error") === 1)
-        .select(col("id"), col("ord"), col("filtered_error")),
+      (s, d) => overFlagged("tp_bounceback_flags", flagged(s, d)),
       Some(s"""WITH RECURSIVE $cleanSql, $shiftSql, $correctedSql, $bounceSql
               SELECT f.id, bg.ords[f.idx + 1] AS ord,
                      CAST(1 AS INT) AS filtered_error
@@ -605,7 +556,7 @@ object QTracePipeline extends Registry {
     // CSV read uses the parquet schema (no inference nondeterminism).
     Q("s4_sink_roundtrip",
       (s, d) => {
-        val panel = DailyMetrics.panel(corrected(s, d), sumScale = 8)
+        val panel = overFlagged("tp_daily_panel", flagged(s, d))
         // deterministic per-sfDir dir (graft.Scratch), NOT a fresh
         // createTempDirectory per invocation: bench reps / verify / plan
         // runs would otherwise each leave two full panel copies behind;

@@ -291,7 +291,7 @@ private class PositionDeltaWriterFactory(dataRoot: String, delRoot: String,
     schema: StructType) extends DeltaWriterFactory {
   override def createWriter(partitionId: Int,
       taskId: Long): DeltaWriter[InternalRow] =
-    new PositionDeltaWriter(dataRoot, delRoot, schema, partitionId, taskId)
+    new PositionDeltaWriter(dataRoot, delRoot, schema, partitionId)
 }
 
 /** Task-side delta writer. Inserts stream straight to a task-local
@@ -301,11 +301,11 @@ private class PositionDeltaWriterFactory(dataRoot: String, delRoot: String,
   * already relies on), never data-sized.
   */
 private class PositionDeltaWriter(dataRoot: String, delRoot: String,
-    schema: StructType, partitionId: Int, taskId: Long)
+    schema: StructType, partitionId: Int)
     extends DeltaWriter[InternalRow] {
 
   private val inserts =
-    new SnapshotDataWriter(dataRoot, schema, partitionId, taskId)
+    new SnapshotDataWriter(dataRoot, schema, partitionId)
   private val positions =
     scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
 
@@ -332,8 +332,7 @@ private class PositionDeltaWriter(dataRoot: String, delRoot: String,
       else {
         java.nio.file.Files.createDirectories(
           java.nio.file.Paths.get(delRoot))
-        val f = s"$delRoot/pos-$partitionId-$taskId-" +
-          s"${java.util.UUID.randomUUID().toString.take(8)}.parquet"
+        val f = s"$delRoot/${SnapshotDataWriter.fileName("pos", partitionId)}"
         val writer = ExampleParquetWriter.builder(new Path(f))
           .withConf(new Configuration())
           .withType(SnapshotDelta.PosFileSchema).build()

@@ -259,7 +259,7 @@ private class SnapshotStreamingWriterFactory(root: String,
       .StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] =
-    new SnapshotDataWriter(s"$root/e$epochId", schema, partitionId, taskId)
+    new SnapshotDataWriter(s"$root/e$epochId", schema, partitionId)
 }
 
 /** one finished task file with everything the manifest wants: path,
@@ -364,7 +364,20 @@ private class SnapshotWriterFactory(root: String, schema: StructType,
     partColIdx: Option[Int]) extends DataWriterFactory {
   override def createWriter(partitionId: Int,
       taskId: Long): DataWriter[InternalRow] =
-    new SnapshotDataWriter(root, schema, partitionId, taskId, partColIdx)
+    new SnapshotDataWriter(root, schema, partitionId, partColIdx)
+}
+
+private[sources] object SnapshotDataWriter {
+
+  /** `<kind>-<partition>-<attempt>-<8 hex>.parquet`: the task's partition
+    * and attempt number, then a random suffix. Spark's task id is NOT in
+    * the name — it is JVM-global, so its digit count (and with it the
+    * path every manifest entry stores) would depend on how many tasks
+    * ran earlier in the session. */
+  def fileName(kind: String, partitionId: Int): String = {
+    val attempt = Option(org.apache.spark.TaskContext.get()).fold(0)(_.attemptNumber())
+    s"$kind-$partitionId-$attempt-${java.util.UUID.randomUUID().toString.take(8)}.parquet"
+  }
 }
 
 /** Task-side parquet writer over the example Group API — lazy: a task
@@ -381,14 +394,13 @@ private class SnapshotWriterFactory(root: String, schema: StructType,
   * ordering preference) just rolls more files; never wrong, never
   * unbounded. */
 private class SnapshotDataWriter(root: String, schema: StructType,
-    partitionId: Int, taskId: Long,
+    partitionId: Int,
     partColIdx: Option[Int] = None) extends DataWriter[InternalRow] {
   private val msg = SnapshotWrite.parquetSchema(schema)
   private val factory = new SimpleGroupFactory(msg)
 
   private final class OneFile(val label: String, sub: String) {
-    val file =
-      s"$root$sub/part-$partitionId-$taskId-${java.util.UUID.randomUUID().toString.take(8)}.parquet"
+    val file = s"$root$sub/${SnapshotDataWriter.fileName("part", partitionId)}"
     var rows = 0L
     // tracks whether the lazy writer was ever OPENED: finish() must
     // close by that fact, not by rows — a task that fails during its

@@ -17,16 +17,22 @@ class PlanBudgetSpec extends SparkSpec {
   private def q(name: String) =
     graft.SparkEntry.queries(name)(spark, sf)
 
-  test("cleaning chain is the 3-exchange window-flag formulation") {
-    val c = Plans.planCounts(graft.queries.QTracePipeline.cleanedDag(spark, sf))
-    assert(c.shuffles <= 3, s"cleanedDag shuffles: ${c.shuffles}")
+  test("raw trades to the daily panel: two exchanges, no broadcast, no join") {
+    // the id-shuffle into the sorted pass per bond and the panel's
+    // (id, dt) aggregate — no window, no barrier, no anti-join
+    val df = graft.queries.QTracePipeline.dailyPanel(spark, sf)
+    val c = Plans.planCounts(df)
+    val joins = df.queryExecution.optimizedPlan.collect {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
+    }
+    assert(c.shuffles <= 2 && c.broadcasts == 0 && joins.isEmpty,
+      s"dailyPanel shuffles: ${c.shuffles}, broadcasts: ${c.broadcasts}, " +
+        s"joins: ${joins.size}")
   }
 
-  test("decimal shift adds one grouped pass over the cleaning chain, no join") {
-    val c = Plans.planCounts(graft.queries.QTracePipeline.correctedDag(
-      graft.queries.QTracePipeline.cleanedDag(spark, sf)))
-    assert(c.shuffles <= 4 && c.broadcasts == 0,
-      s"correctedDag shuffles: ${c.shuffles}, broadcasts: ${c.broadcasts}")
+  test("Dick-Nielsen cleaning alone is one grouped pass: one exchange") {
+    val c = Plans.planCounts(graft.queries.QTracePipeline.cleanedDag(spark, sf))
+    assert(c.shuffles <= 1, s"cleanedDag shuffles: ${c.shuffles}")
   }
 
   test("daily panel over the corrected memo is one aggregation shuffle") {

@@ -1,50 +1,22 @@
 package graft.clean
 
 import graft.SparkSpec
-import graft.operators.Dedup
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** The sorted per-id anchor pass of [[DecimalShift]] against the window
-  * formulation it replaced, kept here as the test-only reference: the
-  * (id, dt, price)-deduplicated rows get four `collect_list … rows between`
-  * sliding frames, sorted and reduced to medians, and the anchors join back
-  * on (id, dt, price). Both feed the same factor search, and on generated
-  * frames `anchor_price`, `dec_shift_flag`, `dec_shift_factor` and
-  * `suggested_price` must agree bit for bit, row by row.
+/** The sorted per-id anchor pass and the scalar gates of [[DecimalShift]]
+  * against the window and column formulation they replaced, kept in
+  * [[Stage0References]] as the test-only reference: the (id, dt,
+  * price)-deduplicated rows get four `collect_list … rows between` sliding
+  * frames, sorted and reduced to medians, the anchors join back on (id,
+  * dt, price), and the factor search and gates run as column algebra. On
+  * generated frames `anchor_price`, `dec_shift_flag`, `dec_shift_factor`
+  * and `suggested_price` must agree bit for bit, row by row.
   */
 class DecimalShiftEquivalenceSpec extends SparkSpec {
 
-  private def medianOfSorted(arr: String): String =
-    s"""case when size($arr) = 0 then null
-        when size($arr) % 2 = 1 then element_at($arr, cast(size($arr) div 2 + 1 as int))
-        else (element_at($arr, cast(size($arr) div 2 as int))
-              + element_at($arr, cast(size($arr) div 2 + 1 as int))) / 2 end"""
-
-  /** the window formulation: dedup window, sliding medians, join-back */
-  private def windowAnchored(df: DataFrame, w: Int): DataFrame = {
-    val price = col("price").cast("double")
-    val work = Dedup.keepFirst(
-      df.select(col("id"), col("dt"), col("ord"), price.as("__p")),
-      keys = Seq("id", "dt", "__p"),
-      order = Seq(col("ord")))
-    val frame = "partition by id order by dt, ord"
-    def medOver(lo: String, hi: String): String =
-      medianOfSorted(
-        s"sort_array(collect_list(__p) over ($frame rows between $lo and $hi))")
-    val anchored = work
-      .withColumn("__med_c",
-        expr(s"""case when size(collect_list(__p) over
-            ($frame rows between $w preceding and $w following)) >= ${w + 1}
-          then ${medOver(s"$w preceding", s"$w following")} end"""))
-      .withColumn("__med_f", expr(medOver("current row", s"$w following")))
-      .withColumn("__med_b", expr(medOver(s"$w preceding", "current row")))
-      .withColumn("anchor_price",
-        coalesce(col("__med_c"), col("__med_f"), col("__med_b")))
-      .select(col("id"), col("dt"), col("__p"), col("anchor_price"))
-    df.withColumn("__p", price).join(anchored, Seq("id", "dt", "__p"), "left")
-  }
+  import Stage0References.{columnSuggest, windowAnchored}
 
   private val schema = new StructType()
     .add("id", LongType)
@@ -106,7 +78,7 @@ class DecimalShiftEquivalenceSpec extends SparkSpec {
     (1L to 6L).foreach { seed =>
       val df = frame(seed)
       val got = keyed(DecimalShift.withSuggestions(df, "id", "dt", "ord", "price", p))
-      val want = keyed(DecimalShift.suggest(windowAnchored(df, p.window), p))
+      val want = keyed(columnSuggest(windowAnchored(df, p.window), p))
       assert(got.size == df.count(), s"seed $seed: a row was lost or duplicated")
       val diffs = want.collect { case (k, v) if !got.get(k).contains(v) =>
         s"$k want $v got ${got.get(k)}" }
@@ -140,5 +112,29 @@ class DecimalShiftEquivalenceSpec extends SparkSpec {
     // fewer than 6 values in ±5 → forward median of the values at and
     // after each position
     assert(out.toSeq == Seq(101.0, null, 101.0, 101.5, null, 102.0))
+  }
+
+  test("the scalar gates match the column gates on edge prices and anchors") {
+    val p = DecimalShift.Params()
+    val edges: Seq[java.lang.Double] = Seq(null, 0.0, -0.0, Double.NaN,
+      Double.PositiveInfinity, -5.0, 0.05, 0.5, 5.0, 50.0, 99.9, 100.0,
+      100.2, 300.0, 999.0, 1002.0, 3000.0, 30000.0, 88.15, 1000.0)
+    val rows = for (x <- edges; a <- edges) yield Row(x, a)
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2),
+      new StructType().add("__p", DoubleType).add("anchor_price", DoubleType))
+      .withColumn("x", col("__p")).withColumn("a", col("anchor_price"))
+    val want = columnSuggest(df, p).collect()
+    assert(want.length == edges.size * edges.size)
+    val diffs = want.flatMap { r =>
+      val (x, a) = (r.get(r.fieldIndex("x")), r.get(r.fieldIndex("a")))
+      val s = DecimalShift.gate(x, a, p)
+      val got = Seq(s.flag, s.factor, s.price).map(String.valueOf)
+      val exp = Seq("dec_shift_flag", "dec_shift_factor", "suggested_price")
+        .map(c => String.valueOf(r.get(r.fieldIndex(c))))
+      if (got == exp) None else Some(s"($x, $a): want $exp got $got")
+    }
+    assert(diffs.isEmpty, diffs.take(5).mkString("; "))
+    // the grid reaches every gate: some flags fire, some by par alone
+    assert(want.exists(_.getAs[Int]("dec_shift_flag") == 1))
   }
 }

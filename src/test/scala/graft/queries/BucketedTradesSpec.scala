@@ -1,26 +1,38 @@
 package graft.queries
 
+import scala.collection.mutable
+
 import graft.SparkSpec
-import graft.clean.DecimalShift
+import org.apache.spark.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** The Stage-0 chain over different layouts of the same trades.
+/** The Stage-0 chain over different layouts and executions of the same
+  * trades.
   *
   * The bucketed-layout flagship: trades written `bucketBy(8, "id")` feed
-  * the SAME cleaning + decimal-shift chain with ZERO exchanges — every
-  * cleaning window and the decimal-shift anchor pass partition by a
-  * superset of `id`, so the bucket scan's hash partitioning satisfies them
-  * all. At 100 TB this turns the pipeline's one id-shuffle into none:
+  * the SAME sorted pass per bond (clean, shift, bounce-back) with ZERO
+  * exchanges — the pass groups on `id` itself, so the bucket scan's hash
+  * partitioning satisfies it, and only the panel's (id, dt) aggregate
+  * shuffles. At 100 TB this turns the pipeline's id-shuffle into none:
   * bucket once at ingest, and every re-run of the cleaning chain (daily,
-  * per-regime, backfills) is exchange-free.
+  * per-regime, backfills) is exchange-free up to the panel.
   *
-  * The decimal-shift anchors must not depend on how rows arrive either:
-  * `tp_decimal_shift` and `tp_full_panel` hash-equal their default answer
-  * when the trades are repartitioned (1, 7, 64 partitions), under
-  * `spark.sql.shuffle.partitions` 1, 4 and 200, and with AQE on and off.
+  * The answers must not depend on how rows arrive or how the plan runs:
+  * `tp_clean_chain`, `tp_decimal_shift`, `tp_bounceback_flags`,
+  * `tp_error_replay` and `tp_full_panel` hash-equal their default answer
+  * when the trades are repartitioned (1, 7, 64 partitions) or shuffled,
+  * under `spark.sql.shuffle.partitions` 1, 4 and 200, with AQE on and off,
+  * and when the first attempt of every kernel task fails
+  * ([[Stage0RetryCheck]], `local[4,2]`).
+  *
+  * The memo the other Stage-0 queries share labels its build's jobs with
+  * its key ([[graft.Caches.memo]]).
   */
 class BucketedTradesSpec extends SparkSpec {
+
+  import Stage0RetryCheck.{hashOf, queries}
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -33,57 +45,46 @@ class BucketedTradesSpec extends SparkSpec {
     spark.table("graft_bkt_trades")
   }
 
+  private def panelOver(tr: DataFrame): DataFrame =
+    QTracePipeline.overFlagged("tp_full_panel", QTracePipeline.flaggedFrom(tr))
+
   test("clean + decimal-shift chain over bucketed trades plans zero exchanges") {
-    val chain = QTracePipeline.correctedDag(
-      QTracePipeline.cleanedDagFrom(bucketed))
-    val c = graft.Plans.planCounts(chain)
-    // DecimalShift's anchors are a grouped pass on the real `id` column,
-    // so the bucket layout satisfies it too, and nothing joins back
+    val c = graft.Plans.planCounts(QTracePipeline.flaggedFrom(bucketed))
+    // the pass groups on the real `id` column, so the bucket layout
+    // satisfies it, and nothing joins back
     assert(c.shuffles == 0 && c.broadcasts == 0,
-      s"expected exchange-free chain, got shuffles=${c.shuffles}, " +
+      s"expected exchange-free pass, got shuffles=${c.shuffles}, " +
         s"broadcasts=${c.broadcasts}")
+    // the panel's (id, dt) aggregate is the one exchange left
+    val panel = graft.Plans.planCounts(panelOver(bucketed))
+    assert(panel.shuffles == 1 && panel.broadcasts == 0,
+      s"panel over buckets: shuffles=${panel.shuffles}, broadcasts=${panel.broadcasts}")
     // the plain-scan path pays the id-shuffle the bucket layout removes
-    val plain = QTracePipeline.correctedDag(
-      QTracePipeline.cleanedDagFrom(Trades.df(spark, sf)))
+    val plain = QTracePipeline.flaggedFrom(Trades.df(spark, sf))
     assert(graft.Plans.planCounts(plain).shuffles > 0)
   }
 
   test("bucketed chain output is identical to the plain-scan chain") {
     val key = (r: org.apache.spark.sql.Row) => r.toSeq.map(String.valueOf)
-    val viaBuckets = QTracePipeline.dailyPanelDag(
-      QTracePipeline.correctedDag(QTracePipeline.cleanedDagFrom(bucketed)))
-      .collect().map(key).toSet
-    val viaPlain = QTracePipeline.dailyPanelDag(
-      QTracePipeline.correctedDag(
-        QTracePipeline.cleanedDagFrom(Trades.df(spark, sf))))
-      .collect().map(key).toSet
+    val viaBuckets = panelOver(bucketed).collect().map(key).toSet
+    val viaPlain = panelOver(Trades.df(spark, sf)).collect().map(key).toSet
     assert(viaBuckets == viaPlain && viaBuckets.nonEmpty)
-  }
-
-  private val queries = Seq("tp_decimal_shift", "tp_full_panel")
-
-  /** order-free MD5 over the rows' string forms */
-  private def hashOf(df: DataFrame): String = {
-    val rows = df.collect().map(_.toSeq.map(String.valueOf).mkString("|")).sorted
-    val md = java.security.MessageDigest.getInstance("MD5")
-    rows.foreach(r => md.update((r + "\n").getBytes("UTF-8")))
-    md.digest().map("%02x".format(_)).mkString
   }
 
   private def registered(name: String): String =
     try hashOf(graft.SparkEntry.queries(name)(spark, sf))
     finally graft.Caches.clearAll()
 
-  /** both queries over the raw chain, fed from `tr` */
+  /** the queries over the raw pass, fed from `tr`: the memo-served ones
+    * over one checkpoint of the flagged rows, as in production, and
+    * `tp_full_panel` over the lazy pass */
   private def overTrades(tr: DataFrame): Map[String, String] = {
-    val cleaned = QTracePipeline.cleanedDagFrom(tr)
-    Map(
-      "tp_decimal_shift" -> hashOf(DecimalShift.withSuggestions(
-          cleaned, "id", "dt", "ord", "price")
-        .select(col("id"), col("ord"), col("dec_shift_flag"),
-          col("dec_shift_factor"), col("suggested_price"), col("anchor_price"))),
-      "tp_full_panel" -> hashOf(QTracePipeline.dailyPanelDag(
-        QTracePipeline.correctedDag(cleaned))))
+    val flagged = QTracePipeline.flaggedFrom(tr)
+    val held = flagged.localCheckpoint()
+    queries.map { q =>
+      q -> hashOf(QTracePipeline.overFlagged(q,
+        if (q == "tp_full_panel") flagged else held))
+    }.toMap
   }
 
   private def withConf[T](k: String, v: String)(body: => T): T = {
@@ -107,6 +108,13 @@ class BucketedTradesSpec extends SparkSpec {
     }
   }
 
+  test("shift queries: input rows in a shuffled order, same answers") {
+    Seq(7L, 8L).foreach { seed =>
+      assert(overTrades(Trades.df(spark, sf).orderBy(rand(seed))) == default,
+        s"orderBy(rand($seed))")
+    }
+  }
+
   test("shift queries: shuffle.partitions 1, 4 and 200, same answers") {
     Seq("1", "4", "200").foreach { n =>
       withConf("spark.sql.shuffle.partitions", n) {
@@ -120,6 +128,52 @@ class BucketedTradesSpec extends SparkSpec {
       withConf("spark.sql.adaptive.enabled", on) {
         queries.foreach(q => assert(registered(q) == default(q), s"$q aqe=$on"))
       }
+    }
+  }
+
+  test("shift queries: first attempts failing inside the kernel's tasks, same answers (local[4,2])") {
+    import scala.jdk.CollectionConverters._
+    val jvm = java.lang.management.ManagementFactory.getRuntimeMXBean
+    val opens = jvm.getInputArguments.asScala.filter(a =>
+      a.startsWith("--add-opens") || a.startsWith("-Dspark."))
+    val cmd = Seq(s"${System.getProperty("java.home")}/bin/java", "-Xmx1g") ++ opens ++
+      Seq("-cp", System.getProperty("java.class.path"),
+        "graft.queries.Stage0RetryCheck", sf)
+    val out = new StringBuilder
+    val exit = scala.sys.process.Process(cmd)
+      .!(scala.sys.process.ProcessLogger(l => out ++= l + "\n", _ => ()))
+    assert(exit == 0, s"child JVM exited $exit:\n$out")
+    val lines = out.toString.linesIterator.map(_.split(" ")).toSeq
+    val hashes = lines.collect { case Array("hash", q, h) => q -> h }.toMap
+    val failed = lines.collectFirst { case Array("failed_tasks", n) => n.toInt }
+    assert(failed.exists(_ > 0), s"no task failed, so nothing was retried:\n$out")
+    assert(hashes == default, s"retried answers differ:\n$out")
+  }
+
+  test("the Stage-0 memo's jobs carry the memo's key") {
+    val sc = spark.sparkContext
+    val seen = mutable.ArrayBuffer.empty[Option[String]]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = seen.synchronized {
+        seen += Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+      }
+    }
+    graft.Caches.clearAll()
+    sc.setJobDescription("caller")
+    ListenerDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      // the query function builds the memo (the eager barrier runs its
+      // jobs) and returns a lazy projection over it
+      graft.SparkEntry.queries("tp_decimal_shift")(spark, sf)
+      ListenerDrain(sc)
+      assert(seen.nonEmpty, "the memo build ran no job")
+      assert(seen.forall(_.contains(s"tp_stage0:$sf")), s"job descriptions: $seen")
+      assert(sc.getLocalProperty("spark.job.description") == "caller")
+    } finally {
+      sc.removeSparkListener(listener)
+      sc.setJobDescription(null)
+      graft.Caches.clearAll()
     }
   }
 }
