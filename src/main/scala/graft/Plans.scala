@@ -112,12 +112,12 @@ object Plans {
           "no barrier, no join",
         () => QTracePipeline.dailyPanel(spark, sfDir)),
       ("tp_stage1_panel (composed Stage-1 chain)",
-        "panel stack+dedup → FISD merge → closed-form analytics → as-of " +
-          "ratings AND amounts in ONE pass (AsOfJoin.backwardMulti: look " +
-          "for a single Exchange hashpartitioning(id) under one Window " +
-          "with BOTH payload fills — two chained backward() calls would " +
-          "shuffle the panel per enrichment) → broadcast callable/linker " +
-          "→ flag windows → final filters → winsorize",
+        "ONE events scan and ONE Exchange hashpartitioning(id): above " +
+          "it the (id, ord) dedup Window, the per-(id, dt) HashAggregate " +
+          "(panel, error flag, max-ord rating and amount) and the Windows " +
+          "for callable + as-of fill and W10/W14, with no exchange of " +
+          "their own → FISD terms and analytics as projections → the " +
+          "linker broadcast → winsorize's Exchange on dt",
         () => SparkEntry.queries("tp_stage1_panel")(spark, sfDir)),
       ("dd_minhash_lsh (raw DAG)",
         "shuffle-free per-doc profiles (ShingleHash60 + MinHashK inside " +

@@ -18,6 +18,10 @@ import org.apache.spark.sql.functions._
   * plan for an as-of join without pre-bucketed inputs. Whole-row semantics
   * are preserved by packing the right payload into ONE struct (per-column
   * fills could mix rows when the right side has nulls).
+  *
+  * Null times follow the SQL rule in every variant: a null `on` on either
+  * side never matches (a null-dated left row gets a null payload, and a
+  * null-dated right row reaches no left row).
   */
 object AsOfJoin {
 
@@ -53,7 +57,9 @@ object AsOfJoin {
       .withColumn(t, col(leftOn))
       .withColumn(side, lit(leftSide))
       .withColumn(pay, lit(null).cast(structType(right, payload)))
-    val r = right
+    // a null-time right row matches nothing; null-time left rows sort
+    // first in their key, so with those gone nothing precedes them
+    val r = right.filter(col(rightOn).isNotNull)
       .select((by.map(col) ++ Seq(col(rightOn).as(t))
         ++ rightTieBreak.map(col)
         :+ struct(payload.map(col): _*).as(pay)): _*)
@@ -106,7 +112,7 @@ object AsOfJoin {
       .withColumn(t, col(leftOn))
       .withColumn(side, lit(leftSide))
       .withColumn(pay, lit(null).cast(structType(right, payload)))
-    val r = right
+    val r = right.filter(col(rightOn).isNotNull)
       .select((by.map(col) ++ Seq(col(rightOn).as(t))
         ++ rightTieBreak.map(col)
         :+ struct(payload.map(col): _*).as(pay)): _*)
@@ -123,9 +129,11 @@ object AsOfJoin {
     val w = Window.partitionBy(by.map(col): _*).orderBy(ord: _*)
       .rowsBetween(0, Window.unboundedFollowing)
     val filled = unioned.withColumn(pay, first(col(pay), ignoreNulls = true).over(w))
+    // null-time left rows sort first and would see every later event
     filled
       .filter(col(side) === leftSide)
-      .select((leftCols.map(col) ++ payload.map(p => col(s"$pay.$p").as(p))): _*)
+      .select((leftCols.map(col) ++ payload.map(p =>
+        when(col(t).isNotNull, col(s"$pay.$p")).as(p))): _*)
   }
 
   private def structType(df: DataFrame, cols: Seq[String]) = {
@@ -192,89 +200,6 @@ object AsOfJoin {
       attr(la, leftOn), attr(ra, rightOn),
       payload.map(attr(ra, _)), strict, fwd)
     org.apache.spark.sql.GraftSqlBridge.ofRows(left.sparkSession, node)
-  }
-
-  /** One right-hand source of [[backwardMulti]]. */
-  case class Right(
-      right: DataFrame,
-      on: String,
-      payload: Seq[String],
-      tieBreak: Seq[String] = Nil)
-
-  /** Backward as-of join against SEVERAL event tables in ONE pass: all
-    * sources union into a single stream, the `by` keys shuffle ONCE, and
-    * each source's payload struct is forward-filled independently by its
-    * own `last(_, ignoreNulls)` over the shared window — k enrichments
-    * for one shuffle+sort of |left| + Σ|right_i| rows, where k chained
-    * [[backward]] calls would re-shuffle and re-sort the (growing) left
-    * panel k times. The fills cannot mix sources: each source's columns
-    * ride in their own struct, null on every other source's rows.
-    *
-    * Payload column names must be disjoint across sources; every
-    * source's `on` column must have the left `leftOn`'s exact type
-    * (ordering unions them into one column).
-    */
-  def backwardMulti(
-      left: DataFrame,
-      by: Seq[String],
-      leftOn: String,
-      rights: Seq[Right],
-      strict: Boolean = false): DataFrame = {
-    val t = "__asof_t"
-    val side = "__asof_side"
-    val leftCols = left.columns.toSeq
-    val payNames = rights.indices.map(i => s"__asof_pay$i")
-    val payTypes = rights.map(r => structType(r.right, r.payload))
-    val allPayload = rights.flatMap(_.payload)
-    require(allPayload.distinct.size == allPayload.size,
-      s"payload columns must be disjoint across sources: $allPayload")
-    // and disjoint from the left frame itself — the final select emits
-    // left's columns plus the payload aliases, so an overlap would
-    // produce a duplicate output column that only fails (ambiguous
-    // reference) at the caller's NEXT col() use, far from here
-    val clash = allPayload.filter(leftCols.contains)
-    require(clash.isEmpty,
-      s"payload columns collide with left-frame columns: $clash")
-    rights.foreach(r => require(
-      r.right.schema(r.on).dataType == left.schema(leftOn).dataType,
-      s"'${r.on}' must match '$leftOn' type (${left.schema(leftOn).dataType})"))
-    // per-source namespaced tie-break columns (null on other sources —
-    // fills are per-source, so cross-source interleaving is irrelevant)
-    val tbCols = rights.zipWithIndex.flatMap { case (r, i) =>
-      r.tieBreak.map(c => (s"__asof_tb${i}_$c", i, c, r.right.schema(c).dataType))
-    }
-    val (rightSide, leftSide) = if (strict) (1, 0) else (0, 1)
-
-    val l = leftCols.map(col) ++
-      Seq(col(leftOn).as(t), lit(leftSide).as(side)) ++
-      payNames.zip(payTypes).map { case (p, tp) => lit(null).cast(tp).as(p) } ++
-      tbCols.map { case (n, _, _, tp) => lit(null).cast(tp).as(n) }
-    val unioned = rights.zipWithIndex.foldLeft(left.select(l: _*)) {
-      case (acc, (r, i)) =>
-        val sel = by.map(col) ++
-          leftCols.filterNot(by.contains).map(c =>
-            lit(null).cast(left.schema(c).dataType).as(c)) ++
-          Seq(col(r.on).as(t), lit(rightSide).as(side)) ++
-          payNames.zip(payTypes).zipWithIndex.map { case ((p, tp), j) =>
-            if (j == i) struct(r.payload.map(col): _*).as(p)
-            else lit(null).cast(tp).as(p)
-          } ++
-          tbCols.map { case (n, src, c, tp) =>
-            if (src == i) col(c).as(n) else lit(null).cast(tp).as(n)
-          }
-        acc.unionByName(r.right.select(sel: _*))
-    }
-    val ord: Seq[Column] = col(t).asc +: col(side).asc +:
-      tbCols.map { case (n, _, _, _) => col(n).asc_nulls_first }
-    val w = Window.partitionBy(by.map(col): _*).orderBy(ord: _*)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val filled = payNames.foldLeft(unioned)((df, p) =>
-      df.withColumn(p, last(col(p), ignoreNulls = true).over(w)))
-    filled
-      .filter(col(side) === leftSide)
-      .select(leftCols.map(col) ++ rights.zip(payNames).flatMap {
-        case (r, p) => r.payload.map(c => col(s"$p.$c").as(c))
-      }: _*)
   }
 
   /** [[backward]] with pandas merge_asof's `tolerance`: a match older

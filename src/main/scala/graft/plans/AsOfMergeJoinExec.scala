@@ -26,11 +26,9 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
   * specific winner dedup the right side first (the library's rating
   * feed already is unique per (id, ts)).
   *
-  * Null ordering times sort first (Spark's ascending default) and are
-  * treated as −∞: backward, a null-time right row is matchable by
-  * everything in its key group and a null-time left row matches only
-  * such rows; forward, a null-time left row matches its key group's
-  * first right row (inclusive) or first non-null-time right (strict).
+  * Null ordering times sort first (Spark's ascending default) and never
+  * match, the SQL rule: a null-time left row gets the null payload, and
+  * a null-time right row is consumed without becoming a match.
   *
   * No codegen: the operator is a cold-path merge whose per-row work is
   * two comparisons and a projection; the children's scans/exchanges
@@ -111,6 +109,7 @@ case class AsOfMergeJoinExec(
 
         private def nextBackward(): InternalRow = {
           val l = lIter.next()
+          if (l.isNullAt(lOnIdx)) return resultProj(joined(l, nullPay))
           val lKey = lKeyProj(l)
           val lT = t(l, lOnIdx)
           // consume right rows that are at-or-before this left row in
@@ -124,7 +123,7 @@ case class AsOfMergeJoinExec(
             val inWindow = c < 0 ||
               (c == 0 && (if (strictLocal) rT < lT else rT <= lT))
             if (inWindow) {
-              if (c == 0) {
+              if (c == 0 && !rRow.isNullAt(rOnIdx)) {
                 retained = payProj(rRow).copy()
                 retainedKey = rKeyProj(rRow).copy()
               }
@@ -141,6 +140,7 @@ case class AsOfMergeJoinExec(
 
         private def nextForward(): InternalRow = {
           val l = lIter.next()
+          if (l.isNullAt(lOnIdx)) return resultProj(joined(l, nullPay))
           val lKey = lKeyProj(l)
           val lT = t(l, lOnIdx)
           // skip right rows BEFORE this left row's window start; the

@@ -1,8 +1,8 @@
 package graft.queries
 
 import graft.Tables
-import graft.operators.{AsOfJoin, Dedup, Quantiles}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.operators.Quantiles
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -11,53 +11,118 @@ import org.apache.spark.sql.functions._
   * one entry point that takes raw trades to the enriched analytical
   * panel. Every stage is an operator that also has its own standalone
   * CORRECTNESS row; this chain is the composition, oracle-replayed stage
-  * by stage in one DuckDB CTE pipeline (the `tx_corpus_build` pattern):
+  * by stage in one DuckDB CTE pipeline (the `tx_corpus_build` pattern).
   *
-  *   1. panel stack + A12 priority dedup (enhanced/standard TRACE stack,
-  *      `stage1_pipeline.py:376-418` shape)
-  *   2. FISD master merge + F11 bond-type screen (step4)
-  *   3. X1 closed-form bond analytics + X2 curve spread (step5)
-  *   4. J11 as-of ratings AND amount-outstanding in ONE pass
-  *      ([[AsOfJoin.backwardMulti]] — the panel shuffles once, not per
-  *      enrichment; steps 6 + the 739-759 amount merge), with the
-  *      offering-amount coalesce fallback
-  *   5. J14 callable flag + J15 issuer->permno linker month-join (step7)
-  *   6. W10 anomaly + W14 first-change error flags (step8 detectors)
-  *   7. F12 final price filters (step9)
-  *   8. A8 cross-sectional winsorization (step10 table prep)
+  * Every step but the winsorize is keyed by bond, so all of them run
+  * inside ONE `repartition(id)` of ONE `events` scan:
+  *
+  *   1. A12 panel stack + priority dedup: a trade in both stacked
+  *      sources is the same row, so the stack is one filter
+  *      (`trc_st <> 'X' OR side = 'S'`) and a `row_number` over (id, ord)
+  *      collapses duplicate reports; F11's bond-type screen is
+  *      `id % 19 <> 0` on the scan (it drops null ids, as the FISD inner
+  *      join did)
+  *   2. one per-(id, dt) aggregate over every row: the panel's count and
+  *      VWAP over kept trades, the day's error flag, and the max-ord
+  *      rating (purchase) and amount (click) with their ords
+  *   3. one window per bond by dt: J14 callable (any error day of the
+  *      bond, read before step 4 drops error-only days) and the J11 as-of
+  *      ratings / amount-outstanding forward fill (steps 6 + the 739-759
+  *      amount merge)
+  *   4. days without a kept trade dropped; W10 anomaly + W14 first-change
+  *      error flags (step8 detectors), then F12 final price filters
+  *      (step9)
+  *   5. FISD master terms (step4), X1 closed-form analytics and X2 curve
+  *      spread (step5) as projections of `id`; the offering-amount
+  *      coalesce fallback; J15 issuer->permno linker month-join (step7,
+  *      a broadcast join)
+  *   6. A8 cross-sectional winsorization (step10 table prep), the one
+  *      `dt` exchange
+  *
+  * `Stage1Reference` (tests) keeps the stage-by-stage form this one must
+  * hash-equal.
   */
 object QStage1 extends Registry {
 
   /** The user-facing entry point: the enriched daily panel. */
-  def enrichedPanel(s: SparkSession, d: String): DataFrame = {
-    val tr = Trades.df(s, d)
+  def enrichedPanel(s: SparkSession, d: String): DataFrame =
+    enrichedFrom(Tables.events(s, d))
 
-    // 1 ── stack two overlapping panel sources, A12 priority dedup:
-    // the richer source (src=1) wins where both carry the same trade
-    val stacked = tr.filter(col("trc_st") =!= "X").withColumn("src", lit(1))
-      .unionByName(tr.filter(col("side") === "S").withColumn("src", lit(2)))
-    val panel = Dedup.keepFirst(stacked, keys = Seq("id", "ord"),
-        order = Seq(col("src")))
+  /** The chain over an `events`-shaped frame. */
+  def enrichedFrom(ev: DataFrame): DataFrame = {
+    // 1 ── one scan, one id partitioning for every per-bond step
+    val tr = Trades.of(ev, col("event_type"),
+        col("value").cast("decimal(18,2)").cast("double").as("v"))
+      .filter(col("id") % 19 =!= 0)
+      .repartition(col("id"))
+    // A12: a trade in both stacked sources is one row; of duplicate
+    // (id, ord) reports the first under (stacked, dt, dvol) is kept, a
+    // total order on everything a kept report contributes
+    val stacked = col("trc_st") =!= "X" || col("side") === "S"
+    val byOrd = Window.partitionBy(col("id"), col("ord"))
+      .orderBy(not(stacked), col("dt"), col("dvol"))
+    def ifKept(c: Column) = when(col("kept"), c)
+    def ordOf(eventType: String) =
+      when(col("event_type") === eventType, col("ord"))
+
+    // 2 ── the per-(id, dt) aggregate: hash(id) already clusters (id, dt)
+    val daily = tr
+      .withColumn("kept", stacked && row_number().over(byOrd) === 1)
       .groupBy(col("id"), col("dt"))
-      .agg(count(lit(1)).as("trade_count"),
-        (Tables.dsum4(col("dvol")) / Tables.dsum(col("qty"))).as("prc_vw"))
+      .agg(count(ifKept(lit(1))).as("trade_count"),
+        (Tables.dsum4(ifKept(col("dvol"))) / Tables.dsum(ifKept(col("qty"))))
+          .as("prc_vw"),
+        max(when(col("event_type") === "error", 1).otherwise(0)).as("err"),
+        max(ordOf("purchase")).as("r_ord"),
+        max_by(col("v"), ordOf("purchase")).as("rating"),
+        max(ordOf("click")).as("a_ord"),
+        max_by(col("v"), ordOf("click")).as("amt_out"))
 
-    // 2 ── FISD-style bond master (deterministic terms per id) + F11
-    val fisd = tr.select(col("id")).distinct().selectExpr(
-      "id",
+    // 3 ── callable + as-of fill. The fill carries the latest event DAY,
+    // so a null value beats an older non-null one; a null date never
+    // matches (the null-dt day sorts first and carries nothing)
+    val byDay = Window.partitionBy(col("id")).orderBy(col("dt"))
+    def fill(ord: String, value: String) =
+      last(when(col(ord).isNotNull && col("dt").isNotNull, struct(col(value))),
+          ignoreNulls = true)
+        .over(byDay.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+        .getField(value).as(value)
+    val filled = daily.select(col("id"), col("dt"), col("trade_count"),
+      col("prc_vw"),
+      max(col("err")).over(byDay.rowsBetween(
+        Window.unboundedPreceding, Window.unboundedFollowing)).as("callable"),
+      fill("r_ord", "rating"), fill("a_ord", "amt_out"))
+
+    // 4 ── panel days only; W10 anomaly (±5-row strictly-higher median)
+    // + W14 first-change flags, then the F12 screens
+    val arr =
+      """sort_array(filter(collect_list(prc_vw) over
+         (partition by id order by dt rows between 5 preceding and 5 following),
+         x -> x > prc_vw))"""
+    val screened = filled.filter(col("trade_count") > 0)
+      .withColumn("hi_med", expr(
+        s"""case when size($arr) = 0 then null
+            when size($arr) % 2 = 1 then element_at($arr, cast(size($arr) div 2 + 1 as int))
+            else (element_at($arr, cast(size($arr) div 2 as int))
+                  + element_at($arr, cast(size($arr) div 2 + 1 as int))) / 2 end"""))
+      .withColumn("anomaly",
+        when(col("hi_med") / expr("nullif(prc_vw, 0.0d)") >= 3, 1).otherwise(0))
+      .withColumn("rn", row_number().over(byDay))
+      .withColumn("adiff", abs(col("prc_vw") - lag(col("prc_vw"), 1).over(byDay)))
+      .withColumn("prc_dip",
+        when(col("rn") === 2 && col("adiff") > 35, 1).otherwise(0))
+      .filter(col("prc_vw") >= 5 && col("prc_vw") <= 1000 &&
+        col("anomaly") === 0 && col("prc_dip") === 0)
+
+    // 5 ── FISD terms, X1 analytics + X2 spread (the SAME closed-form
+    // expression strings as the standalone x1/x2 rows), the linker
+    val fisd = screened.selectExpr("*",
       "CASE id % 3 WHEN 0 THEN 1 WHEN 1 THEN 2 ELSE 4 END AS m",
       "2 + id % 9 AS years",
       "2.0e0 + (id % 13) / 2.0e0 AS c_pct",
       "(200 + id % 400) / 10000.0e0 AS y",
-      "CASE WHEN id % 19 = 0 THEN 'C' ELSE 'B' END AS bond_type",
       "CAST((id % 997 + 1) * 1000 AS DOUBLE) AS offering_amt")
-    val merged = panel.join(broadcast(fisd), Seq("id"))
-      .filter(col("bond_type") =!= "C")
-
-    // 3 ── X1 analytics + X2 spread: the SAME closed-form expression
-    // strings as the standalone x1/x2 rows (QBond.steps/curveExpr) —
-    // bit-identical across engines, pure projection, no shuffle
-    val analytics = QBond.steps.foldLeft(merged)(
+    val analytics = QBond.steps.foldLeft(fisd)(
         (df, st) => df.selectExpr("*" +: st: _*))
       .selectExpr("*",
         s"${QBond.macExpr} AS mac_dur",
@@ -66,35 +131,28 @@ object QStage1 extends Registry {
         "CAST(years AS DOUBLE) AS tenor")
       .selectExpr("*", s"${QBond.curveExpr} AS curve_y")
       .withColumn("credit_spread", col("y") - col("curve_y"))
-
-    // 4 ── ratings + amount-outstanding as-of enrichment in ONE pass.
-    // No keepLast pre-dedup: the per-source tieBreak folds the
-    // latest-event-per-day rule into the as-of window's own sort (among
-    // equal dates the max-ord row's payload wins the forward fill), so
-    // the event tables reach the union un-shuffled — two fewer
-    // exchanges than dedup-then-join, same values (the oracle still
-    // replays the dedup formulation).
-    val ev = Tables.events(s, d)
-    val ratings = ev.filter(col("event_type") === "purchase")
-      .select(col("user_id").as("id"), to_date(col("ts")).as("r_dt"),
-        col("event_id").as("r_ord"),
-        col("value").cast("decimal(18,2)").cast("double").as("rating"))
-    val amounts = ev.filter(col("event_type") === "click")
-      .select(col("user_id").as("id"), to_date(col("ts")).as("a_dt"),
-        col("event_id").as("a_ord"),
-        col("value").cast("decimal(18,2)").cast("double").as("amt_out"))
-    val asOf = AsOfJoin.backwardMulti(analytics, by = Seq("id"), leftOn = "dt",
-      rights = Seq(
-        AsOfJoin.Right(ratings, on = "r_dt", payload = Seq("rating"),
-          tieBreak = Seq("r_ord")),
-        AsOfJoin.Right(amounts, on = "a_dt", payload = Seq("amt_out"),
-          tieBreak = Seq("a_ord"))))
       .withColumn("amt_filled", coalesce(col("amt_out"), col("offering_amt")))
+      .withColumn("issuer6", col("id") % 31)
+      .withColumn("yyyymm", date_format(col("dt"), "yyyyMM"))
+      .join(broadcast(linker(ev)), Seq("issuer6", "yyyymm"), "left")
 
-    // 5 ── J14 callable flag + J15 issuer→permno monthly linker
-    val callable = ev.filter(col("event_type") === "error")
-      .select(col("user_id").as("id")).distinct()
-      .withColumn("callable", lit(1))
+    // 6 ── A8 cross-sectional winsorization of the surviving panel
+    Quantiles.winsorize(analytics,
+        groups = Seq("dt"), valueCol = "prc_vw",
+        tieBreak = Seq(col("id")),
+        qLo = 0.005, qHi = 0.995, outCol = "prc_w")
+      .select(col("id"), col("dt"), col("trade_count"), col("prc_vw"),
+        col("prc_w"), col("y").as("ytm"), col("pv").as("prfull"),
+        col("mac_dur"), col("mod_dur"), col("convexity"),
+        col("credit_spread"), col("rating"), col("amt_filled"),
+        col("callable"), col("permno"))
+  }
+
+  /** J15 issuer→permno monthly linker: the first permno per (issuer,
+    * month), the last month carried three months forward. `obs` is
+    * unique per (issuer6, month) and every carried month follows the
+    * last, so the union needs no dedup. */
+  private def linker(ev: DataFrame): DataFrame = {
     val obs = ev.filter(col("event_type") === "signup")
       .select((col("user_id") % 31).as("issuer6"),
         trunc(to_date(col("ts")), "MM").as("month_start"), col("user_id"))
@@ -105,54 +163,10 @@ object QStage1 extends Registry {
       .select(col("issuer6"), col("permno"),
         explode(array((1 to 3).map(i =>
           add_months(col("month_start"), i)): _*)).as("month_start"))
-    val linker = Dedup.keepFirst(
-        obs.select("issuer6", "month_start", "permno")
-          .unionByName(ext.select("issuer6", "month_start", "permno")),
-        keys = Seq("issuer6", "month_start"), order = Seq(col("permno")))
-      .withColumn("yyyymm", date_format(col("month_start"), "yyyyMM"))
-      .select("issuer6", "yyyymm", "permno")
-    val linked = asOf
-      .join(broadcast(callable), Seq("id"), "left")
-      .withColumn("callable", coalesce(col("callable"), lit(0)))
-      .withColumn("issuer6", col("id") % 31)
-      .withColumn("yyyymm", date_format(col("dt"), "yyyyMM"))
-      .join(broadcast(linker), Seq("issuer6", "yyyymm"), "left")
-
-    // 6 ── W10 anomaly (±5-row strictly-higher median) + W14 first-change
-    // flags over the panel: one exchange by id, shared sort by dt
-    val arr =
-      """sort_array(filter(collect_list(prc_vw) over
-         (partition by id order by dt rows between 5 preceding and 5 following),
-         x -> x > prc_vw))"""
-    val win = Window.partitionBy(col("id")).orderBy(col("dt"))
-    val flagged = linked
-      .withColumn("hi_med", expr(
-        s"""case when size($arr) = 0 then null
-            when size($arr) % 2 = 1 then element_at($arr, cast(size($arr) div 2 + 1 as int))
-            else (element_at($arr, cast(size($arr) div 2 as int))
-                  + element_at($arr, cast(size($arr) div 2 + 1 as int))) / 2 end"""))
-      .withColumn("anomaly",
-        when(col("hi_med") / expr("nullif(prc_vw, 0.0d)") >= 3, 1).otherwise(0))
-      .withColumn("rn", row_number().over(win))
-      .withColumn("adiff", abs(col("prc_vw") - lag(col("prc_vw"), 1).over(win)))
-      .withColumn("prc_dip",
-        when(col("rn") === 2 && col("adiff") > 35, 1).otherwise(0))
-
-    // 7 ── F12 final screens
-    val screened = flagged.filter(
-      col("prc_vw") >= 5 && col("prc_vw") <= 1000 &&
-        col("anomaly") === 0 && col("prc_dip") === 0)
-
-    // 8 ── A8 cross-sectional winsorization of the surviving panel
-    Quantiles.winsorize(screened,
-        groups = Seq("dt"), valueCol = "prc_vw",
-        tieBreak = Seq(col("id")),
-        qLo = 0.005, qHi = 0.995, outCol = "prc_w")
-      .select(col("id"), col("dt"), col("trade_count"), col("prc_vw"),
-        col("prc_w"), col("y").as("ytm"), col("pv").as("prfull"),
-        col("mac_dur"), col("mod_dur"), col("convexity"),
-        col("credit_spread"), col("rating"), col("amt_filled"),
-        col("callable"), col("permno"))
+    obs.select("issuer6", "month_start", "permno")
+      .unionByName(ext.select("issuer6", "month_start", "permno"))
+      .select(col("issuer6"),
+        date_format(col("month_start"), "yyyyMM").as("yyyymm"), col("permno"))
   }
 
   /** nested-select fold of QBond's step chain over a CTE name */

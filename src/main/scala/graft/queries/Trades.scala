@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The synthetic "intraday trade reports" view: a deterministic mapping of
@@ -15,8 +15,12 @@ import org.apache.spark.sql.functions._
   */
 object Trades {
 
-  def df(s: SparkSession, d: String): DataFrame =
-    Tables.events(s, d).select(
+  def df(s: SparkSession, d: String): DataFrame = of(Tables.events(s, d))
+
+  /** The mapping over any `events`-shaped frame; `carry` columns of `ev`
+    * ride along after the trade columns. */
+  def of(ev: DataFrame, carry: Column*): DataFrame =
+    ev.select(Seq(
       col("user_id").as("id"),
       to_date(col("ts")).as("dt"),
       col("ts"),
@@ -32,7 +36,7 @@ object Trades {
       when(col("event_id") % 3 === 0, "D").otherwise("C").as("contra"),
       when(col("event_type") === "error", "X")
         .when(col("event_type") === "signup", "R")
-        .otherwise("T").as("trc_st"))
+        .otherwise("T").as("trc_st")) ++ carry: _*)
 
   /** Same mapping as ANSI SQL for DuckDB oracles (CTE body, table `events`). */
   val sql: String =

@@ -30,6 +30,35 @@ class PlanBudgetSpec extends SparkSpec {
         s"joins: ${joins.size}")
   }
 
+  test("Stage-1 panel: one events scan under the one id exchange; ≤ 5 exchanges, ≤ 2 broadcasts") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val df = q("tp_stage1_panel")
+    val c = Plans.planCounts(df)
+    assert(c.shuffles <= 5 && c.broadcasts <= 2,
+      s"tp_stage1_panel shuffles: ${c.shuffles}, broadcasts: ${c.broadcasts}")
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.inputPlan
+      case p => p
+    }
+    // every per-bond step sits inside one hash(id) exchange: the
+    // aggregate and the windows above it add none of their own
+    val byId = plan.collect {
+      case e: ShuffleExchangeExec if (e.outputPartitioning match {
+        case h: HashPartitioning =>
+          h.expressions.flatMap(_.references.map(_.name)).contains("id")
+        case _ => false
+      }) => e
+    }
+    assert(byId.size == 1, s"exchanges on id: ${byId.size}\n$plan")
+    val scans = byId.head.collect { case s: FileSourceScanExec => s }
+    assert(scans.size == 1 &&
+      scans.head.relation.location.rootPaths.forall(_.getName == "events.parquet"),
+      s"scans under the id exchange: ${scans.map(_.relation.location.rootPaths)}")
+  }
+
   test("Dick-Nielsen cleaning alone is one grouped pass: one exchange") {
     val c = Plans.planCounts(graft.queries.QTracePipeline.cleanedDag(spark, sf))
     assert(c.shuffles <= 1, s"cleanedDag shuffles: ${c.shuffles}")

@@ -8,8 +8,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** The Stage-0 chain over different layouts and executions of the same
-  * trades.
+/** The Stage-0 chain and the Stage-1 panel over different layouts and
+  * executions of the same trades.
   *
   * The bucketed-layout flagship: trades written `bucketBy(8, "id")` feed
   * the SAME sorted pass per bond (clean, shift, bounce-back) with ZERO
@@ -25,14 +25,17 @@ import org.apache.spark.sql.functions._
   * when the trades are repartitioned (1, 7, 64 partitions) or shuffled,
   * under `spark.sql.shuffle.partitions` 1, 4 and 200, with AQE on and off,
   * and when the first attempt of every kernel task fails
-  * ([[Stage0RetryCheck]], `local[4,2]`).
+  * ([[RetryCheck]], `local[4,2]`). `tp_stage1_panel` does the same over
+  * its `events` input: it runs every per-bond step inside one
+  * `repartition(id)`, and this is what pins that the answer does not
+  * depend on how rows reach that partitioning.
   *
   * The memo the other Stage-0 queries share labels its build's jobs with
   * its key ([[graft.Caches.memo]]).
   */
 class BucketedTradesSpec extends SparkSpec {
 
-  import Stage0RetryCheck.{hashOf, queries}
+  import RetryCheck.{hashOf, queries}
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -131,23 +134,68 @@ class BucketedTradesSpec extends SparkSpec {
     }
   }
 
-  test("shift queries: first attempts failing inside the kernel's tasks, same answers (local[4,2])") {
+  /** the `local[4,2]` child's `hash` lines, after checking that it ran
+    * and that some task failed and was retried */
+  private lazy val retried: Map[String, String] = {
     import scala.jdk.CollectionConverters._
     val jvm = java.lang.management.ManagementFactory.getRuntimeMXBean
     val opens = jvm.getInputArguments.asScala.filter(a =>
       a.startsWith("--add-opens") || a.startsWith("-Dspark."))
     val cmd = Seq(s"${System.getProperty("java.home")}/bin/java", "-Xmx1g") ++ opens ++
       Seq("-cp", System.getProperty("java.class.path"),
-        "graft.queries.Stage0RetryCheck", sf)
+        "graft.queries.RetryCheck", sf)
     val out = new StringBuilder
     val exit = scala.sys.process.Process(cmd)
       .!(scala.sys.process.ProcessLogger(l => out ++= l + "\n", _ => ()))
     assert(exit == 0, s"child JVM exited $exit:\n$out")
     val lines = out.toString.linesIterator.map(_.split(" ")).toSeq
-    val hashes = lines.collect { case Array("hash", q, h) => q -> h }.toMap
     val failed = lines.collectFirst { case Array("failed_tasks", n) => n.toInt }
     assert(failed.exists(_ > 0), s"no task failed, so nothing was retried:\n$out")
-    assert(hashes == default, s"retried answers differ:\n$out")
+    lines.collect { case Array("hash", q, h) => q -> h }.toMap
+  }
+
+  test("shift queries: first attempts failing inside the kernel's tasks, same answers (local[4,2])") {
+    assert(retried.view.filterKeys(queries.contains).toMap == default,
+      s"retried answers differ: $retried")
+  }
+
+  private val stage1 = "tp_stage1_panel"
+  private lazy val stage1Default = registered(stage1)
+  private def stage1Over(ev: DataFrame): String = hashOf(QStage1.enrichedFrom(ev))
+  private def events = graft.Tables.events(spark, sf)
+
+  test("stage-1 panel: input repartitioned to 1, 7 and 64 partitions, same answer") {
+    assert(stage1Over(events) == stage1Default)
+    Seq(1, 7, 64).foreach { n =>
+      assert(stage1Over(events.repartition(n)) == stage1Default, s"repartition($n)")
+    }
+  }
+
+  test("stage-1 panel: input rows in a shuffled order, same answer") {
+    Seq(7L, 8L).foreach { seed =>
+      assert(stage1Over(events.orderBy(rand(seed))) == stage1Default,
+        s"orderBy(rand($seed))")
+    }
+  }
+
+  test("stage-1 panel: shuffle.partitions 1, 4 and 200, same answer") {
+    Seq("1", "4", "200").foreach { n =>
+      withConf("spark.sql.shuffle.partitions", n) {
+        assert(registered(stage1) == stage1Default, s"at $n")
+      }
+    }
+  }
+
+  test("stage-1 panel: AQE on and off, same answer") {
+    Seq("true", "false").foreach { on =>
+      withConf("spark.sql.adaptive.enabled", on) {
+        assert(registered(stage1) == stage1Default, s"aqe=$on")
+      }
+    }
+  }
+
+  test("stage-1 panel: first attempts failing in the scan and output tasks, same answer (local[4,2])") {
+    assert(retried.get(stage1).contains(stage1Default), s"retried: $retried")
   }
 
   test("the Stage-0 memo's jobs carry the memo's key") {

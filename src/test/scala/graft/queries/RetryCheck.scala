@@ -7,21 +7,24 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** The Stage-0 queries in a `local[4,2]` session (tasks get a second
-  * attempt), with every first attempt of a task that runs the grouped
-  * kernel failing partway through its output. Prints one `hash <query>
-  * <md5>` line per query and `failed_tasks <n>`.
+/** The Stage-0 queries and `tp_stage1_panel` in a `local[4,2]` session
+  * (tasks get a second attempt), with first attempts failing partway
+  * through their output. Prints one `hash <query> <md5>` line per query
+  * and `failed_tasks <n>`.
   *
-  *   java -cp <test classpath> graft.queries.Stage0RetryCheck <sfDir>
+  *   java -cp <test classpath> graft.queries.RetryCheck <sfDir>
   *
-  * The failure is thrown by a projection over the pass's output, in the
-  * kernel's own task while the kernel is part-way through its bonds, so
-  * the retry re-runs the kernel from the start of its partition.
+  * Stage 0: the failure is thrown by a projection over the pass's output,
+  * in the kernel's own task while the kernel is part-way through its
+  * bonds, so the retry re-runs the kernel from the start of its
+  * partition. Stage 1: the failure is thrown while the `events` scan
+  * feeds the id exchange and again while the winsorized panel is
+  * produced, so both the map side and the last stage re-run.
   * `BucketedTradesSpec` runs it in its own JVM: local mode retries tasks
   * only when the master says so, and the test JVM's shared session is
   * `local[4]`.
   */
-object Stage0RetryCheck {
+object RetryCheck {
 
   val queries: Seq[String] = Seq("tp_clean_chain", "tp_decimal_shift",
     "tp_bounceback_flags", "tp_error_replay", "tp_full_panel")
@@ -37,7 +40,7 @@ object Stage0RetryCheck {
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder()
       .master("local[4,2]")
-      .appName("stage0-retry")
+      .appName("retry-check")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.extensions", "graft.GraftExtensions")
@@ -57,6 +60,11 @@ object Stage0RetryCheck {
     val flagged = QTracePipeline.flaggedFrom(Trades.df(spark, args(0)))
       .withColumn("ord", failFirstAttempt(col("ord")))
     queries.foreach(q => println(s"hash $q ${hashOf(QTracePipeline.overFlagged(q, flagged))}"))
+    val ev = graft.Tables.events(spark, args(0))
+      .withColumn("event_id", failFirstAttempt(col("event_id")))
+    val panel = QStage1.enrichedFrom(ev)
+      .withColumn("id", failFirstAttempt(col("id")))
+    println(s"hash tp_stage1_panel ${hashOf(panel)}")
     // the listener bus is asynchronous: stop() delivers every event
     spark.stop()
     println(s"failed_tasks ${failed.get}")
