@@ -5,10 +5,6 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
     val spark = Sessions.local()
-    // optional dedup hash profile (md5 default): lets the cluster-scale
-    // xxhash64 family be benched — results are NOT oracle-comparable
-    sys.env.get("SPARK_GRAFT_HASH_PROFILE")
-      .foreach(p => spark.conf.set("spark.graft.dedup.hashProfile", p))
     // warm the session once (parquet reader, shuffle machinery, codegen
     // infrastructure) so the first timed query measures itself, not
     // SparkSession startup

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-import graft.expressions.{BandBuckets, DotLongs, DotQuant6, HilbertIndex, Log2Milli, Md5Prefix60, MinHashK, NormalizeWs, Quant6Array, RhpBandKeys, ShingleHash60, ShingleXx60, Simhash60, TokenGramHash60, TokenGramPos60}
+import graft.expressions.{BandBuckets, DotLongs, DotQuant6, HilbertIndex, Log2Milli, Md5Prefix60, MinHashK, NormalizeWs, Quant6Array, RhpBandKeys, ShingleHash60, Simhash60, TokenGramHash60, TokenGramPos60}
 
 /** SparkSessionExtensions hook registering the library's native
   * expressions as SQL functions. Activate with
@@ -56,7 +56,7 @@ object GraftExtensions {
 
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  /** shared foldable-literal extractors for the builders below */
+  /** shared foldable-literal extractor for the builders below */
   private def intLit(fn: String, what: String)(
       e: org.apache.spark.sql.catalyst.expressions.Expression): Int = {
     if (!e.foldable) throw new IllegalArgumentException(
@@ -68,17 +68,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       case b: java.lang.Byte => b.intValue
       case other => throw new IllegalArgumentException(
         s"$fn: $what must be an integer literal, got $other")
-    }
-  }
-
-  private def boolLit(fn: String, what: String)(
-      e: org.apache.spark.sql.catalyst.expressions.Expression): Boolean = {
-    if (!e.foldable) throw new IllegalArgumentException(
-      s"$fn: $what must be a foldable boolean literal")
-    e.eval() match {
-      case b: java.lang.Boolean => b.booleanValue
-      case other => throw new IllegalArgumentException(
-        s"$fn: $what must be a boolean literal, got $other")
     }
   }
 
@@ -109,18 +98,15 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       children => NormalizeWs(children.head)),
     (new FunctionIdentifier("simhash60"),
       new ExpressionInfo(classOf[Simhash60].getName, "simhash60"),
-      children => Simhash60(children.head,
-        boolLit("simhash60", "useXx")(children(1)))),
+      children => Simhash60(children.head)),
     (new FunctionIdentifier("tokengramhash60"),
       new ExpressionInfo(classOf[TokenGramHash60].getName, "tokengramhash60"),
       children => TokenGramHash60(children.head,
-        intLit("tokengramhash60", "n")(children(1)),
-        boolLit("tokengramhash60", "useXx")(children(2)))),
+        intLit("tokengramhash60", "n")(children(1)))),
     (new FunctionIdentifier("tokengrampos60"),
       new ExpressionInfo(classOf[TokenGramPos60].getName, "tokengrampos60"),
       children => TokenGramPos60(children.head,
-        intLit("tokengrampos60", "n")(children(1)),
-        boolLit("tokengrampos60", "useXx")(children(2)))),
+        intLit("tokengrampos60", "n")(children(1)))),
     (new FunctionIdentifier("quant6arr"),
       new ExpressionInfo(classOf[Quant6Array].getName, "quant6arr"),
       children => Quant6Array(children.head)),
@@ -140,10 +126,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(classOf[ShingleHash60].getName, "shinglehash60"),
       children => ShingleHash60(children.head,
         intLit("shinglehash60", "n")(children(1)))),
-    (new FunctionIdentifier("shinglexx60"),
-      new ExpressionInfo(classOf[ShingleXx60].getName, "shinglexx60"),
-      children => ShingleXx60(children.head,
-        intLit("shinglexx60", "n")(children(1)))),
     (new FunctionIdentifier("log2milli"),
       new ExpressionInfo(classOf[Log2Milli].getName, "log2milli"),
       children => Log2Milli(children.head)),
@@ -154,7 +136,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     builders.foreach(ext.injectFunction)
-    // domain optimizer rules (each carries its own enable conf)
+    // domain optimizer rules
     ext.injectOptimizerRule(_ => graft.plans.LevenshteinBoundRule)
     ext.injectOptimizerRule(_ => graft.plans.RangeJoinRewriteRule)
     // whole-operator extension: the native as-of join's planner strategy

@@ -89,7 +89,7 @@ object ManifestProbe {
 
     // ---- 1+2: cold/warm entries() parse + retained heap --------------
     (1 to 3).foreach { r =>
-      SnapshotLog.resetEntryCache(); SnapshotLog.resetSegCache()
+      SnapshotLog.resetEntryCache()
       val h0 = usedHeap()
       t0 = System.nanoTime()
       val es = SnapshotLog.entries(dir, v)
@@ -113,7 +113,7 @@ object ManifestProbe {
 
     // ---- 4: DSv2 selective plan + read over the full manifest ---------
     (1 to 3).foreach { r =>
-      SnapshotLog.resetEntryCache(); SnapshotLog.resetSegCache()
+      SnapshotLog.resetEntryCache()
       t0 = System.nanoTime()
       val df = spark.read.format("graft-snapshot")
         .option("versionAsOf", v).load(dir).filter("k <= 999")

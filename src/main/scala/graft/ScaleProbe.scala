@@ -220,8 +220,7 @@ object ScaleProbe {
     // it) + its count (where the LAZY stages pay; ~checkpoint read for
     // the barrier stages). Counts run in build order so each lazy stage
     // pays only its own increment over persisted predecessors.
-    val stageTimes = graft.queries.QText.corpusStageOrder
-        .filter(stages.contains).map { n =>
+    val stageTimes = graft.queries.QText.corpusStageOrder.map { n =>
       val t0 = System.nanoTime()
       val rows = stages(n).count()
       val secs = (System.nanoTime() - t0) / 1e9 +

@@ -1,7 +1,5 @@
 package graft.clean
 
-import org.apache.spark.sql.DataFrame
-
 /** Decimal-shift price corrector (W7) — Spark restatement of the
   * reference's `decimal_shift_corrector`
   * (`stage0/create_daily_enhanced_trace.py:764-963`, params
@@ -118,22 +116,6 @@ object DecimalShift {
   /** One row's shift: the flag, the factor, the suggested price and the
     * anchor it was judged against. */
   final case class Shift(flag: Int, factor: Any, price: Any, anchor: Any)
-
-  /** Adds `dec_shift_flag` (int), `dec_shift_factor`, `suggested_price`,
-    * `anchor_price` to `df`, from one [[Stage0]] pass per id sorted by
-    * (dtCol, ordCol). `ordCol` must be a total order within (idCol,
-    * dtCol) — the reference's stable (date, time) sort. Rows with a null
-    * id get no anchor.
-    */
-  def withSuggestions(
-      df: DataFrame,
-      idCol: String,
-      dtCol: String,
-      ordCol: String,
-      priceCol: String,
-      p: Params = Params()): DataFrame =
-    Stage0.pass(df, Stage0.Steps(dickNielsen = false, shift = true, bounce = false),
-      idCol, dtCol, ordCol, priceCol, shiftP = p)
 
   /** Spark's ascending order on doubles: -0.0 equals 0.0, NaN above all. */
   private def cmp(a: Double, b: Double): Int = if (a == b) 0 else java.lang.Double.compare(a, b)

@@ -43,20 +43,18 @@ object Stage0 {
     val all: Steps = Steps(dickNielsen = true, shift = true, bounce = true)
   }
 
-  /** The one grouped pass. Input columns: the id, `ord` and price columns;
-    * `dt` for the cleaning and the shift; `qty`, `side`, `contra` and
-    * `trc_st` for the cleaning. `ord` must order the rows of a bond, and
-    * is read as a non-null long by the bounce-back step. */
+  /** The one grouped pass. Input columns: `id`, `ord` and `price`; `dt`
+    * for the cleaning and the shift; `qty`, `side`, `contra` and `trc_st`
+    * for the cleaning. `ord` must order the rows of a bond — a total
+    * order within (id, dt) for the shift, the reference's stable
+    * (date, time) sort — and is read as a non-null long by the
+    * bounce-back step. Rows with a null id get no shift anchor. */
   def pass(
       df: DataFrame,
       steps: Steps,
-      idCol: String = "id",
-      dtCol: String = "dt",
-      ordCol: String = "ord",
-      priceCol: String = "price",
       shiftP: DecimalShift.Params = DecimalShift.Params(),
       bounceP: BounceBack.Params = BounceBack.Params()): DataFrame = {
-    val in = df.withColumn("__p", col(priceCol).cast("double"))
+    val in = df.withColumn("__p", col("price").cast("double"))
     val schema = in.schema
     var out = StructType(schema.fields.init)
     if (steps.shift)
@@ -68,12 +66,12 @@ object Stage0 {
     val sorted = steps.dickNielsen || steps.shift
     def at(c: String, needed: Boolean) = if (needed) schema.fieldIndex(c) else -1
     val dn = steps.dickNielsen
-    val kernel = new Kernel(steps, schema.length - 1, at(dtCol, sorted),
-      schema.fieldIndex(ordCol), at(priceCol, dn), at("qty", dn), at("side", dn),
+    val kernel = new Kernel(steps, schema.length - 1, at("dt", sorted),
+      schema.fieldIndex("ord"), at("price", dn), at("qty", dn), at("side", dn),
       at("contra", dn), at("trc_st", dn), shiftP, bounceP)
-    val order = if (sorted) Seq(col(dtCol), col(ordCol)) else Seq(col(ordCol))
-    in.groupBy(col(idCol))
-      .as[Row, Row](Encoders.row(StructType(Seq(schema(idCol)))), Encoders.row(schema))
+    val order = if (sorted) Seq(col("dt"), col("ord")) else Seq(col("ord"))
+    in.groupBy(col("id"))
+      .as[Row, Row](Encoders.row(StructType(Seq(schema("id")))), Encoders.row(schema))
       .flatMapSortedGroups(order: _*)((key, it) => kernel(key.isNullAt(0), it.toArray))(
         Encoders.row(out))
       .toDF()

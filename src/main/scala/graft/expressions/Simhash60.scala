@@ -1,9 +1,8 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
-import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native 60-bit SimHash of a NORMALIZED document in one pass — the
@@ -17,15 +16,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * and only band keys shuffle — the same scale shape as the MinHash
   * profile pass. Input must already be [[NormalizeWs]]-normalized
   * (single-space token separators); an empty string is one empty token,
-  * exactly like `split('', ' ')`.
-  *
-  * @param useXx hash profile: false = md5-derived
-  *              ([[Md5Prefix60]], DuckDB-mirrored), true = XxHash64
-  *              (seed 42, Spark's `xxhash64`) masked to 60 bits —
-  *              `spark.graft.dedup.hashProfile=xxhash64`, resolved at
-  *              plan build like every other profile branch.
+  * exactly like `split('', ' ')`. Tokens hash with the md5-derived
+  * [[Md5Prefix60]], so the signature is DuckDB-mirrored.
   */
-case class Simhash60(child: Expression, useXx: Boolean)
+case class Simhash60(child: Expression)
     extends UnaryExpression with ExpectsInputTypes {
 
   override def inputTypes = Seq(StringType)
@@ -33,11 +27,11 @@ case class Simhash60(child: Expression, useXx: Boolean)
   override def prettyName: String = "simhash60"
 
   override protected def nullSafeEval(input: Any): Any =
-    Simhash60.signature(input.asInstanceOf[UTF8String], useXx)
+    Simhash60.signature(input.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev,
-      c => s"graft.expressions.Simhash60.signature($c, $useXx)")
+      c => s"graft.expressions.Simhash60.signature($c)")
 
   override protected def withNewChildInternal(newChild: Expression): Simhash60 =
     copy(child = newChild)
@@ -45,9 +39,7 @@ case class Simhash60(child: Expression, useXx: Boolean)
 
 object Simhash60 {
 
-  private val Mask60 = (1L << 60) - 1
-
-  def signature(s: UTF8String, useXx: Boolean): Long = {
+  def signature(s: UTF8String): Long = {
     // tokens are byte ranges between 0x20 separators (0x20 never occurs
     // inside a UTF-8 multi-byte sequence) — no String decode, no
     // per-token substring/re-encode; empty string = one empty token,
@@ -60,11 +52,7 @@ object Simhash60 {
     while (!done) {
       var end = start
       while (end < len && bytes(end) != ' '.toByte) end += 1
-      val h =
-        if (useXx)
-          XXH64.hashUnsafeBytes(bytes,
-            Platform.BYTE_ARRAY_OFFSET + start, end - start, 42L) & Mask60
-        else Md5Prefix60.hashRange(bytes, start, end - start)
+      val h = Md5Prefix60.hashRange(bytes, start, end - start)
       var j = 0
       while (j < 60) {
         if (((h >>> j) & 1L) == 1L) counts(j) += 1 else counts(j) -= 1

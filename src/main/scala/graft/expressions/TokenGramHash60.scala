@@ -1,10 +1,9 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
-import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Distinct token n-gram hashes of a NORMALIZED document in one pass —
@@ -19,14 +18,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * for space positions and hashes byte ranges directly: no token array,
   * no per-gram string/array allocation, no regex. (0x20 never occurs
   * inside a UTF-8 multi-byte sequence, so byte-level space scanning is
-  * exact.) Value-equal to the composed form under both hash profiles
-  * (TokenGramSpec); documents with fewer than n tokens yield an empty
+  * exact.) Value-equal to the composed form (TokenGramSpec); documents with fewer than n tokens yield an empty
   * array, mirroring the `size(tokens) >= n` pre-filter + explode.
   *
-  * @param n     gram width (tokens), a plan-time literal
-  * @param useXx hash profile (see [[Simhash60]])
+  * @param n gram width (tokens), a plan-time literal
   */
-case class TokenGramHash60(child: Expression, n: Int, useXx: Boolean)
+case class TokenGramHash60(child: Expression, n: Int)
     extends UnaryExpression with ExpectsInputTypes {
 
   require(n >= 1, s"gram width must be >= 1, got $n")
@@ -36,11 +33,11 @@ case class TokenGramHash60(child: Expression, n: Int, useXx: Boolean)
   override def prettyName: String = "tokengramhash60"
 
   override protected def nullSafeEval(input: Any): Any =
-    TokenGramHash60.hashes(input.asInstanceOf[UTF8String], n, useXx)
+    TokenGramHash60.hashes(input.asInstanceOf[UTF8String], n)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev,
-      c => s"graft.expressions.TokenGramHash60.hashes($c, $n, $useXx)")
+      c => s"graft.expressions.TokenGramHash60.hashes($c, $n)")
 
   override protected def withNewChildInternal(newChild: Expression): TokenGramHash60 =
     copy(child = newChild)
@@ -48,9 +45,7 @@ case class TokenGramHash60(child: Expression, n: Int, useXx: Boolean)
 
 object TokenGramHash60 {
 
-  private val Mask60 = (1L << 60) - 1
-
-  def hashes(s: UTF8String, n: Int, useXx: Boolean): GenericArrayData = {
+  def hashes(s: UTF8String, n: Int): GenericArrayData = {
     val bytes = s.getBytes
     val len = bytes.length
     // token start offsets (normalized text: single-space separators) —
@@ -72,12 +67,7 @@ object TokenGramHash60 {
     while (g + n <= tokens) {
       val from = starts(g)
       val until = gramEnd(g + n - 1)
-      val h =
-        if (useXx)
-          XXH64.hashUnsafeBytes(bytes,
-            Platform.BYTE_ARRAY_OFFSET + from, until - from, 42L) & Mask60
-        else Md5Prefix60.hashRange(bytes, from, until - from)
-      seen.add(h)
+      seen.add(Md5Prefix60.hashRange(bytes, from, until - from))
       g += 1
     }
     val out = new Array[Long](seen.size())

@@ -1,10 +1,9 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
-import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** POSITIONAL token n-gram hashes of a normalized document: element `i`
@@ -12,7 +11,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * `i`, duplicates retained — `posexplode` recovers (start, hash).
   *
   * The sibling of [[TokenGramHash60]] (same byte-range scan over the
-  * single-space-normalized text, same 60-bit md5/xxhash64 profiles); that
+  * single-space-normalized text, same 60-bit md5 hash); that
   * expression deduplicates for set-membership work (decontamination),
   * this one keeps order and multiplicity for window-level substring
   * dedup, where a window's POSITION is the answer (duplicated-span
@@ -20,10 +19,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * corpus duplicate. Documents with fewer than `n` tokens yield an empty
   * array.
   *
-  * @param n     window width (tokens), a plan-time literal
-  * @param useXx hash profile (see [[Simhash60]])
+  * @param n window width (tokens), a plan-time literal
   */
-case class TokenGramPos60(child: Expression, n: Int, useXx: Boolean)
+case class TokenGramPos60(child: Expression, n: Int)
     extends UnaryExpression with ExpectsInputTypes {
 
   require(n >= 1, s"window width must be >= 1, got $n")
@@ -33,11 +31,11 @@ case class TokenGramPos60(child: Expression, n: Int, useXx: Boolean)
   override def prettyName: String = "tokengrampos60"
 
   override protected def nullSafeEval(input: Any): Any =
-    TokenGramPos60.hashes(input.asInstanceOf[UTF8String], n, useXx)
+    TokenGramPos60.hashes(input.asInstanceOf[UTF8String], n)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev,
-      c => s"graft.expressions.TokenGramPos60.hashes($c, $n, $useXx)")
+      c => s"graft.expressions.TokenGramPos60.hashes($c, $n)")
 
   override protected def withNewChildInternal(newChild: Expression): TokenGramPos60 =
     copy(child = newChild)
@@ -45,9 +43,7 @@ case class TokenGramPos60(child: Expression, n: Int, useXx: Boolean)
 
 object TokenGramPos60 {
 
-  private val Mask60 = (1L << 60) - 1
-
-  def hashes(s: UTF8String, n: Int, useXx: Boolean): GenericArrayData = {
+  def hashes(s: UTF8String, n: Int): GenericArrayData = {
     val bytes = s.getBytes
     val len = bytes.length
     val starts = new Array[Int](len + 2)
@@ -66,11 +62,7 @@ object TokenGramPos60 {
     while (g + n <= tokens) {
       val from = starts(g)
       val until = gramEnd(g + n - 1)
-      out(g) =
-        if (useXx)
-          XXH64.hashUnsafeBytes(bytes,
-            Platform.BYTE_ARRAY_OFFSET + from, until - from, 42L) & Mask60
-        else Md5Prefix60.hashRange(bytes, from, until - from)
+      out(g) = Md5Prefix60.hashRange(bytes, from, until - from)
       g += 1
     }
     new GenericArrayData(out)

@@ -20,11 +20,8 @@ import org.apache.spark.sql.functions._
   *
   * All hashes are md5-derived ([[TextOps.hash60]]) so every stage is
   * engine-portable and DuckDB-oracle-checkable — no engine-private murmur
-  * seeds. At cluster scale set `spark.graft.dedup.hashProfile=xxhash64`
-  * ([[TextOps.hashProfile]]): Spark's codegen'd XxHash64 replaces the md5
-  * family in every tier with identical plan shapes and identical
-  * exact-duplicate decisions (only near-dup bucket geometry shifts —
-  * and loses DuckDB oracle checkability, which is why `md5` is default).
+  * or xxhash seeds (DuckDB has no xxhash64, so a faster hash family would
+  * cost the oracle).
   */
 object Dedup {
 
@@ -56,14 +53,11 @@ object Dedup {
        + 40503 * (sh % 1073741824) + 12345) % 2147483647"""
 
   def shingleHashes(docs: DataFrame, idCol: String, textCol: String, n: Int): DataFrame = {
-    // both profiles are native one-pass expressions over the normalized
-    // text (shinglehash60 polynomial / shinglexx60 XxHash64 byte ranges)
-    // — identical plan shape, per-document distinct, shingle strings
-    // never exist
+    // one native pass over the normalized text (shinglehash60
+    // polynomial), per-document distinct — shingle strings never exist
     val hashed =
       docs.select(col(idCol).as("id"),
-        explode(array_distinct(call_function(
-          TextOps.shingleFn(docs.sparkSession),
+        explode(array_distinct(call_function("shinglehash60",
           TextOps.normalized(col(textCol)), lit(n)))).as("sh"))
     hashed.select(col("id"), col("sh"),
       (col("sh") % minhashP).as("h1"), expr(h2Sql).as("h2"))
@@ -133,8 +127,7 @@ object Dedup {
     // whole-document regex per shingle position (O(len²) per document)
     val normed = docs.select(col(idCol).as("id"),
       TextOps.normalized(col(textCol)).as("t"))
-    val arr = array_distinct(call_function(
-      TextOps.shingleFn(docs.sparkSession), col("t"), lit(n)))
+    val arr = array_distinct(call_function("shinglehash60", col("t"), lit(n)))
     normed.select(col("id"), arr.as("arr"))
       .withColumn("sz", size(col("arr")).cast("long"))
       .withColumn("mh", call_function("minhashk", col("arr"), lit(k)))
@@ -391,16 +384,13 @@ object Dedup {
     * ONE doc-keyed exchange: the islands window partitions by id, and
     * the span groupBy's (id, grp) clustering is satisfied by the id
     * partitioning. A hot boilerplate hash lands in one task either way;
-    * the window's per-group count is a single streaming pass. Honors
-    * [[TextOps.hashProfile]] (md5 default = DuckDB-oracle-portable,
-    * xxhash64 at cluster scale).
+    * the window's per-group count is a single streaming pass.
     */
   def duplicateWindowSpans(docs: DataFrame, idCol: String, textCol: String,
       w: Int): DataFrame = {
-    val useXx = TextOps.hashProfile(docs.sparkSession) == "xxhash64"
     val wins = docs.select(col(idCol).as("id"),
         posexplode(call_function("tokengrampos60",
-          TextOps.normalized(col(textCol)), lit(w), lit(useXx))))
+          TextOps.normalized(col(textCol)), lit(w))))
       .select(col("id"), (col("pos") + 1).as("start"), col("col").as("fp"))
     val dup = wins
       .withColumn("n_occ", count(lit(1)).over(Window.partitionBy(col("fp"))))
@@ -524,11 +514,9 @@ object Dedup {
     * contraction rounds. At 100 TB the shrinking EDGE SET is the bigger
     * win: late rounds shuffle a fraction of the input instead of the
     * whole graph every round. Skew note: a giant component contracts
-    * into one high-degree supernode; for that regime
-    * [[canonicalClustersStarStar]] (selected via
-    * `spark.graft.cc.algo=starstar`) bounds per-node fan-in. Each round
-    * passes through [[graft.Caches.barrier]] to truncate the growing
-    * lineage (iterative DAGs re-plan from scratch otherwise); with
+    * into one high-degree supernode, whose neighborhood one task gathers.
+    * Each round passes through [[graft.Caches.barrier]] to truncate the
+    * growing lineage (iterative DAGs re-plan from scratch otherwise); with
     * `spark.graft.checkpoint.dir` set the barrier is a RELIABLE
     * checkpoint that survives executor loss.
     */
@@ -578,98 +566,13 @@ object Dedup {
       superLabels.unpersist(false)
       iter += 1
     }
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      System.err.println(s"[cc] converged=${nEdges == 0} after $iter rounds")
-    // mirror the star-star path's failure behavior: labels are only
-    // guaranteed component-consistent at convergence — mid-contraction
-    // labels can under-merge a component, which would silently split
-    // clusters downstream
+    // labels are only guaranteed component-consistent at convergence —
+    // mid-contraction labels can under-merge a component, which would
+    // silently split clusters downstream
     if (nEdges > 0) throw new IllegalStateException(
       s"canonicalClusters did not converge in $maxIter rounds " +
         s"($nEdges edges remain) — raise maxIter")
     members
-  }
-
-  /** Connected components via alternating LARGE-STAR / SMALL-STAR rounds
-    * (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-    * the web-graph-scale alternative to [[canonicalClusters]]'s
-    * contraction: provably O(log² n) rounds with NO per-node neighborhood
-    * materialization (everything is a grouped min joined back per edge,
-    * so a hub node never gathers its neighbor list on one task — the
-    * skew contraction cannot avoid when a giant component collapses into
-    * one supernode).
-    *
-    *  - large-star(u): every neighbor v > u re-attaches to
-    *    m(u) = min(Γ(u) ∪ u). Processing the SYMMETRIC edge view means
-    *    each undirected edge {a<b} contributes exactly (b, m(a)).
-    *  - small-star(u): the smaller neighbors (and u itself) re-attach to
-    *    their min.
-    *
-    * Converged when the small-star output stabilizes: edges then form
-    * stars rooted at each component's min, which IS the canonical map.
-    * Selected by `spark.graft.cc.algo = starstar` in the dd_cluster row;
-    * contraction stays the default (fewer rounds on the corpus-sized
-    * candidate graphs this library benches — star-star wins when a
-    * component is too big for its supernode).
-    */
-  def canonicalClustersStarStar(pairs: DataFrame, maxIter: Int = 30): DataFrame = {
-    def canon(df: DataFrame): DataFrame = df.select(
-      least(col("a"), col("b")).as("a"), greatest(col("a"), col("b")).as("b"))
-      .distinct()
-    var edges = canon(pairs.select(col("id_a").as("a"), col("id_b").as("b")))
-      .filter(col("a") =!= col("b"))
-      .transform(graft.Caches.barrier(_))
-    val allNodes = edges.select(col("a").as("id"))
-      .unionByName(edges.select(col("b").as("id"))).distinct()
-      .transform(graft.Caches.barrier(_))
-    var iter = 0
-    var stable = false
-    while (!stable && iter < maxIter) {
-      val sym = edges.unionByName(
-        edges.select(col("b").as("a"), col("a").as("b")))
-      // m(u) over the FULL neighborhood (plus u itself)
-      val mFull = sym.groupBy(col("a").as("u"))
-        .agg(min(col("b")).as("mn"))
-        .select(col("u"), least(col("u"), col("mn")).as("m"))
-      // large-star: per symmetric edge (u, v) with v > u → (v, m(u))
-      val large = sym.filter(col("b") > col("a"))
-        .join(mFull, col("a") === col("u"))
-        .select(col("b").as("a"), col("m").as("b"))
-      val largeE = canon(large).filter(col("a") =!= col("b"))
-        .transform(graft.Caches.barrier(_))
-      // small-star over the large-star output: per edge (u, v) v < u,
-      // m = min of u's smaller neighbors; emit (v, m) [v ≠ m] and (u, m)
-      val symL = largeE.unionByName(
-        largeE.select(col("b").as("a"), col("a").as("b")))
-      val smaller = symL.filter(col("b") < col("a"))
-      val mSmall = smaller.groupBy(col("a").as("u"))
-        .agg(min(col("b")).as("m"))
-      val viaNbrs = smaller.join(mSmall, col("a") === col("u"))
-        .filter(col("b") =!= col("m"))
-        .select(col("b").as("a"), col("m").as("b"))
-      val viaSelf = mSmall.select(col("u").as("a"), col("m").as("b"))
-      val next = canon(viaNbrs.unionByName(viaSelf))
-        .filter(col("a") =!= col("b"))
-        .transform(graft.Caches.barrier(_))
-      stable = next.exceptAll(edges).unionByName(edges.exceptAll(next)).isEmpty
-      edges = next
-      iter += 1
-    }
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      System.err.println(s"[cc-starstar] stable=$stable after $iter rounds")
-    // the post-loop labeling is only valid on a CONVERGED star graph —
-    // a non-stable edge set can hold two roots for one child, which
-    // would silently emit a multi-row canonical map; fail loudly instead
-    // (contraction's worst case is stale-but-unique labels, this one's
-    // is corrupt output)
-    if (!stable) throw new IllegalStateException(
-      s"canonicalClustersStarStar did not converge in $maxIter rounds — raise maxIter")
-    // converged edges are star edges (root = a, child = b): label children
-    // by their root, roots (and any node isolated by contraction of a
-    // 2-cycle) by themselves
-    val childLabels = edges.select(col("b").as("id"), col("a").as("canonical"))
-    allNodes.join(childLabels, Seq("id"), "left")
-      .select(col("id"), coalesce(col("canonical"), col("id")).as("canonical"))
   }
 
   /** 60-bit SimHash signature from whitespace tokens: bit j is set when
@@ -682,10 +585,8 @@ object Dedup {
     // relation never exists and the per-doc aggregation EXCHANGE
     // disappears; only band keys shuffle downstream (same scale shape
     // as docProfilesLocal). Value-pinned against simhashExploded.
-    val useXx = TextOps.hashProfile(docs.sparkSession) == "xxhash64"
     docs.select(col(idCol).as("id"),
-        call_function("simhash60",
-          TextOps.normalized(col(textCol)), lit(useXx)).as("simhash"))
+        call_function("simhash60", TextOps.normalized(col(textCol))).as("simhash"))
       // a null text has no token rows in the exploded form — drop it
       // here too so both formulations emit the same id set
       .filter(col("simhash").isNotNull)
@@ -700,7 +601,7 @@ object Dedup {
       docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     val toks = docs.select(col(idCol).as("id"),
       explode(TextOps.tokens(col(textCol))).as("tok"))
-      .withColumn("h", TextOps.profileHash60(docs.sparkSession)(col("tok")))
+      .withColumn("h", TextOps.hash60(col("tok")))
     val bitSums = (0 until 60).map(j =>
       sum(when(expr(s"(shiftright(h, $j) & 1) = 1"), 1).otherwise(-1)).as(s"c$j"))
     val wide = toks.groupBy(col("id")).agg(bitSums.head, bitSums.tail: _*)

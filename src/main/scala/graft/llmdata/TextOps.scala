@@ -33,49 +33,13 @@ object TextOps {
     */
   def hash60(s: Column): Column = call_function("md5prefix60", s)
 
-  /** Hash-profile flag for the dedup ladder (`spark.graft.dedup.
-    * hashProfile`): `md5` (default) is the engine-portable, DuckDB-
-    * oracle-checkable family above; `xxhash64` swaps in Spark's codegen'd
-    * XxHash64 — far cheaper per byte at cluster scale, not reproducible
-    * in DuckDB. The swap changes NO plan shape and no dedup decision on
-    * exact duplicates (identical inputs collide under any hash); only the
-    * near-dup bucket geometry differs. Masked to the same non-negative
-    * 60-bit domain so every downstream mod/band formula is unchanged.
-    */
-  def hashProfile(spark: org.apache.spark.sql.SparkSession): String =
-    spark.conf.get("spark.graft.dedup.hashProfile", "md5")
-
-  /** native shingle-hash SQL function for the session's hash profile */
-  def shingleFn(spark: org.apache.spark.sql.SparkSession): String =
-    hashProfile(spark) match {
-      case "xxhash64" => "shinglexx60"
-      case _ => "shinglehash60"
-    }
-
-  def profileHash60(spark: org.apache.spark.sql.SparkSession)(s: Column): Column =
-    hashProfile(spark) match {
-      case "xxhash64" => xxhash64(s).bitwiseAND(lit((1L << 60) - 1))
-      case _ => hash60(s)
-    }
-
-  /** document fingerprint: md5 of the normalized text (hash-profile-
-    * aware; both profiles render as a string key so the frame shape is
-    * identical).
-    */
+  /** document fingerprint: md5 of the normalized text. */
   def fingerprint(text: Column): Column = md5(normalized(text))
-
-  def profileFingerprint(spark: org.apache.spark.sql.SparkSession)(
-      text: Column): Column =
-    hashProfile(spark) match {
-      case "xxhash64" => xxhash64(normalized(text)).cast("string")
-      case _ => fingerprint(text)
-    }
 
   /** distinct token n-gram HASHES per document: (id, gh). Grams are
     * hashed to int64 inside the document's own row — strings never
-    * shuffle. The workhorse of benchmark decontamination. Honors the
-    * dedup ladder's [[hashProfile]]: md5 (default, DuckDB-mirrored) or
-    * xxhash64 at cluster scale.
+    * shuffle. The workhorse of benchmark decontamination; grams hash
+    * with [[hash60]], so the set is DuckDB-mirrored.
     */
   def gramHashes(docs: org.apache.spark.sql.DataFrame, idCol: String,
       textCol: String, n: Int): org.apache.spark.sql.DataFrame = {
@@ -84,10 +48,9 @@ object TextOps {
     // document, so hashes come straight off the UTF-8 bytes — no token
     // array, no per-gram string. Short documents yield an empty array,
     // which explode drops (same rows as the old size>=n pre-filter).
-    val useXx = hashProfile(docs.sparkSession) == "xxhash64"
     docs.select(col(idCol).as("id"),
         explode(call_function("tokengramhash60",
-          normalized(col(textCol)), lit(n), lit(useXx))).as("gh"))
+          normalized(col(textCol)), lit(n))).as("gh"))
   }
 
   /** The composed per-row-lambda formulation gramHashes() replaced —
@@ -100,8 +63,7 @@ object TextOps {
       .filter(size(col("t")) >= n)
       .select(col("id"), explode(array_distinct(transform(
         sequence(lit(1), size(col("t")) - (n - 1)),
-        i => profileHash60(docs.sparkSession)(
-          array_join(slice(col("t"), i, lit(n)), " ")))))
+        i => hash60(array_join(slice(col("t"), i, lit(n)), " ")))))
         .as("gh"))
 
   /** per-language stopword hit counts → argmax language with deterministic

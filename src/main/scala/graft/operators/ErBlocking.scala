@@ -35,8 +35,8 @@ import org.apache.spark.sql.functions._
   */
 object ErBlocking {
 
-  /** default clean-side occupancy cap per gram — callers override via
-    * `spark.graft.er.maxGramBucket`. */
+  /** default clean-side occupancy cap per gram — callers override it
+    * through the `maxBucket` parameter. */
   val DefaultMaxGramBucket = 32
 
   /** explode `nameCol` into its positional q-grams (one row per gram

@@ -154,7 +154,7 @@ object SnapshotLog {
     val adopted = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
     candidates.foreach { case (segPath, n) =>
       if (n > 0 && n <= remaining.size) {
-        val lines = segmentLines(segPath)
+        val lines = segmentLines(segPath, n)
         if (lines.forall(remaining.contains)) {
           adopted += (segPath -> n)
           remaining = remaining -- lines
@@ -166,7 +166,7 @@ object SnapshotLog {
       if (adopted.size + 1 <= MaxSegRefs) adopted.toSeq
       else {
         val (keep, fold) = adopted.sortBy(-_._2).splitAt(MergeDownTo)
-        fold.foreach { case (p, _) => remaining = remaining ++ segmentLines(p) }
+        fold.foreach { case (p, n) => remaining = remaining ++ segmentLines(p, n) }
         keep.toSeq
       }
     val deltaSeg =
@@ -189,26 +189,12 @@ object SnapshotLog {
         p -> n.toLong
     }
 
-  // segments are immutable once referenced — cache their lines (reads
-  // during subset adoption and entry resolution). Bounded: a full
-  // clear on overflow is always safe, only ever a re-read.
-  private val segCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[String]]()
-
-  /** segment FILE reads (cache misses) — test instrumentation for the
-    * O(delta) append contract: an append on a segmented table must
-    * never open the parent's segments. */
-  private[graft] val segFileReads = new java.util.concurrent.atomic.AtomicLong
-  private[graft] def resetSegCache(): Unit = segCache.clear()
-
-  private def segmentLines(path: String): Seq[String] = {
-    if (segCache.size > 4096) segCache.clear()
-    segCache.computeIfAbsent(path, p => {
-      segFileReads.incrementAndGet()
-      new String(Files.readAllBytes(Paths.get(p)), UTF_8)
-        .split("\n").toSeq.filter(_.nonEmpty)
-    })
-  }
+  /** a segment's entry lines for subset adoption and the merge-down
+    * fold: its cached parsed entries ([[parsedSegment]]) rendered back,
+    * so a segment a commit touches and a scan resolves is read and held
+    * once. Rendering inverts parsing on every line a writer emits. */
+  private def segmentLines(path: String, n: Long): Seq[String] =
+    parsedSegment(path, n)._1.map(renderEntry)
 
   /** O(delta) APPEND publish — the commit path for writers that ADD
     * entries and change nothing else (DSv2 appends, streaming epochs,
@@ -240,7 +226,7 @@ object SnapshotLog {
     var kept = if (parentCommitted) segRefs(tableDir, parentV) else Nil
     if (kept.size + 1 > MaxSegRefs) {
       val (keep, fold) = kept.sortBy(-_._2).splitAt(MergeDownTo)
-      delta = delta ++ fold.flatMap { case (p, _) => segmentLines(p) }
+      delta = delta ++ fold.flatMap { case (p, n) => segmentLines(p, n) }
       kept = keep
     }
     // a zero-entry append copies the refs verbatim
@@ -536,11 +522,12 @@ object SnapshotLog {
   // bounded by ESTIMATED RETAINED BYTES (a count bound alone would let
   // a handful of million-entry versions pin gigabytes on the driver):
   //
-  //  * parsedSegCache — segment file → parsed FileEntry list. Segments
-  //    are immutable and SHARED across versions (an O(delta) append
-  //    adopts its parent's `@seg` refs verbatim), so a new version's
-  //    first touch parses only its delta segment — the read-side
-  //    mirror of the O(delta) commit. Uncached segments of one
+  //  * parsedSegCache — segment file → parsed FileEntry list, the one
+  //    segment cache (commit-side adoption and merge-down read it
+  //    too). Segments are immutable and SHARED across versions (an
+  //    O(delta) append adopts its parent's `@seg` refs verbatim), so a
+  //    new version's first touch parses only its delta segment — the
+  //    read-side mirror of the O(delta) commit. Uncached segments of one
   //    manifest parse CONCURRENTLY on [[metaPool]] (measured 2.1 s →
   //    ~0.3 s first-touch on a 1M-entry / 50-segment table).
   //  * entryCache — version → the concatenated entry list (the object
@@ -617,11 +604,11 @@ object SnapshotLog {
     * metadata queries on the same version must parse once. */
   private[graft] val entryParses = new java.util.concurrent.atomic.AtomicLong
 
-  /** segment PARSE runs — test instrumentation for the O(delta) read
-    * contract: an appended version's first touch parses only its
-    * delta segment, never the shared parent segments. */
-  private[graft] val segEntryParses =
-    new java.util.concurrent.atomic.AtomicLong
+  /** segment FILE reads (each one parse, on a cache miss) — test
+    * instrumentation for the O(delta) contracts: an append on a
+    * segmented table never opens the parent's segments, and an appended
+    * version's first touch parses only its delta segment. */
+  private[graft] val segFileReads = new java.util.concurrent.atomic.AtomicLong
   private[graft] def resetEntryCache(): Unit = {
     entryCache.clear()
     parsedSegCache.clear()
@@ -631,7 +618,7 @@ object SnapshotLog {
     * manifest's recorded line count (truncation check). */
   private def parsedSegment(path: String, n: Long): (Seq[FileEntry], Long) =
     parsedSegCache.get(path).getOrElse {
-      segEntryParses.incrementAndGet()
+      segFileReads.incrementAndGet()
       val intern = new Interner
       val lines = new String(Files.readAllBytes(Paths.get(path)), UTF_8)
         .split("\n").toSeq.filter(_.nonEmpty)

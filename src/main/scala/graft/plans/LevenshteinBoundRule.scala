@@ -29,20 +29,15 @@ import org.apache.spark.sql.types.IntegerType
   * row exactly as the original null comparison did. Idempotent under
   * the optimizer's fixed-point loop — the rewritten node carries a
   * defined threshold and no longer matches the pattern.
-  *
-  * Disable with `spark.graft.rules.levBound=false` (the A/B switch
-  * `LevenshteinRuleSpec` uses to prove result equality).
+  * `LevenshteinRuleSpec` pins the answers against a plain Scala DP.
   */
 object LevenshteinBoundRule extends Rule[LogicalPlan] {
 
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    if (!conf.getConfString("spark.graft.rules.levBound", "true").toBoolean)
-      plan
-    else plan.transform {
-      case f: Filter =>
-        val rewritten = rewrite(f.condition)
-        if (rewritten.fastEquals(f.condition)) f else f.copy(condition = rewritten)
-    }
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
+    case f: Filter =>
+      val rewritten = rewrite(f.condition)
+      if (rewritten.fastEquals(f.condition)) f else f.copy(condition = rewritten)
+  }
 
   private def bounded(a: Expression, b: Expression, k: Int,
       cmp: Expression => Expression): Expression = {

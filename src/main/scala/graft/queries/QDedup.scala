@@ -310,19 +310,11 @@ object QDedup extends Registry {
     // (Dedup.canonicalClusters) — O(graph diameter) rounds of one
     // join+aggregate each, the standard distributed CC loop. The oracle
     // replays reachability with a recursive CTE and takes min over each
-    // node's reachable set.
-    // `spark.graft.cc.algo=starstar` swaps in the large-star/small-star
-    // formulation (bounded per-node fan-in — the web-graph-scale choice);
-    // contraction is default. Both produce the identical canonical map
-    // (DedupPropertiesSpec pins each against a union-find reference).
+    // node's reachable set. DedupPropertiesSpec pins the contraction
+    // loop against a union-find reference.
     Q("dd_cluster_canonical",
-      (s, d) => {
-        val pairs = simhashPairs(s, d).select(col("id_a"), col("id_b"))
-        s.conf.get("spark.graft.cc.algo", "contraction") match {
-          case "starstar" => Dedup.canonicalClustersStarStar(pairs)
-          case _ => Dedup.canonicalClusters(pairs)
-        }
-      },
+      (s, d) => Dedup.canonicalClusters(
+        simhashPairs(s, d).select(col("id_a"), col("id_b"))),
       Some(s"""WITH RECURSIVE $simhashCte,
               vp AS (SELECT id_a, id_b FROM pairs
                      WHERE bit_count(xor(sh_a, sh_b)) <= 3),
@@ -504,10 +496,8 @@ object QDedup extends Registry {
           Dedup.docProfilesLocal(docs, "doc_id", "text", n = 5, k = 32)
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
         val isBatch = col("id") % 7 === 0
-        // profileFingerprint: md5 by default (the oracle's hash), the
-        // codegen'd xxhash64 under the cluster-scale hash profile
         val fps = docs.select(col("doc_id").as("id"),
-          TextOps.profileFingerprint(s)(col("text")).as("fp"))
+          TextOps.fingerprint(col("text")).as("fp"))
         val fpRejected = fps.filter(isBatch)
           .join(fps.filter(!isBatch).select(col("fp")).distinct(),
             Seq("fp"), "left_semi")

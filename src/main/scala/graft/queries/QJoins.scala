@@ -880,29 +880,21 @@ object QJoins extends Registry {
         // Budget: the broadcast close ships the full adjacency relation
         // (~25-30 B/edge in list form), so the default 4M-edge cap puts
         // the built relation at ~100-130 MB — inside the "few hundred
-        // MB is fine" broadcast band, far under Spark's 8 GB cap.
-        // Explicit broadcast|shuffle still forces an arm (specs pin
-        // both physical shapes).
-        val mode = s.conf.get("spark.graft.triangles.close", "auto") match {
-          case "auto" =>
-            val maxE = s.conf.get(
-              "spark.graft.triangles.broadcastMaxEdges", "4000000").toLong
-            if (e.count() <= maxE) "broadcast" else "shuffle"
-          case m @ ("broadcast" | "shuffle") => m
-          case other => throw new IllegalArgumentException(
-            "spark.graft.triangles.close must be auto|broadcast|shuffle" +
-              s", got $other")
-        }
+        // MB is fine" broadcast band, far under Spark's 8 GB cap. A cap
+        // of 0 reaches the shuffle arm at any size (TriangleCloseSpec
+        // pins both physical shapes that way).
+        val bcastClose = e.count() <= s.conf.get(
+          "spark.graft.triangles.broadcastMaxEdges", "4000000").toLong
         val deg = e.select(col("u").as("id"))
           .unionByName(e.select(col("v").as("id")))
           .groupBy(col("id")).agg(count(lit(1)).as("dg"))
         // deg is |V| rows — metadata-sized at any scale. Broadcasting it
         // keeps the |E|-row edge relation un-exchanged through the
         // orientation (measured r16: the two degree SMJs re-shuffled the
-        // edges twice for no reason); in shuffle mode the planner keeps
+        // edges twice for no reason); on the shuffle arm the planner keeps
         // its own choice so the scale path stays exercisable.
         def degSide(dd: org.apache.spark.sql.DataFrame) =
-          if (mode == "broadcast") broadcast(dd) else dd
+          if (bcastClose) broadcast(dd) else dd
         val lower = col("du") < col("dv") ||
           (col("du") === col("dv") && col("u") < col("v"))
         val oriented = graft.Caches.registerTransient(e
@@ -918,7 +910,7 @@ object QJoins extends Registry {
         // (a→b, a→c, b→c), so each triangle is found exactly once and
         // out-adjacency fan-out is bounded by O(√m).
         //
-        // DEFAULT (broadcast): compact-forward ADJACENCY close — for
+        // Under the cap (broadcast): compact-forward ADJACENCY close — for
         // each oriented edge (a→b), every c ∈ adj+(a) ∩ adj+(b) closes
         // a triangle. The Σ C(outdeg,2) wedge stream NEVER materializes
         // as rows: the intersection runs inside the edge row against
@@ -926,18 +918,17 @@ object QJoins extends Registry {
         // (measured r16: 2-3× faster than enumerating ~25M wedge rows
         // through a SortMergeJoin and probing the edge set per wedge).
         //
-        // At a scale where the adjacency relation outgrows a broadcast
-        // (the 100 TB regime), `spark.graft.triangles.close=shuffle`
-        // switches to the Suri–Vassilvitskii shuffle-close: wedges
-        // (s→t1, s→t2) with (dt1,t1) < (dt2,t2) equi-join the edge
-        // relation on (t1, t2) under a shuffle_hash hint (the hint also
+        // Past the cap, where the adjacency relation outgrows a broadcast
+        // (the 100 TB regime), the close is the Suri–Vassilvitskii
+        // shuffle-close: wedges (s→t1, s→t2) with (dt1,t1) < (dt2,t2)
+        // equi-join the edge relation on (t1, t2) under a shuffle_hash hint (the hint also
         // keeps AQE from re-broadcasting, so the scale path is genuinely
         // exercisable at test size — `TriangleCloseSpec` runs both
-        // variants and pins both physical shapes). The wedge bound from
+        // arms and pins both physical shapes). The wedge bound from
         // the degree orientation is what keeps EITHER variant
         // linear-ish.
-        val tri = mode match {
-          case "broadcast" =>
+        val tri =
+          if (bcastClose) {
             val adj = oriented.groupBy(col("s"))
               .agg(collect_list(col("t")).as("nbr"))
             oriented
@@ -947,7 +938,7 @@ object QJoins extends Registry {
                 col("nbr").as("nb"))), col("t") === col("b2"))
               .select(col("s").as("a"), col("t").as("b"),
                 explode(array_intersect(col("na"), col("nb"))).as("c"))
-          case _ =>
+          } else {
             val wedgeOrder = col("e1.dt") < col("e2.dt") ||
               (col("e1.dt") === col("e2.dt") && col("e1.t") < col("e2.t"))
             val e3 = oriented.select(col("s"), col("t")).as("e3")
@@ -957,7 +948,7 @@ object QJoins extends Registry {
                 col("e3.s") === col("e1.t") && col("e3.t") === col("e2.t"))
               .select(col("e1.s").as("a"), col("e1.t").as("b"),
                 col("e2.t").as("c"))
-        }
+          }
         tri.select(explode(array(col("a"), col("b"), col("c"))).as("id"))
           .groupBy(col("id")).agg(count(lit(1)).as("n_triangles"))
       },
@@ -1027,35 +1018,16 @@ object QJoins extends Registry {
         // static broadcast default would ship a driver OOM once |V|
         // outgrows a broadcast at 100 TB: labels are 2 longs/row, so
         // the default 8M-node cap bounds the built relation at
-        // ~200 MB. `spark.graft.labelprop.join=broadcast|shuffle`
-        // still forces an arm (both spec-pinned).
-        val bcastRounds =
-          s.conf.get("spark.graft.labelprop.join", "auto") match {
-            case "auto" =>
-              val maxV = s.conf.get(
-                "spark.graft.labelprop.broadcastMaxNodes", "8000000").toLong
-              lbl.count() <= maxV
-            case "broadcast" => true
-            case "shuffle" => false
-            case other => throw new IllegalArgumentException(
-              "spark.graft.labelprop.join must be auto|broadcast|" +
-                s"shuffle, got $other")
-          }
-        for (_ <- 1 to 3) {
-          val next = adj
-            .join(if (bcastRounds) broadcast(lbl) else lbl,
-              adj("src") === lbl("id"))
-            .groupBy(col("dst")).agg(min(col("lbl")).as("lbl"))
-            .select(col("dst").as("id"), col("lbl"))
-          // the per-round barrier is NOT optional on the broadcast path:
-          // without it round r+1's BroadcastExchange re-executes every
-          // prior round's join (broadcast collection is a fresh job with
-          // no exchange reuse across rounds — O(k²) round-joins). The
-          // |V|-row checkpoint is metadata-sized next to the |E|-row
-          // join it saves re-running.
-          lbl = if (s.conf.get("spark.graft.labelprop.barrier", "true")
-              == "true") next.localCheckpoint(true) else next
-        }
+        // ~200 MB.
+        val bcastRounds = labelPropBroadcast(s, lbl.count())
+        // the per-round barrier is NOT optional on the broadcast path:
+        // without it round r+1's BroadcastExchange re-executes every
+        // prior round's join (broadcast collection is a fresh job with
+        // no exchange reuse across rounds — O(k²) round-joins). The
+        // |V|-row checkpoint is metadata-sized next to the |E|-row
+        // join it saves re-running.
+        for (_ <- 1 to 3)
+          lbl = labelPropRound(adj, lbl, bcastRounds).localCheckpoint(true)
         lbl
       },
       Some("""WITH li AS (SELECT DISTINCT l_orderkey AS ok,
@@ -1077,6 +1049,26 @@ object QJoins extends Registry {
                      FROM adj a JOIN l2 l ON l.id = a.src GROUP BY 1)
               SELECT id, lbl FROM l3"""))
   )
+
+  /** Whether `g2_label_prop` broadcasts its label table: |V| at most
+    * `spark.graft.labelprop.broadcastMaxNodes` (default 8M; 0 always
+    * shuffles).
+    */
+  private[queries] def labelPropBroadcast(
+      s: org.apache.spark.sql.SparkSession, nodes: Long): Boolean =
+    nodes <= s.conf.get(
+      "spark.graft.labelprop.broadcastMaxNodes", "8000000").toLong
+
+  /** One synchronous min-label round of `g2_label_prop`: every node takes
+    * the minimum label over its (adjacency ∪ self-loop) neighbors. The
+    * label table is broadcast-hinted when `bcast`.
+    */
+  private[queries] def labelPropRound(adj: org.apache.spark.sql.DataFrame,
+      lbl: org.apache.spark.sql.DataFrame,
+      bcast: Boolean): org.apache.spark.sql.DataFrame =
+    adj.join(if (bcast) broadcast(lbl) else lbl, adj("src") === lbl("id"))
+      .groupBy(col("dst")).agg(min(col("lbl")).as("lbl"))
+      .select(col("dst").as("id"), col("lbl"))
 
   /** The distinct co-purchase edge list (parts sharing an order,
     * u < v) SHARED by `g1_triangles` and `g2_label_prop` — the two

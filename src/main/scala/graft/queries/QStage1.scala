@@ -149,22 +149,23 @@ object QStage1 extends Registry {
   }
 
   /** J15 issuer→permno monthly linker: the first permno per (issuer,
-    * month), the last month carried three months forward. `obs` is
-    * unique per (issuer6, month) and every carried month follows the
-    * last, so the union needs no dedup. */
+    * month), the last month carried three months forward. `obs` is read
+    * once: the last month is a `max` over a global window (`obs` is one
+    * row per (issuer6, month), so that window holds little), and a row
+    * of that month explodes into itself plus its three carried months.
+    * `obs` is unique per (issuer6, month) and every carried month
+    * follows the last, so the output needs no dedup. */
   private def linker(ev: DataFrame): DataFrame = {
     val obs = ev.filter(col("event_type") === "signup")
       .select((col("user_id") % 31).as("issuer6"),
         trunc(to_date(col("ts")), "MM").as("month_start"), col("user_id"))
       .groupBy(col("issuer6"), col("month_start"))
       .agg(min(col("user_id")).as("permno"))
-    val lastMonth = obs.agg(max(col("month_start")).as("mx"))
-    val ext = obs.join(broadcast(lastMonth), col("month_start") === col("mx"))
+    obs.withColumn("mx", max(col("month_start")).over(Window.partitionBy()))
       .select(col("issuer6"), col("permno"),
-        explode(array((1 to 3).map(i =>
-          add_months(col("month_start"), i)): _*)).as("month_start"))
-    obs.select("issuer6", "month_start", "permno")
-      .unionByName(ext.select("issuer6", "month_start", "permno"))
+        explode(when(col("month_start") === col("mx"), array((0 to 3).map(i =>
+            add_months(col("month_start"), i)): _*))
+          .otherwise(array(col("month_start")))).as("month_start"))
       .select(col("issuer6"),
         date_format(col("month_start"), "yyyyMM").as("yyyymm"), col("permno"))
   }

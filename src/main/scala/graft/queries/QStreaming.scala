@@ -283,7 +283,7 @@ object QStreaming extends Registry {
             .persist(MEMORY_AND_DISK))
         val corpusFps = graft.Caches.registerTransient(
           docs.filter(isCorpus)
-            .select(TextOps.profileFingerprint(s)(col("text")).as("fp")).distinct()
+            .select(TextOps.fingerprint(col("text")).as("fp")).distinct()
             .persist(MEMORY_AND_DISK))
         val arrivals = StreamingDedup
           .parquetStream(s, s"$d/documents.parquet")
@@ -295,7 +295,7 @@ object QStreaming extends Registry {
               .persist(MEMORY_AND_DISK)
             try Dedup.admitOnProfiles(bprof,
                 batch.select(col("doc_id").as("id"),
-                  TextOps.profileFingerprint(s)(col("text")).as("fp")),
+                  TextOps.fingerprint(col("text")).as("fp")),
                 corpusProf, corpusKeys, corpusFps,
                 k = 32, bands = 4, threshold = 0.7)
               .write.mode("append").parquet(outDir)
@@ -329,7 +329,7 @@ object QStreaming extends Registry {
     Q("stream_quality_filter",
       (s, d) => {
         val name = s"graft_stream_qf_${runSeq.incrementAndGet()}"
-        val score = QText.classifierScoreCol(s)
+        val score = QText.classifierScoreCol
         val q = StreamingDedup.parquetStream(s, s"$d/documents.parquet")
           .select(col("doc_id"), score.as("score_milli"))
           .filter(col("score_milli") >= 0L)
@@ -352,7 +352,7 @@ object QStreaming extends Registry {
     Q("stream_quality_filter_weights",
       (s, d) => {
         val name = s"graft_stream_qfw_${runSeq.incrementAndGet()}"
-        val score = QText.classifierScoreWeighted(s, QText.demoWeights)
+        val score = QText.classifierScoreWeighted(QText.demoWeights)
         val q = StreamingDedup.parquetStream(s, s"$d/documents.parquet")
           .select(col("doc_id"), score.as("score_milli"))
           .filter(col("score_milli") >= 0L)

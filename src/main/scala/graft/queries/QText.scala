@@ -346,21 +346,18 @@ object QText extends Registry {
     // quota-mixed) with
     // surviving doc and token counts. Built from the SAME shared stage
     // frames as the chain itself (and the same oracle CTE chain), so
-    // the report can never disagree with the build. Scale shape: six
+    // the report can never disagree with the build. Scale shape: seven
     // count aggregates over frames the chain materializes anyway.
     Q("tx_curation_funnel",
       (s, d) => {
         val stages = corpusStages(s, d)
-        // with the substring stage disabled (dev-only A/B flag) its row
-        // simply disappears; the shipped oracle covers the default chain
-        corpusStageOrder.filter(stages.contains)
-          .zipWithIndex.map { case (name, i) =>
-            stages(name).agg(
-              count(lit(1)).as("n_docs"),
-              coalesce(sum(col("n_tokens")), lit(0L)).as("n_tokens"))
-              .select(lit(i + 1).as("stage_no"), lit(name).as("stage"),
-                col("n_docs"), col("n_tokens"))
-          }.reduce(_.unionByName(_))
+        corpusStageOrder.zipWithIndex.map { case (name, i) =>
+          stages(name).agg(
+            count(lit(1)).as("n_docs"),
+            coalesce(sum(col("n_tokens")), lit(0L)).as("n_tokens"))
+            .select(lit(i + 1).as("stage_no"), lit(name).as("stage"),
+              col("n_docs"), col("n_tokens"))
+        }.reduce(_.unionByName(_))
       },
       Some {
         def cnt(no: Int, name: String, rel: String) =
@@ -423,13 +420,6 @@ object QText extends Registry {
     Seq("corpus", "length_pass", "exact_keeper", "substring_clean",
       "neardup_canonical", "decontaminated", "mixed")
 
-  /** The curation-build chain as named stage frames (each with
-    * doc_id, lang, n_tokens): raw `corpus` → `length_pass` →
-    * `exact_keeper` → `neardup_canonical` → `decontaminated` →
-    * quota-`mixed` — shared by `tx_corpus_build` (returns `mixed`) and
-    * `tx_curation_funnel` (counts every stage), so the report can
-    * never disagree with the build.
-    */
   /** Wall-clock of the EAGER stage builds (the memoized barrier stages
     * materialize inside the [[corpusStages]] call itself, so a caller
     * timing stage counts from outside sees only checkpoint reads) —
@@ -446,6 +436,13 @@ object QText extends Registry {
     r
   }
 
+  /** The curation-build chain as named stage frames (each with
+    * doc_id, lang, n_tokens): raw `corpus` → `length_pass` →
+    * `exact_keeper` → `substring_clean` → `neardup_canonical` →
+    * `decontaminated` → quota-`mixed` — shared by `tx_corpus_build`
+    * (returns `mixed`) and `tx_curation_funnel` (counts every stage), so
+    * the report can never disagree with the build.
+    */
   private[graft] def corpusStages(s: org.apache.spark.sql.SparkSession,
       d: String): Map[String, org.apache.spark.sql.DataFrame] = {
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
@@ -467,12 +464,8 @@ object QText extends Registry {
     // re-normalization) and n_tokens recomputed, so the near-dup /
     // decontamination tiers and the funnel all see the post-cut corpus.
     // Doc COUNT is unchanged (the stage attrits tokens, not docs) —
-    // the funnel row makes that visible. Dev-only A/B flag
-    // `spark.graft.corpus.substring=false` skips the stage (the shipped
-    // oracle covers the default-ON chain).
-    val substrOn = s.conf.get("spark.graft.corpus.substring", "true").toBoolean
-    val subClean = if (!substrOn) surv
-      else timedStage("substring_clean") { graft.Caches.memo(s, s"corpus_substr:$d") {
+    // the funnel row makes that visible.
+    val subClean = timedStage("substring_clean") { graft.Caches.memo(s, s"corpus_substr:$d") {
         val covered = graft.llmdata.Dedup.duplicateWindowSpans(
             surv, "doc_id", "text", w = 8)
           .groupBy(col("id"))
@@ -497,9 +490,8 @@ object QText extends Registry {
     // the minhashPairs pattern: tx_corpus_build and tx_curation_funnel
     // both walk this chain, and the CC iteration is the expensive part,
     // so the second consumer reads a checkpoint barrier instead of
-    // re-canonicalizing the graph. Memo keys carry the substring flag so
-    // an in-session flag flip can never serve a stale tail.
-    val canon = timedStage("neardup_canonical") { graft.Caches.memo(s, s"corpus_canon:$d:$substrOn") {
+    // re-canonicalizing the graph.
+    val canon = timedStage("neardup_canonical") { graft.Caches.memo(s, s"corpus_canon:$d") {
       val prof = graft.Caches.registerTransient(
         graft.llmdata.Dedup.docProfilesLocal(subClean, "doc_id", "text", n = 5, k = 32)
           .persist(MEMORY_AND_DISK))
@@ -515,7 +507,7 @@ object QText extends Registry {
         .transform(graft.Caches.barrier(_))
     } }
     // decontaminate vs the eval split (external — never curated)
-    val clean = timedStage("decontaminated") { graft.Caches.memo(s, s"corpus_clean:$d:$substrOn") {
+    val clean = timedStage("decontaminated") { graft.Caches.memo(s, s"corpus_clean:$d") {
       val evalGrams = TextOps.gramHashes(
           Tables.documents(s, d).filter(col("doc_id") % 11 === 0),
           "doc_id", "text", 8)
@@ -533,14 +525,14 @@ object QText extends Registry {
       .when(col("lang") === "fr", 20)
       .when(col("lang") === "es", 10)
       .otherwise(5)
-    val base = Map(
+    Map(
       "corpus" -> scored,
       "length_pass" -> passed,
       "exact_keeper" -> surv,
+      "substring_clean" -> subClean,
       "neardup_canonical" -> canon,
       "decontaminated" -> clean,
       "mixed" -> clean.filter(bucket < quota))
-    if (substrOn) base + ("substring_clean" -> subClean) else base
   }
 
   /** DuckDB CTE chain of the curation build (filter → exact dedup →
@@ -947,7 +939,6 @@ object QText extends Registry {
     // exact.
     Q("tx_gopher_rules",
       (s, d) => {
-        val useXx = TextOps.hashProfile(s) == "xxhash64"
         // graded repetition injection: 0/25/50/75/100% of the doc's own
         // token count as a trailing run of one repeated token
         val nt = size(TextOps.tokens(col("text")))
@@ -956,7 +947,7 @@ object QText extends Registry {
           call_function("repeat", lit(" spam"), k))
         val norm = TextOps.normalized(raw)
         def arr(n: Int) =
-          call_function("tokengrampos60", norm, lit(n), lit(useXx))
+          call_function("tokengrampos60", norm, lit(n))
         def total(n: Int) = size(arr(n)).cast("long")
         def dist(n: Int) = size(array_distinct(arr(n))).cast("long")
         // max run length over the sorted hashes == occurrences of the
@@ -1156,7 +1147,7 @@ object QText extends Registry {
     // 16k-entry broadcast array lookup, same plan shape.
     Q("tx_quality_classifier",
       (s, d) => {
-        val score = classifierScoreCol(s)
+        val score = classifierScoreCol
         val toks = TextOps.tokens(col("text"))
         Tables.documents(s, d).select(
           col("doc_id"),
@@ -1183,7 +1174,7 @@ object QText extends Registry {
     // `demoWeights` for their exported vector and changes nothing else.
     Q("tx_quality_classifier_weights",
       (s, d) => {
-        val score = classifierScoreWeighted(s, demoWeights)
+        val score = classifierScoreWeighted(demoWeights)
         val toks = TextOps.tokens(col("text"))
         Tables.documents(s, d).select(
           col("doc_id"),
@@ -1278,10 +1269,10 @@ object QText extends Registry {
         val corpus = j.filter(col("h1") === md5(col("text")))
           .select(col("doc_id"), col("text"))
         val scored = graft.Caches.registerTransient(
-          delta.withColumn("ok_q", classifierScoreCol(s) >= 0L)
+          delta.withColumn("ok_q", classifierScoreCol >= 0L)
             .persist(MEMORY_AND_DISK))
         val pass = scored.filter(col("ok_q")).select(col("doc_id"), col("text"))
-        val fp = TextOps.profileFingerprint(s)(col("text"))
+        val fp = TextOps.fingerprint(col("text"))
         val exactRej = pass.select(col("doc_id"), fp.as("fp"))
           .join(corpus.select(fp.as("fp")).distinct(), Seq("fp"), "left_semi")
           .select(col("doc_id"))
@@ -1506,20 +1497,18 @@ object QText extends Registry {
     * broadcast variable at 16k×8B). Same zero-exchange per-row fold.
     */
   private[queries] def classifierScoreWeighted(
-      s: org.apache.spark.sql.SparkSession,
       weights: Array[Long]): org.apache.spark.sql.Column = {
     require(weights.length == 16384, s"expected 16384 weights, got ${weights.length}")
-    val useXx = TextOps.hashProfile(s) == "xxhash64"
     val norm = TextOps.normalized(col("text"))
     val toks = TextOps.tokens(col("text"))
     val wArr = typedLit(weights)
     def w(h: org.apache.spark.sql.Column) =
       element_at(wArr, (pmod(h, lit(16384L)) + 1L).cast("int"))
     val uniScore = aggregate(
-      transform(toks, t => w(TextOps.profileHash60(s)(t))),
+      transform(toks, t => w(TextOps.hash60(t))),
       lit(0L), (acc, x) => acc + x)
     val biScore = aggregate(
-      transform(call_function("tokengrampos60", norm, lit(2), lit(useXx)),
+      transform(call_function("tokengrampos60", norm, lit(2)),
         g => w(g)),
       lit(0L), (acc, x) => acc + x)
     uniScore + biScore
@@ -1535,18 +1524,16 @@ object QText extends Registry {
     * tokengramhash60: the classifier scores every bigram OCCURRENCE
     * (bag-of-ngrams semantics), not the distinct gram set.
     */
-  private[queries] def classifierScoreCol(
-      s: org.apache.spark.sql.SparkSession): org.apache.spark.sql.Column = {
-    val useXx = TextOps.hashProfile(s) == "xxhash64"
+  private[queries] def classifierScoreCol: org.apache.spark.sql.Column = {
     val norm = TextOps.normalized(col("text"))
     val toks = TextOps.tokens(col("text"))
     def w(h: org.apache.spark.sql.Column) =
       (pmod(h, lit(16384L)) * 40503L + 12345L) % 2001L - 1000L
     val uniScore = aggregate(
-      transform(toks, t => w(TextOps.profileHash60(s)(t))),
+      transform(toks, t => w(TextOps.hash60(t))),
       lit(0L), (acc, x) => acc + x)
     val biScore = aggregate(
-      transform(call_function("tokengrampos60", norm, lit(2), lit(useXx)),
+      transform(call_function("tokengrampos60", norm, lit(2)),
         g => w(g)),
       lit(0L), (acc, x) => acc + x)
     uniScore + biScore
@@ -1586,13 +1573,12 @@ object QText extends Registry {
     */
   private def lmScored(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame = {
-    val useXx = TextOps.hashProfile(s) == "xxhash64"
     val docs = Tables.documents(s, d)
     val norm = TextOps.normalized(col("text"))
     val pairs = graft.Caches.registerTransient(docs
       .select(col("doc_id"),
-        call_function("tokengrampos60", norm, lit(3), lit(useXx)).as("tri"),
-        call_function("tokengrampos60", norm, lit(2), lit(useXx)).as("big"))
+        call_function("tokengrampos60", norm, lit(3)).as("tri"),
+        call_function("tokengrampos60", norm, lit(2)).as("big"))
       .select(col("doc_id"),
         explode(zip_with(col("tri"),
           slice(col("big"), lit(1), size(col("tri"))),
@@ -1603,8 +1589,7 @@ object QText extends Registry {
     val c3 = train.groupBy(col("gh3")).agg(count(lit(1)).as("c3"))
     val c2 = train.groupBy(col("gh2")).agg(count(lit(1)).as("c2"))
     val vocab = docs.filter(col("doc_id") % 5 =!= 0)
-      .select(explode(call_function("tokengrampos60", norm, lit(1),
-        lit(useXx))).as("g1"))
+      .select(explode(call_function("tokengrampos60", norm, lit(1))).as("g1"))
       .agg(countDistinct(col("g1")).as("vocab"))
     val scored = pairs
       .join(c3, Seq("gh3"), "left")

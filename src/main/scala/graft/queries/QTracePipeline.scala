@@ -149,7 +149,7 @@ object QTracePipeline extends Registry {
          ELSE ($a[len($a) // 2] + $a[len($a) // 2 + 1]) / 2 END)"""
 
   /** CTE chain `tr3` → `ds` adding dec_shift columns (mirrors
-    * [[DecimalShift.withSuggestions]] with default params).
+    * the [[Stage0]] pass's shift step with default params).
     */
   private val shiftSql: String = {
     val fr = "PARTITION BY id ORDER BY dt, ord"

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 /** Streaming exact deduplication (SURVEY.md §2.10 stretch × the dedup
   * ladder tier 1): documents arrive as a file stream, are fingerprinted
-  * (md5 of normalized text — the same hash-profile-aware key as batch
+  * (md5 of normalized text — the same key as batch
   * [[graft.llmdata.Dedup]]), and duplicates are dropped in-stream.
   *
   * Scale notes: `dropDuplicates` on an unbounded stream keeps one state
@@ -35,8 +35,7 @@ object StreamingDedup {
     */
   def distinctFingerprints(docs: DataFrame): DataFrame =
     docs
-      .select(TextOps.profileFingerprint(docs.sparkSession)(col("text"))
-        .as("fp"))
+      .select(TextOps.fingerprint(col("text")).as("fp"))
       .dropDuplicates("fp")
 
   /** Bounded-state variant: event-time watermark + state eviction at the
@@ -47,8 +46,7 @@ object StreamingDedup {
   def distinctFingerprintsWithinWatermark(
       docs: DataFrame, tsCol: String, horizon: String): DataFrame =
     docs
-      .select(TextOps.profileFingerprint(docs.sparkSession)(col("text"))
-        .as("fp"), col(tsCol).as("ts"))
+      .select(TextOps.fingerprint(col("text")).as("fp"), col(tsCol).as("ts"))
       .withWatermark("ts", horizon)
       .dropDuplicatesWithinWatermark("fp")
 }

@@ -44,14 +44,16 @@ class CheckpointModeSpec extends SparkSpec {
     assert(rddFiles(dir) > 0, s"no rdd-* checkpoint dirs under $dir")
   }
 
-  test("star-star CC: identical canonical map under reliable checkpoint") {
+  test("path-graph CC: identical canonical map under reliable checkpoint") {
     import spark.implicits._
+    // a 13-node path with scrambled ids: several contraction rounds, each
+    // through the barrier
     val path = (0 until 12).map(i => ((i * 7919L) % 101, ((i + 1) * 7919L) % 101))
     val pairs = path.toDF("id_a", "id_b")
-    val viaLocal = Dedup.canonicalClustersStarStar(pairs)
+    val viaLocal = Dedup.canonicalClusters(pairs)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     val (viaReliable, _) = withReliable {
-      Dedup.canonicalClustersStarStar(pairs)
+      Dedup.canonicalClusters(pairs)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     }
     assert(viaReliable == viaLocal)

@@ -30,14 +30,16 @@ class PlanBudgetSpec extends SparkSpec {
         s"joins: ${joins.size}")
   }
 
-  test("Stage-1 panel: one events scan under the one id exchange; ≤ 5 exchanges, ≤ 2 broadcasts") {
+  test("Stage-1 panel: one events scan under the one id exchange; ≤ 4 exchanges, ≤ 1 broadcast") {
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
     import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     val df = q("tp_stage1_panel")
     val c = Plans.planCounts(df)
-    assert(c.shuffles <= 5 && c.broadcasts <= 2,
+    // id, the linker's (issuer6, month) aggregate and its global
+    // last-month window, winsorize's dt; the one broadcast is the linker
+    assert(c.shuffles <= 4 && c.broadcasts <= 1,
       s"tp_stage1_panel shuffles: ${c.shuffles}, broadcasts: ${c.broadcasts}")
     val plan = df.queryExecution.executedPlan match {
       case a: AdaptiveSparkPlanExec => a.inputPlan
@@ -57,6 +59,9 @@ class PlanBudgetSpec extends SparkSpec {
     assert(scans.size == 1 &&
       scans.head.relation.location.rootPaths.forall(_.getName == "events.parquet"),
       s"scans under the id exchange: ${scans.map(_.relation.location.rootPaths)}")
+    // the linker reads `events` once more, and only once
+    val allScans = plan.collect { case s: FileSourceScanExec => s }
+    assert(allScans.size == 2, s"events scans: ${allScans.size}\n$plan")
   }
 
   test("Dick-Nielsen cleaning alone is one grouped pass: one exchange") {

@@ -25,7 +25,7 @@ class CleaningPropertiesSpec extends SparkSpec {
     val df = prices.zipWithIndex
       .map { case (p, i) => (1L, "2024-01-01", i.toLong, p) }
       .toDF("id", "dt", "ord", "price")
-    DecimalShift.withSuggestions(df, "id", "dt", "ord", "price")
+    Stage0.pass(df, Stage0.Steps(dickNielsen = false, shift = true, bounce = false))
       .orderBy("ord")
       .select("dec_shift_flag", "suggested_price", "anchor_price")
       .collect()

@@ -77,7 +77,8 @@ class DecimalShiftEquivalenceSpec extends SparkSpec {
     val p = DecimalShift.Params()
     (1L to 6L).foreach { seed =>
       val df = frame(seed)
-      val got = keyed(DecimalShift.withSuggestions(df, "id", "dt", "ord", "price", p))
+      val got = keyed(Stage0.pass(df,
+        Stage0.Steps(dickNielsen = false, shift = true, bounce = false), shiftP = p))
       val want = keyed(columnSuggest(windowAnchored(df, p.window), p))
       assert(got.size == df.count(), s"seed $seed: a row was lost or duplicated")
       val diffs = want.collect { case (k, v) if !got.get(k).contains(v) =>

@@ -13,7 +13,7 @@ class DecimalShiftSpec extends SparkSpec {
     val df = prices.zipWithIndex
       .map { case (p, i) => (1L, "2024-01-01", i.toLong, p) }
       .toDF("id", "dt", "ord", "price")
-    DecimalShift.withSuggestions(df, "id", "dt", "ord", "price")
+    Stage0.pass(df, Stage0.Steps(dickNielsen = false, shift = true, bounce = false))
       .orderBy("ord")
       .select(col("dec_shift_flag"), col("dec_shift_factor"),
         col("suggested_price"))

@@ -7,8 +7,8 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
 /** The native per-row `simhash60` must be bit-identical to the exploded
-  * groupBy formulation it replaced, under BOTH hash profiles — the
-  * DuckDB oracle replays the md5 family, so divergence is a silent
+  * groupBy formulation it replaced — the DuckDB oracle replays the md5
+  * family, so divergence is a silent
   * correctness break for the whole simhash tier.
   */
 class SimhashExprSpec extends SparkSpec {
@@ -30,15 +30,10 @@ class SimhashExprSpec extends SparkSpec {
     graft.GraftExtensions.ensure(spark)
     val docs = samples(docGen, 80).zipWithIndex
       .map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
-    for (profile <- Seq("md5", "xxhash64")) {
-      spark.conf.set("spark.graft.dedup.hashProfile", profile)
-      try {
-        val native = sigs(Dedup.simhash(docs, "doc_id", "text"))
-        val exploded = sigs(Dedup.simhashExploded(docs, "doc_id", "text"))
-        assert(native == exploded,
-          s"[$profile] native/exploded simhash diverge: " +
-            s"${native.toSet.diff(exploded.toSet).take(3)}")
-      } finally spark.conf.unset("spark.graft.dedup.hashProfile")
-    }
+    val native = sigs(Dedup.simhash(docs, "doc_id", "text"))
+    val exploded = sigs(Dedup.simhashExploded(docs, "doc_id", "text"))
+    assert(native == exploded,
+      s"native/exploded simhash diverge: " +
+        s"${native.toSet.diff(exploded.toSet).take(3)}")
   }
 }

@@ -7,8 +7,7 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
 /** Native `tokengrampos60` must emit the same (id, start, hash) row set
-  * as the composed transform/slice/join lambda, under both hash
-  * profiles. Unlike the distinct sibling, POSITION and MULTIPLICITY are
+  * as the composed transform/slice/join lambda. Unlike the distinct sibling, POSITION and MULTIPLICITY are
   * part of the contract here — duplicated-span extents are computed from
   * the start offsets, and a window repeated inside one document still
   * counts toward the corpus occurrence threshold.
@@ -28,22 +27,19 @@ class TokenGramPosSpec extends SparkSpec {
 
   private def composed(docs: org.apache.spark.sql.DataFrame,
       w: Int): org.apache.spark.sql.DataFrame = {
-    val spark = docs.sparkSession
     docs.select(col("doc_id").as("id"), TextOps.tokens(col("text")).as("t"))
       .filter(size(col("t")) >= w)
       .select(col("id"), posexplode(transform(
         sequence(lit(1), size(col("t")) - (w - 1)),
-        i => TextOps.profileHash60(spark)(
-          array_join(slice(col("t"), i, lit(w)), " ")))))
+        i => TextOps.hash60(array_join(slice(col("t"), i, lit(w)), " ")))))
       .select(col("id"), (col("pos") + 1).as("start"), col("col").as("fp"))
   }
 
   private def native(docs: org.apache.spark.sql.DataFrame,
       w: Int): org.apache.spark.sql.DataFrame = {
-    val useXx = TextOps.hashProfile(docs.sparkSession) == "xxhash64"
     docs.select(col("doc_id").as("id"),
         posexplode(call_function("tokengrampos60",
-          TextOps.normalized(col("text")), lit(w), lit(useXx))))
+          TextOps.normalized(col("text")), lit(w))))
       .select(col("id"), (col("pos") + 1).as("start"), col("col").as("fp"))
   }
 
@@ -55,15 +51,12 @@ class TokenGramPosSpec extends SparkSpec {
     graft.GraftExtensions.ensure(spark)
     val docs = samples(docGen, 80).zipWithIndex
       .map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
-    for (profile <- Seq("md5", "xxhash64"); w <- Seq(1, 3, 8)) {
-      spark.conf.set("spark.graft.dedup.hashProfile", profile)
-      try {
-        val n = rows(native(docs, w))
-        val c = rows(composed(docs, w))
-        assert(n == c,
-          s"[$profile w=$w] native/composed positional hashes diverge: " +
-            s"${n.diff(c).take(3)} / ${c.diff(n).take(3)}")
-      } finally spark.conf.unset("spark.graft.dedup.hashProfile")
+    for (w <- Seq(1, 3, 8)) {
+      val n = rows(native(docs, w))
+      val c = rows(composed(docs, w))
+      assert(n == c,
+        s"[w=$w] native/composed positional hashes diverge: " +
+          s"${n.diff(c).take(3)} / ${c.diff(n).take(3)}")
     }
   }
 

@@ -7,8 +7,7 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
 /** Native `tokengramhash60` must emit the same (id, gram-hash) ROW SET as
-  * the composed slice/join/hash lambda it replaced, under both hash
-  * profiles — gram hashes feed decontamination's semi/anti joins, so set
+  * the composed slice/join/hash lambda it replaced — gram hashes feed decontamination's semi/anti joins, so set
   * equality is the correctness contract (order is irrelevant).
   */
 class TokenGramSpec extends SparkSpec {
@@ -32,15 +31,12 @@ class TokenGramSpec extends SparkSpec {
     graft.GraftExtensions.ensure(spark)
     val docs = samples(docGen, 80).zipWithIndex
       .map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
-    for (profile <- Seq("md5", "xxhash64"); n <- Seq(1, 2, 8)) {
-      spark.conf.set("spark.graft.dedup.hashProfile", profile)
-      try {
-        val native = rows(TextOps.gramHashes(docs, "doc_id", "text", n))
-        val composed = rows(TextOps.gramHashesComposed(docs, "doc_id", "text", n))
-        assert(native == composed,
-          s"[$profile n=$n] native/composed gram hashes diverge: " +
-            s"${native.diff(composed).take(3)} / ${composed.diff(native).take(3)}")
-      } finally spark.conf.unset("spark.graft.dedup.hashProfile")
+    for (n <- Seq(1, 2, 8)) {
+      val native = rows(TextOps.gramHashes(docs, "doc_id", "text", n))
+      val composed = rows(TextOps.gramHashesComposed(docs, "doc_id", "text", n))
+      assert(native == composed,
+        s"[n=$n] native/composed gram hashes diverge: " +
+          s"${native.diff(composed).take(3)} / ${composed.diff(native).take(3)}")
     }
   }
 }

@@ -71,36 +71,10 @@ class DedupPropertiesSpec extends SparkSpec {
 
   test("canonicalClusters equals driver-side union-find on random graphs") {
     import spark.implicits._
-    samples(edgeGen, 8).foreach { edges =>
-      val got = Dedup.canonicalClusters(edges.toDF("id_a", "id_b"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-      assert(got == unionFind(edges), s"edges $edges")
-    }
-  }
-
-  test("dd_cluster_canonical yields the same map under cc.algo=starstar") {
-    val sf = "/root/testdata/sf0.001"
-    val q = graft.SparkEntry.queries("dd_cluster_canonical")
-    val viaContraction = q(spark, sf)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    graft.Caches.clearAll()
-    spark.conf.set("spark.graft.cc.algo", "starstar")
-    try {
-      val viaStars = q(spark, sf)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-      assert(viaStars == viaContraction)
-    } finally {
-      spark.conf.unset("spark.graft.cc.algo")
-      graft.Caches.clearAll()
-    }
-  }
-
-  test("large-star/small-star equals union-find on random graphs") {
-    import spark.implicits._
     // includes a long path — the adversarial shape for round counts
     val path = (0 until 20).map(i => ((i * 7919L) % 101, ((i + 1) * 7919L) % 101))
-    (samples(edgeGen, 6) :+ path.toList).foreach { edges =>
-      val got = Dedup.canonicalClustersStarStar(edges.toDF("id_a", "id_b"))
+    (samples(edgeGen, 8) :+ path.toList).foreach { edges =>
+      val got = Dedup.canonicalClusters(edges.toDF("id_a", "id_b"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
       assert(got == unionFind(edges), s"edges $edges")
     }

@@ -79,45 +79,6 @@ class LlmDataSpec extends SparkSpec {
     assert(got == Map(3L -> 3L, 5L -> 3L, 9L -> 3L, 2L -> 2L, 7L -> 2L))
   }
 
-  test("xxhash64 hash profile: same plan shapes, same exact-dup decisions") {
-    import spark.implicits._
-    val docs = Seq(
-      (1L, "the quick brown fox jumps over the lazy dog again and again"),
-      (2L, "the quick brown fox jumps over the lazy dog again and again"),
-      (3L, "completely different content about spark catalyst planning"))
-      .toDF("doc_id", "text")
-    spark.conf.set("spark.graft.dedup.hashProfile", "xxhash64")
-    try {
-      // identical inputs collide under ANY hash family: the cluster-scale
-      // profile must reach the same exact-duplicate verdicts
-      val sp = Dedup.simhashPairs(
-        Dedup.simhash(docs, "doc_id", "text"), maxDist = 3)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
-      assert(sp.exists(p => p._1 == 1L && p._2 == 2L && p._3 == 0))
-      val hashed = Dedup.shingleHashes(docs, "doc_id", "text", 5)
-      // the 60-bit mask keeps the domain non-negative (h1/h2 formulas
-      // assume it)
-      assert(hashed.agg(min(col("sh"))).head.getLong(0) >= 0L)
-      val cands = Dedup.lshCandidates(Dedup.minhash(hashed, 32), 32, 4)
-      val verified = Dedup.jaccardVerify(
-        hashed.select(col("id"), col("sh")).dropDuplicates("id", "sh"),
-        cands, 0.7)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      assert(verified.exists(p => p._1 == 1L && p._2 == 2L && p._3 == 1.0))
-      val fps = docs.select(col("doc_id"),
-        TextOps.profileFingerprint(spark)(col("text")).as("fp"))
-        .collect().map(r => (r.getLong(0), r.getString(1))).toMap
-      assert(fps(1L) == fps(2L) && fps(1L) != fps(3L))
-      // gram hashing follows the profile too: identical docs share every
-      // 8-gram under any hash family
-      val grams = TextOps.gramHashes(docs, "doc_id", "text", 8)
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
-      val g1 = grams.filter(_._1 == 1L).map(_._2).toSet
-      val g2 = grams.filter(_._1 == 2L).map(_._2).toSet
-      assert(g1.nonEmpty && g1 == g2)
-    } finally spark.conf.unset("spark.graft.dedup.hashProfile")
-  }
-
   test("Embeddings.topK ranks by cosine with id tie-break") {
     import spark.implicits._
     val vecs = Seq(

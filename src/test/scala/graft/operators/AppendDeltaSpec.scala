@@ -32,7 +32,7 @@ class AppendDeltaSpec extends AnyFunSuite {
     assert(SnapshotLog.latest(dir) == 2)
 
     // the measured append: zero segment reads, tiny manifest delta
-    SnapshotLog.resetSegCache()
+    SnapshotLog.resetEntryCache()
     val before = SnapshotLog.segFileReads.get()
     val v3 = SnapshotLog.appendEntries(dir,
       t => Seq(entry(dir, 200001, t.toLong)))
@@ -50,6 +50,48 @@ class AppendDeltaSpec extends AnyFunSuite {
     val es = SnapshotLog.entries(dir, v3)
     assert(es.size == 100002)
     assert(es.map(_.path).toSet.contains(s"$dir/data/f200001.parquet"))
+  }
+
+  test("adoption and entries() on the same segment read its file once") {
+    import java.nio.file.{Files, Paths}
+    val dir = fresh("oneread")
+    val base = (0 until 1000).map(entry(dir, _, 1L))
+    assert(SnapshotLog.commitEntries(dir, base) == 1)
+    val seg1 = SnapshotLog.segRefs(dir, 1).map(_._1)
+    assert(seg1.size == 1)
+    // the segment files are moved away while the second touch runs, so
+    // that touch can only succeed from what the first one read
+    def withoutFiles[T](segs: Seq[String])(body: => T): T = {
+      val moved = segs.map(p => Paths.get(p) -> Paths.get(s"$p.aside"))
+      moved.foreach { case (p, q) => Files.move(p, q) }
+      try body finally moved.foreach { case (p, q) => Files.move(q, p) }
+    }
+    val paths = base.map(_.path).toSet
+
+    // adoption first: v2 holds every v1 entry plus one, so it adopts
+    // v1's segment; resolving v1 then needs no file
+    SnapshotLog.resetEntryCache()
+    val before = SnapshotLog.segFileReads.get()
+    assert(SnapshotLog.commitEntries(dir, base :+ entry(dir, 5000, 2L)) == 2)
+    assert(SnapshotLog.segRefs(dir, 2).map(_._1).contains(seg1.head),
+      "v2 did not adopt v1's segment")
+    withoutFiles(seg1) {
+      assert(SnapshotLog.entries(dir, 1).map(_.path).toSet == paths)
+    }
+    assert(SnapshotLog.segFileReads.get() == before + 1,
+      s"segment file reads: ${SnapshotLog.segFileReads.get() - before}")
+
+    // entries() first: resolving v2 reads both its segments; a commit
+    // adopting them then opens neither
+    SnapshotLog.resetEntryCache()
+    val segs2 = SnapshotLog.segRefs(dir, 2).map(_._1)
+    assert(segs2.size == 2)
+    val es2 = SnapshotLog.entries(dir, 2)
+    withoutFiles(segs2) {
+      assert(SnapshotLog.commitEntries(dir, es2 :+ entry(dir, 5001, 3L)) == 3)
+    }
+    assert(segs2.forall(SnapshotLog.segRefs(dir, 3).map(_._1).contains),
+      "v3 did not adopt v2's segments")
   }
 
   test("headers carry, drop-headers replace, CAS loser cleans its segment") {

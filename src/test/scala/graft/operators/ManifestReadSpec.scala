@@ -31,12 +31,12 @@ class ManifestReadSpec extends AnyFunSuite {
 
     SnapshotLog.resetEntryCache()
     SnapshotLog.entries(dir, v) // parse every segment of v once
-    val segBefore = SnapshotLog.segEntryParses.get()
+    val segBefore = SnapshotLog.segFileReads.get()
     val verBefore = SnapshotLog.entryParses.get()
 
     // warm hit: zero parses of either layer
     assert(SnapshotLog.entries(dir, v).size == 50001)
-    assert(SnapshotLog.segEntryParses.get() == segBefore)
+    assert(SnapshotLog.segFileReads.get() == segBefore)
     assert(SnapshotLog.entryParses.get() == verBefore)
 
     // the measured append: its first entries() touch re-splices the
@@ -47,7 +47,7 @@ class ManifestReadSpec extends AnyFunSuite {
     val es = SnapshotLog.entries(dir, v2)
     assert(es.size == 50002)
     assert(SnapshotLog.entryParses.get() == verBefore + 1)
-    assert(SnapshotLog.segEntryParses.get() == segBefore + 1,
+    assert(SnapshotLog.segFileReads.get() == segBefore + 1,
       "an O(delta) read must parse only the appended delta segment")
     assert(es.map(_.path).contains(s"$dir/data/f90001.parquet"))
   }

@@ -44,20 +44,30 @@ class LevenshteinRuleSpec extends SparkSpec {
       .head.getInt(0) == -1)
   }
 
-  test("rewrite is answer-preserving (A/B against the disabled rule)") {
-    def run(): Set[(String, String)] = {
-      val r = fixture.filter(levenshtein($"a", $"b") <= 2)
-        .collect().map(r => (r.getString(0), r.getString(1))).toSet
-      val strict = fixture.filter(levenshtein($"a", $"b") < 2)
-        .collect().map(r => (r.getString(0), r.getString(1))).toSet
-      assert(strict.subsetOf(r))
-      r
+  test("rewrite is answer-preserving (against a plain Scala levenshtein)") {
+    // the textbook O(|a|·|b|) DP, row by row over the fixture
+    def lev(a: String, b: String): Int = {
+      var prev = Array.tabulate(b.length + 1)(identity)
+      for (i <- 1 to a.length) {
+        val cur = new Array[Int](b.length + 1)
+        cur(0) = i
+        for (j <- 1 to b.length)
+          cur(j) = math.min(math.min(prev(j) + 1, cur(j - 1) + 1),
+            prev(j - 1) + (if (a(i - 1) == b(j - 1)) 0 else 1))
+        prev = cur
+      }
+      prev(b.length)
     }
-    val withRule = run()
-    spark.conf.set("spark.graft.rules.levBound", "false")
-    val without = try run()
-      finally spark.conf.set("spark.graft.rules.levBound", "true")
-    assert(withRule == without, s"rule changed the answer: $withRule vs $without")
-    assert(withRule == Set(("abc", "abd"), ("abc", "abc"), ("ab", "abxy")))
+    val all = fixture.collect().map(r => (r.getString(0), r.getString(1)))
+    def expected(keep: Int => Boolean) = all.filter { case (a, b) =>
+      a != null && b != null && keep(lev(a, b)) }.toSet
+    def got(c: org.apache.spark.sql.Column) = fixture.filter(c)
+      .collect().map(r => (r.getString(0), r.getString(1))).toSet
+    val le2 = got(levenshtein($"a", $"b") <= 2)
+    assert(le2 == expected(_ <= 2), s"<= 2: $le2")
+    assert(got(levenshtein($"a", $"b") < 2) == expected(_ < 2))
+    assert(got(lit(2) >= levenshtein($"a", $"b")) == expected(_ <= 2))
+    assert(got(lit(2) > levenshtein($"a", $"b")) == expected(_ < 2))
+    assert(le2 == Set(("abc", "abd"), ("abc", "abc"), ("ab", "abxy")))
   }
 }

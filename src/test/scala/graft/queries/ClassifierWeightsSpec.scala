@@ -35,8 +35,8 @@ class ClassifierWeightsSpec extends SparkSpec {
     val docs = Tables.documents(spark, sf)
     val both = docs.select(
       col("doc_id"),
-      QText.classifierScoreCol(spark).as("s_affine"),
-      QText.classifierScoreWeighted(spark, affineTable).as("s_lookup"))
+      QText.classifierScoreCol.as("s_affine"),
+      QText.classifierScoreWeighted(affineTable).as("s_lookup"))
     assert(both.count() > 0)
     val diff = both.filter(col("s_affine") =!= col("s_lookup")).count()
     assert(diff == 0L, s"$diff documents scored differently via the lookup path")

@@ -3,10 +3,8 @@ package graft.queries
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** The substring stage composed into the corpus build: present (and
-  * token-attriting, never doc-attriting) by default, cleanly absent
-  * under the dev A/B flag — and the flag can never serve a stale memo
-  * (keys carry it).
+/** The substring stage composed into the corpus build: present, and
+  * token-attriting, never doc-attriting.
   */
 class CorpusSubstringSpec extends SparkSpec {
 
@@ -24,19 +22,5 @@ class CorpusSubstringSpec extends SparkSpec {
     assert(sub.getLong(1) <= surv.getLong(1),
       s"substring stage grew tokens: ${surv.getLong(1)} -> ${sub.getLong(1)}")
     graft.Caches.clearAll()
-  }
-
-  test("flag off: stage absent, canonicalization consumes the exact keepers") {
-    spark.conf.set("spark.graft.corpus.substring", "false")
-    try {
-      val stages = QText.corpusStages(spark, sf)
-      assert(!stages.contains("substring_clean"))
-      // the chain still runs end to end and the funnel row set shrinks to 6
-      val funnel = graft.SparkEntry.queries("tx_curation_funnel")(spark, sf)
-      assert(funnel.count() == 6L)
-    } finally {
-      spark.conf.set("spark.graft.corpus.substring", "true")
-      graft.Caches.clearAll()
-    }
   }
 }

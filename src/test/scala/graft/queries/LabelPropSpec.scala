@@ -10,49 +10,40 @@ import org.apache.spark.sql.functions._
   */
 class LabelPropSpec extends SparkSpec {
 
+  private val cap = "spark.graft.labelprop.broadcastMaxNodes"
+  private def withCap[T](v: Option[String])(body: => T): T = {
+    v.foreach(spark.conf.set(cap, _))
+    try body finally spark.conf.unset(cap)
+  }
+
   test("g2 arms agree and auto selects by the measured node count") {
     val sf = "/root/testdata/sf0.001"
-    // barrier off so the returned frame keeps its round DAG — with the
-    // per-round localCheckpoint the plan is a bare RDD scan and carries
-    // no join shape to assert on
-    def run(mode: Option[String], cap: Option[String])
-        : (Map[Long, Long], String) = {
-      spark.conf.set("spark.graft.labelprop.barrier", "false")
-      mode.foreach(spark.conf.set("spark.graft.labelprop.join", _))
-      cap.foreach(
-        spark.conf.set("spark.graft.labelprop.broadcastMaxNodes", _))
-      try {
-        val df = graft.SparkEntry.queries("g2_label_prop")(spark, sf)
-        // the ANALYZED plan retains the per-round broadcast hints —
-        // the decision's witness; the physical plan can coincide at
-        // fixture size because the planner broadcasts the tiny label
-        // table on its own size estimate either way
-        val plan = df.queryExecution.analyzed.toString
-        val rows = df.collect()
-          .map(r => r.getLong(0) -> r.getLong(1)).toMap
-        graft.Caches.clearTransient()
-        (rows, plan)
-      } finally {
-        spark.conf.unset("spark.graft.labelprop.join")
-        spark.conf.unset("spark.graft.labelprop.broadcastMaxNodes")
-        spark.conf.unset("spark.graft.labelprop.barrier")
-      }
+    def rows(v: Option[String]): Map[Long, Long] = withCap(v) {
+      val got = graft.SparkEntry.queries("g2_label_prop")(spark, sf)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      graft.Caches.clearTransient()
+      got
     }
-    val (bRows, bPlan) = run(Some("broadcast"), None)
-    val (sRows, sPlan) = run(Some("shuffle"), None)
-    assert(bRows.nonEmpty && sRows == bRows, "g2 join arms disagree")
-    // the broadcast arm hints every round join; the shuffle arm's
-    // physical choice is the planner's at fixture size, so the HINT
-    // in the analyzed plan is the decision's witness on both sides
-    assert(bPlan.contains("ResolvedHint"),
-      s"broadcast arm carries no broadcast hint:\n${bPlan.take(2000)}")
-    assert(!sPlan.contains("ResolvedHint"),
-      s"shuffle arm must not hint a broadcast:\n${sPlan.take(2000)}")
     // auto, cap 0: every node set exceeds it → the shuffle arm
-    val (loRows, loPlan) = run(None, Some("0"))
+    val loRows = rows(Some("0"))
     // auto, default cap (8M): fixture far under → the broadcast arm
-    val (hiRows, hiPlan) = run(None, None)
-    assert(loRows == bRows && hiRows == bRows, "auto arms disagree")
+    val hiRows = rows(None)
+    assert(hiRows.nonEmpty && loRows == hiRows, "g2 join arms disagree")
+    // the decision g2 takes from |V|, and the round it feeds: each round
+    // is checkpointed in g2, so one round's frame carries the join shape.
+    // The ANALYZED plan retains the broadcast hint — the decision's
+    // witness; the physical plan can coincide at fixture size because
+    // the planner broadcasts the tiny label table on its own estimate
+    import spark.implicits._
+    val adj = Seq((1L, 2L), (2L, 1L), (1L, 1L), (2L, 2L)).toDF("src", "dst")
+    val lbl = Seq((1L, 1L), (2L, 2L)).toDF("id", "lbl")
+    def roundPlan(v: Option[String]): String = withCap(v) {
+      QJoins.labelPropRound(adj, lbl,
+          QJoins.labelPropBroadcast(spark, hiRows.size.toLong))
+        .queryExecution.analyzed.toString
+    }
+    val hiPlan = roundPlan(None)
+    val loPlan = roundPlan(Some("0"))
     assert(hiPlan.contains("ResolvedHint"),
       s"auto under the cap did not pick broadcast:\n${hiPlan.take(2000)}")
     assert(!loPlan.contains("ResolvedHint"),
@@ -70,12 +61,9 @@ class LabelPropSpec extends SparkSpec {
       nodes.select(col("id").as("src"), col("id").as("dst")))
     for (k <- Seq(1, 3, 5)) {
       var lbl = nodes.select(col("id"), col("id").as("lbl"))
-      for (_ <- 1 to k) {
-        lbl = adj.join(lbl, adj("src") === lbl("id"))
-          .groupBy(col("dst")).agg(min(col("lbl")).as("lbl"))
-          .select(col("dst").as("id"), col("lbl"))
+      for (_ <- 1 to k)
+        lbl = QJoins.labelPropRound(adj, lbl, bcast = false)
           .localCheckpoint(true)
-      }
       val got = lbl.collect()
         .map(r => r.getAs[Long]("id") -> r.getAs[Long]("lbl")).toMap
       (1 to n).foreach { v =>
